@@ -109,9 +109,22 @@ def read_matrix_files(spark: SparkSession, path: str) -> DataFrame:
 
 
 def lines_from_text(spark: SparkSession, graph: str, text: str) -> DataFrame:
-    """Literal matrix text (e.g. test fixtures) → the lines shape."""
-    rows = [(graph, i, ln) for i, ln in enumerate(text.strip("\n").split("\n"))]
-    return spark.createDataFrame(rows, schema="graph string, line_no int, line string")
+    """Literal matrix text (an add/modify request, a test fixture) → the
+    lines shape.
+
+    The text is already on the driver, so it goes in as an Arrow-backed
+    local relation: every action over it (each table write of a commit
+    evaluates it again) scans the rows inside the JVM, with no Python
+    worker unpickling a parallelized list. One partition, because each
+    partition writes its own file per partition dir of every table."""
+    import pyarrow as pa
+
+    lines = text.strip("\n").split("\n")
+    table = pa.table({"graph": [graph] * len(lines),
+                      "line_no": pa.array(range(len(lines)), pa.int32()),
+                      "line": lines})
+    return spark.createDataFrame(
+        table, "graph string, line_no int, line string").coalesce(1)
 
 
 def edges_to_matrix_text(edges: DataFrame, n: int) -> str:
