@@ -71,6 +71,13 @@ from graphdatabase_spark.operators import graph_algos, pregel
 from graphdatabase_spark.sources import matrix as matrix_mod
 
 
+# A single-graph bfs / dfs_leaves whose edge read has at most this many
+# rows runs on the driver: the reference caps a graph at 100 vertices
+# (secondary_server.c:30), so its adjacency matrix holds at most
+# 100 x 100 edges.
+LOCAL_EDGE_ROWS = 10_000
+
+
 def _path_scheme(path: str) -> str:
     """URI scheme of a store path (``hdfs``, ``s3a``, ``file``, …), or
     ``""`` for a plain local path."""
@@ -2304,13 +2311,50 @@ class GraphEngine:
 
     # -- op 4: BFS level order -------------------------------------------
 
+    def _local_adjacency(self, edges: DataFrame) -> dict[int, list[int]] | None:
+        """One bounded read of a graph's ``edges``: its adjacency lists
+        when the read has at most ``LOCAL_EDGE_ROWS`` rows (the
+        reference's envelope), else ``None`` — the caller then hands
+        the same DataFrame to the distributed kernel. The read is both
+        the size check and the data read, so dispatch costs no extra
+        job and needs no size record in the manifest."""
+        rows = edges.select("src", "dst").limit(LOCAL_EDGE_ROWS + 1).collect()
+        if len(rows) > LOCAL_EDGE_ROWS:
+            return None
+        adj: dict[int, list[int]] = {}
+        for s, d in rows:
+            adj.setdefault(s, []).append(d)
+        return adj
+
+    def _int_frame(self, **cols: list[int]) -> DataFrame:
+        """Driver-side int columns as an Arrow-backed local relation:
+        collecting it runs no Spark job (a parallelized list would run
+        one, through Python workers)."""
+        import pyarrow as pa
+
+        table = pa.table({c: pa.array(v, pa.int32()) for c, v in cols.items()})
+        return self.spark.createDataFrame(
+            table, ", ".join(f"{c} int" for c in cols))
+
     def bfs(self, name: str, start: int) -> DataFrame:
         """``(vertex, level)`` for every vertex reachable from
         ``start`` (1-indexed). Level-sets match the reference's own
         oracle (``utils/bfs_checker.py:75-76``); within-level order is
-        unspecified, exactly as in the reference (SURVEY §2.2)."""
-        levels = pregel.bfs_levels(self.edges(name).select("src", "dst"), [start])
-        return levels.select(F.col("vid").cast("int").alias("vertex"), "level")
+        unspecified, exactly as in the reference (SURVEY §2.2).
+
+        A graph within the reference's envelope (at most
+        ``LOCAL_EDGE_ROWS`` edge rows) is traversed on the driver from
+        one bounded edge read (``dfs_mod.canonical_bfs_levels``); a
+        larger graph runs the Pregel superstep loop
+        (``pregel.bfs_levels``). Both read through the same
+        merge-on-read edge view and give the same levels."""
+        edges = self.edges(name)
+        adj = self._local_adjacency(edges)
+        if adj is None:
+            levels = pregel.bfs_levels(edges.select("src", "dst"), [start])
+            return levels.select(F.col("vid").cast("int").alias("vertex"), "level")
+        levels = dfs_mod.canonical_bfs_levels(adj, start)
+        return self._int_frame(vertex=list(levels), level=list(levels.values()))
 
     def bfs_all(self, start: int) -> DataFrame:
         """Batched op 4: ``(graph, vertex, level)`` from ``start`` for
@@ -2492,10 +2536,21 @@ class GraphEngine:
 
     def dfs_leaves(self, name: str, start: int) -> DataFrame:
         """Deterministic canonical-DFS respec of the reference's racy
-        concurrent DFS (SURVEY §2.1 A2-3): ``(leaf)``, 1-indexed."""
-        starts = self.spark.createDataFrame([(name, start)], "graph string, start long")
-        out = dfs_mod.dfs_leaves(self.edges(name).select("graph", "src", "dst"), starts)
-        return out.select(F.col("leaf").cast("int").alias("leaf"))
+        concurrent DFS (SURVEY §2.1 A2-3): ``(leaf)``, 1-indexed.
+
+        A graph within the reference's envelope (at most
+        ``LOCAL_EDGE_ROWS`` edge rows) is traversed on the driver from
+        one bounded edge read (``dfs_mod.canonical_dfs_leaves``); a
+        larger graph runs the same canonical DFS inside one
+        ``applyInPandas`` group (``dfs_mod.dfs_leaves``)."""
+        edges = self.edges(name)
+        adj = self._local_adjacency(edges)
+        if adj is None:
+            starts = self.spark.createDataFrame([(name, start)],
+                                                "graph string, start long")
+            out = dfs_mod.dfs_leaves(edges.select("graph", "src", "dst"), starts)
+            return out.select(F.col("leaf").cast("int").alias("leaf"))
+        return self._int_frame(leaf=dfs_mod.canonical_dfs_leaves(adj, start))
 
     def dfs_leaves_all(self, start: int) -> DataFrame:
         """Batched op 3: ``(graph, leaf)`` from ``start`` for EVERY
@@ -2537,8 +2592,9 @@ class GraphEngine:
     # -- derived analytics --------------------------------------------------
 
     def reachable(self, name: str, start: int) -> DataFrame:
-        return pregel.reachability(self.edges(name).select("src", "dst"), [start]) \
-            .select(F.col("vid").cast("int").alias("vertex"))
+        """``(vertex)`` reachable from ``start``: :meth:`bfs` without
+        the levels."""
+        return self.bfs(name, start).select("vertex")
 
     def degrees(self, name: str) -> DataFrame:
         return graph_algos.degrees(self.edges(name).select("src", "dst"))

@@ -1,8 +1,9 @@
-"""DFS-forest leaves (reference op 3) — deterministic respec.
+"""Per-graph traversal kernels: BFS levels and DFS-forest leaves.
 
-The reference runs a *concurrent* DFS (one pthread per newly-discovered
-neighbor, ``secondary_server.c:201-238``) and marks a vertex a leaf if
-it finds zero unvisited neighbors when scanning its adjacency row
+**DFS (reference op 3) — deterministic respec.** The reference runs a
+*concurrent* DFS (one pthread per newly-discovered neighbor,
+``secondary_server.c:201-238``) and marks a vertex a leaf if it finds
+zero unvisited neighbors when scanning its adjacency row
 (``:215-226``). Because ``visited`` is written by racing threads
 without a lock, the leaf *set* is schedule-dependent on diamond graphs
 — a bug not carried forward (SURVEY.md §2.2). The deterministic respec
@@ -10,10 +11,18 @@ without a lock, the leaf *set* is schedule-dependent on diamond graphs
 ascending vertex order; a vertex is a leaf iff, at its visit, every
 neighbor it checks has already been visited.
 
-DFS is inherently sequential (P-complete), so the canonical form runs
-per-graph inside one ``applyInPandas`` group — distributed *across*
-graphs, sequential *within* one. That honors the reference's own
-envelope (graphs cap at 100 vertices, ``secondary_server.c:30``); the
+**BFS (reference op 4).** ``canonical_bfs_levels`` is the pure-Python
+twin of the Pregel kernel (``pregel.bfs_levels``), level cap included.
+
+Where each kernel runs: a single-graph request whose edge read fits
+the reference's envelope (graphs cap at 100 vertices,
+``secondary_server.c:30`` — at most 100 × 100 edge rows) is traversed
+on the driver from one bounded read (``GraphEngine.bfs`` /
+``GraphEngine.dfs_leaves``). A larger graph, and every batched
+``*_all`` request, runs distributed: DFS is inherently sequential
+(P-complete), so :func:`dfs_leaves` runs each graph inside one
+``applyInPandas`` group — distributed *across* graphs, sequential
+*within* one — and BFS takes the Pregel superstep loop. The
 documented scale relaxation for one huge graph is reachable-sinks
 (``dfs_leaves_tree`` below), which is exact on trees/forests.
 """
@@ -25,9 +34,31 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from graphdatabase_spark.operators.pregel import bfs_levels
+from graphdatabase_spark.operators.pregel import DEFAULT_MAX_ITERATIONS, bfs_levels
 
 MAX_DFS_VERTICES = 100_000  # hard guard: per-graph adjacency must fit one task
+
+
+def canonical_bfs_levels(adj: dict[int, list[int]], start: int,
+                         max_levels: int = DEFAULT_MAX_ITERATIONS
+                         ) -> dict[int, int]:
+    """Pure-Python level-synchronous BFS: ``{vertex: level}`` for every
+    vertex within ``max_levels`` hops of ``start`` (level = minimum hop
+    count, ``start`` is level 0 even when it has no edges). The cap is
+    the Pregel kernel's superstep limit, so both kernels agree."""
+    levels = {start: 0}
+    frontier = [start]
+    level = 0
+    while frontier and level < max_levels:
+        level += 1
+        nxt = []
+        for v in frontier:
+            for w in adj.get(v, ()):
+                if w not in levels:
+                    levels[w] = level
+                    nxt.append(w)
+        frontier = nxt
+    return levels
 
 
 def canonical_dfs_leaves(adj: dict[int, list[int]], start: int) -> list[int]:

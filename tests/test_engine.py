@@ -9,8 +9,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from graphdatabase_spark.engine import GraphEngine
-from graphdatabase_spark.operators.dfs import canonical_dfs_leaves
 from graphdatabase_spark.sources.tables import load_table
+
+from tests.oracle import dfs_leaves
 
 pytestmark = pytest.mark.slow  # heavyweight integration module: full-suite tier (pyproject.toml)
 
@@ -66,12 +67,10 @@ def test_empty_graph_roundtrip(engine):
     assert engine.vertices("G12").count() == 0
 
 
-def test_dfs_leaves_matches_canonical(engine):
+def test_dfs_leaves_matches_oracle(engine):
     engine.add_graph("G5", _fixture_text("G5"))
-    adj = {}
-    for r in engine.edges("G5").collect():
-        adj.setdefault(r["src"], []).append(r["dst"])
-    want = set(canonical_dfs_leaves(adj, 1))
+    want = set(dfs_leaves(((r["src"], r["dst"])
+                           for r in engine.edges("G5").collect()), 1))
     got = {r["leaf"] for r in engine.dfs_leaves("G5", 1).collect()}
     assert got == want
 

@@ -13,6 +13,7 @@ from graphdatabase_spark.operators import dfs as dfs_mod
 from graphdatabase_spark.operators import graph_algos, graph_queries, pregel
 from graphdatabase_spark.sources import matrix as matrix_mod
 
+from tests.oracle import dfs_leaves
 from tests.parity import assert_parity
 
 pytestmark = pytest.mark.slow  # heavyweight integration module: full-suite tier (pyproject.toml)
@@ -106,15 +107,23 @@ def test_canonical_dfs_leaves_pure():
     assert dfs_mod.canonical_dfs_leaves({}, 7) == [7]
 
 
+def test_canonical_bfs_levels_pure():
+    # Diamond: 4 is reached once, at its minimum hop count.
+    adj = {1: [2, 3], 2: [4], 3: [4], 4: []}
+    assert dfs_mod.canonical_bfs_levels(adj, 1) == {1: 0, 2: 1, 3: 1, 4: 2}
+    # A start with no edges is level 0 on its own.
+    assert dfs_mod.canonical_bfs_levels({}, 7) == {7: 0}
+    # Levels stop at the Pregel kernel's superstep cap.
+    chain = {v: [v + 1] for v in range(1, 10)}
+    assert dfs_mod.canonical_bfs_levels(chain, 1, max_levels=3) == {
+        1: 0, 2: 1, 3: 2, 4: 3}
+
+
 def test_dfs_leaves_matches_pure_python_on_fixtures(spark, fixture_edges):
-    # Distributed applyInPandas DFS == pure-Python canonical DFS, per graph.
+    # Distributed applyInPandas DFS == the test's own DFS oracle, per graph.
     for graph, start in [("G6", 18), ("G5", 1), ("G1", 3), ("G2", 4)]:
         sub = fixture_edges.filter(F.col("graph") == graph)
-        rows = sub.collect()
-        adj: dict[int, list[int]] = {}
-        for r in rows:
-            adj.setdefault(r["src"], []).append(r["dst"])
-        expected = dfs_mod.canonical_dfs_leaves(adj, start)
+        expected = dfs_leaves(((r["src"], r["dst"]) for r in sub.collect()), start)
         starts = spark.createDataFrame([(graph, start)], "graph string, start long")
         got = sorted(r["leaf"] for r in dfs_mod.dfs_leaves(
             sub.select("graph", "src", "dst"), starts).collect())
@@ -173,10 +182,7 @@ def test_random_digraph_bfs_and_dfs_match_oracles(spark, seed):
     got = {r["vid"]: r["level"] for r in pregel.bfs_levels(e, [start]).collect()}
     assert got == _duck_bfs_levels(edges, start, n), (seed, n, density, start)
 
-    adj: dict[int, list[int]] = {}
-    for s, d in edges:
-        adj.setdefault(s, []).append(d)
-    expected = dfs_mod.canonical_dfs_leaves(adj, start)
+    expected = dfs_leaves(edges, start)
     sub = e.withColumn("graph", F.lit("R"))
     starts = spark.createDataFrame([("R", start)], "graph string, start long")
     got_leaves = sorted(r["leaf"] for r in dfs_mod.dfs_leaves(

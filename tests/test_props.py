@@ -12,6 +12,8 @@ from pyspark.sql import functions as F
 
 from graphdatabase_spark.engine import GraphEngine
 
+from tests.oracle import bfs_levels, dfs_leaves
+
 pytestmark = pytest.mark.slow  # heavyweight integration module: full-suite tier (pyproject.toml)
 
 
@@ -463,11 +465,15 @@ def test_edge_delta_delete_of_prior_delta_and_kernels(spark, tmp_path):
     eng.merge_edges(df, mode="delta")                  # add shortcut 1->3
     levels = {r["vertex"]: r["level"] for r in eng.bfs("G", 1).collect()}
     assert levels[3] == 1                              # kernel sees delta
+    assert levels == bfs_levels([(1, 2), (2, 3), (1, 3)], 1)
+    assert sorted(r["leaf"] for r in eng.dfs_leaves("G", 1).collect()) == \
+        dfs_leaves([(1, 2), (2, 3), (1, 3)], 1)
     eng.merge_edges(spark.createDataFrame(
         [("G", 1, 3)], "graph string, src int, dst int"),
         delete=True, mode="delta")                     # delete it again
     levels = {r["vertex"]: r["level"] for r in eng.bfs("G", 1).collect()}
     assert levels[3] == 2                              # marker honored
+    assert levels == bfs_levels([(1, 2), (2, 3)], 1)
     before = _edgemap(eng, "G")
     eng.compact()
     m = eng.manifests.load()

@@ -1,11 +1,16 @@
-"""One-graph requests read only that graph's partition dirs.
+"""One-graph requests read only that graph's partition dirs, and a
+graph within the reference's envelope is traversed in one bounded read.
 
 The store below has more partition dirs per commit than Spark's
 parallel-listing threshold (32), in both the flat (``graph=<name>``)
 and the bucketed (``gb=<bucket>``) layout. A read of such a commit dir
 starts with a distributed "Listing leaf files" job, one task per dir;
-a one-graph read must not run it. Every result is checked against a
-pure-Python model of the store, which shares no code with the engine.
+a one-graph read must not run it. Two graphs sit on either side of
+``LOCAL_EDGE_ROWS``: at the cap, ``bfs`` and ``dfs_leaves`` run in at
+most two Spark jobs; one row over, ``bfs`` takes the Pregel loop.
+Every result is checked against a pure-Python model of the store and
+the oracles in ``tests/oracle.py``, which share no code with the
+engine.
 """
 
 import contextlib
@@ -14,58 +19,18 @@ import zlib
 
 import pytest
 
-from graphdatabase_spark.engine import GraphEngine
+from graphdatabase_spark.engine import LOCAL_EDGE_ROWS, GraphEngine
+
+from tests.oracle import bfs_levels, dfs_leaves
 
 LISTING = "Listing leaf files"
 BUCKETS = 64
 N_PLAIN = 36          # one ingest commit with 36 partition dirs
 SPECIAL = ("G#1", "G 2", "a=b", "ü")   # names the writer percent-escapes
 EMPTY = "Z0"          # an N = 0 graph
-
-
-# -- oracle ------------------------------------------------------------------
-
-def bfs_levels(edges, start: int) -> dict[int, int]:
-    """Minimum hop count from ``start`` to every reachable vertex."""
-    adj: dict[int, list[int]] = {}
-    for s, d in edges:
-        adj.setdefault(s, []).append(d)
-    levels = {start: 0}
-    frontier = [start]
-    while frontier:
-        nxt = []
-        for v in frontier:
-            for w in adj.get(v, ()):
-                if w not in levels:
-                    levels[w] = levels[v] + 1
-                    nxt.append(w)
-        frontier = nxt
-    return levels
-
-
-def dfs_leaves(edges, start: int) -> list[int]:
-    """Leaves of the canonical DFS tree from ``start``: neighbours in
-    ascending order; a vertex is a leaf when every neighbour it checks
-    is already visited."""
-    adj: dict[int, set[int]] = {}
-    for s, d in edges:
-        adj.setdefault(s, set()).add(d)
-    visited = {start}
-    leaves = []
-    stack = [[start, iter(sorted(adj.get(start, ()))), False]]
-    while stack:
-        frame = stack[-1]
-        for w in frame[1]:
-            if w not in visited:
-                frame[2] = True
-                visited.add(w)
-                stack.append([w, iter(sorted(adj.get(w, ()))), False])
-                break
-        else:
-            stack.pop()
-            if not frame[2]:
-                leaves.append(frame[0])
-    return sorted(leaves)
+AT_CAP = "K100"       # 100 x 100 all-ones matrix: LOCAL_EDGE_ROWS edge rows
+OVER_CAP = "K101"     # 101 x 101 all-ones matrix: over LOCAL_EDGE_ROWS
+MAX_LOCAL_JOBS = 2    # jobs of an in-envelope traversal on a delta-free chain
 
 
 class Model:
@@ -92,6 +57,9 @@ class Model:
         ends = {v for e in keys for v in e}
         self.verts[g] |= ends
         self.meta[g].append(max(ends))
+
+    def delete(self, g: str, keys) -> None:
+        self.edges[g] -= set(keys)
 
 
 def _plain_names() -> list[str]:
@@ -168,6 +136,25 @@ def _build(spark, root, buckets):
     adopted, skipped = eng.merge_edges(spark.createDataFrame(
         batch, "graph string, src int, dst int, w int"), mode="delta")
     assert adopted == set(live) and not skipped
+
+    # a delta delete over the special-name graphs: w = 0 markers for a
+    # key the upsert above just wrote and for a key of the base commit
+    batch = []
+    for g in SPECIAL:
+        keys = [(1, 2), (2, 3)]
+        model.delete(g, keys)
+        batch += [(g, s, d) for s, d in keys]
+    adopted, skipped = eng.merge_edges(spark.createDataFrame(
+        batch, "graph string, src int, dst int"), delete=True, mode="delta")
+    assert adopted == set(SPECIAL) and not skipped
+
+    # the two sides of the local-traversal cap, on chains with no delta
+    for g, n in ((AT_CAP, 100), (OVER_CAP, 101)):
+        edges = {(i, j) for i in range(1, n + 1) for j in range(1, n + 1)}
+        eng.add_graph(g, _matrix(n, edges))
+        model.put(g, n, edges)
+    assert len(model.edges[AT_CAP]) == LOCAL_EDGE_ROWS
+    assert len(model.edges[OVER_CAP]) > LOCAL_EDGE_ROWS
     return eng, model
 
 
@@ -203,7 +190,9 @@ def _sorted_rows(df, *cols):
     return sorted(tuple(r[c] for c in cols) for r in df.collect())
 
 
-def _check_graph(eng, model, sc, g: str) -> None:
+def _check_graph(eng, model, sc, g: str) -> dict[str, int]:
+    """Run every single-graph read of ``g`` against the model; returns
+    the number of Spark jobs each op ran."""
     edges = model.edges[g]
     checks = {
         "edges": (lambda: _sorted_rows(eng.edges(g), "src", "dst", "graph"),
@@ -217,23 +206,33 @@ def _check_graph(eng, model, sc, g: str) -> None:
         "dfs_leaves": (lambda: _sorted_rows(eng.dfs_leaves(g, 1), "leaf"),
                        [(v,) for v in dfs_leaves(edges, 1)]),
     }
+    jobs = {}
     for op, (run, want) in checks.items():
         group = f"single-graph-{op}-{g}"
         with _job_group(sc, group):
             got = run()
         assert got == want, (op, g)
         descs = _job_descriptions(sc, group)
-        assert descs, (op, g, "no job was tagged with the group")
+        # a traversal of a graph with no edge rows may need no job at all
+        assert descs or (op in ("bfs", "dfs_leaves") and not edges), (
+            op, g, "no job was tagged with the group")
         listing = [d for d in descs if d.startswith(LISTING)]
         assert not listing, (op, g, listing)
+        jobs[op] = len(descs)
+    return jobs
 
 
 def test_single_graph_reads(spark, store):
     eng, model = store
     sc = spark.sparkContext
     assert len(model.edges) >= 40
-    for g in sorted(model.edges):
-        _check_graph(eng, model, sc, g)
+    jobs = {g: _check_graph(eng, model, sc, g) for g in sorted(model.edges)}
+    # in the envelope, on a chain with no delta: one bounded read
+    for g in (EMPTY, AT_CAP):
+        for op in ("bfs", "dfs_leaves"):
+            assert jobs[g][op] <= MAX_LOCAL_JOBS, (g, op, jobs[g][op])
+    # one row over the cap, bfs runs the Pregel superstep loop
+    assert jobs[OVER_CAP]["bfs"] > MAX_LOCAL_JOBS, jobs[OVER_CAP]
 
 
 def test_multi_graph_and_catalog_reads(store):
