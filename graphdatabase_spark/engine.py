@@ -2311,21 +2311,6 @@ class GraphEngine:
 
     # -- op 4: BFS level order -------------------------------------------
 
-    def _local_adjacency(self, edges: DataFrame) -> dict[int, list[int]] | None:
-        """One bounded read of a graph's ``edges``: its adjacency lists
-        when the read has at most ``LOCAL_EDGE_ROWS`` rows (the
-        reference's envelope), else ``None`` — the caller then hands
-        the same DataFrame to the distributed kernel. The read is both
-        the size check and the data read, so dispatch costs no extra
-        job and needs no size record in the manifest."""
-        rows = edges.select("src", "dst").limit(LOCAL_EDGE_ROWS + 1).collect()
-        if len(rows) > LOCAL_EDGE_ROWS:
-            return None
-        adj: dict[int, list[int]] = {}
-        for s, d in rows:
-            adj.setdefault(s, []).append(d)
-        return adj
-
     def _int_frame(self, **cols: list[int]) -> DataFrame:
         """Driver-side int columns as an Arrow-backed local relation:
         collecting it runs no Spark job (a parallelized list would run
@@ -2346,14 +2331,17 @@ class GraphEngine:
         ``LOCAL_EDGE_ROWS`` edge rows) is traversed on the driver from
         one bounded edge read (``dfs_mod.canonical_bfs_levels``); a
         larger graph runs the Pregel superstep loop
-        (``pregel.bfs_levels``). Both read through the same
-        merge-on-read edge view and give the same levels."""
-        edges = self.edges(name)
-        adj = self._local_adjacency(edges)
-        if adj is None:
-            levels = pregel.bfs_levels(edges.select("src", "dst"), [start])
+        (``pregel.bfs_levels``), after the bounded read that found it
+        too large. Both read through the same merge-on-read edge view
+        and give the same levels."""
+        edges = self.edges(name).select("src", "dst")
+        # the bounded read is both the size check and the data read, so
+        # dispatch costs no extra job and needs no size in the manifest
+        rows = edges.limit(LOCAL_EDGE_ROWS + 1).collect()
+        if len(rows) > LOCAL_EDGE_ROWS:
+            levels = pregel.bfs_levels(edges, [start])
             return levels.select(F.col("vid").cast("int").alias("vertex"), "level")
-        levels = dfs_mod.canonical_bfs_levels(adj, start)
+        levels = dfs_mod.canonical_bfs_levels(dfs_mod.adjacency(rows), start)
         return self._int_frame(vertex=list(levels), level=list(levels.values()))
 
     def bfs_all(self, start: int) -> DataFrame:
@@ -2538,18 +2526,14 @@ class GraphEngine:
         """Deterministic canonical-DFS respec of the reference's racy
         concurrent DFS (SURVEY §2.1 A2-3): ``(leaf)``, 1-indexed.
 
-        A graph within the reference's envelope (at most
-        ``LOCAL_EDGE_ROWS`` edge rows) is traversed on the driver from
-        one bounded edge read (``dfs_mod.canonical_dfs_leaves``); a
-        larger graph runs the same canonical DFS inside one
-        ``applyInPandas`` group (``dfs_mod.dfs_leaves``)."""
-        edges = self.edges(name)
-        adj = self._local_adjacency(edges)
-        if adj is None:
-            starts = self.spark.createDataFrame([(name, start)],
-                                                "graph string, start long")
-            out = dfs_mod.dfs_leaves(edges.select("graph", "src", "dst"), starts)
-            return out.select(F.col("leaf").cast("int").alias("leaf"))
+        The graph's edges are read in one collect and traversed on the
+        driver (``dfs_mod.canonical_dfs_leaves``). DFS is sequential,
+        so one process holds the whole graph whatever its size; a graph
+        over ``dfs_mod.MAX_DFS_VERTICES`` source vertices raises. The
+        batched :meth:`dfs_leaves_all` runs one ``applyInPandas`` group
+        per graph instead."""
+        adj = dfs_mod.adjacency(self.edges(name).select("src", "dst").collect())
+        dfs_mod.check_dfs_envelope(name, adj)
         return self._int_frame(leaf=dfs_mod.canonical_dfs_leaves(adj, start))
 
     def dfs_leaves_all(self, start: int) -> DataFrame:

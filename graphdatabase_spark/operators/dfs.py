@@ -14,17 +14,20 @@ neighbor it checks has already been visited.
 **BFS (reference op 4).** ``canonical_bfs_levels`` is the pure-Python
 twin of the Pregel kernel (``pregel.bfs_levels``), level cap included.
 
-Where each kernel runs: a single-graph request whose edge read fits
-the reference's envelope (graphs cap at 100 vertices,
-``secondary_server.c:30`` — at most 100 × 100 edge rows) is traversed
-on the driver from one bounded read (``GraphEngine.bfs`` /
-``GraphEngine.dfs_leaves``). A larger graph, and every batched
-``*_all`` request, runs distributed: DFS is inherently sequential
-(P-complete), so :func:`dfs_leaves` runs each graph inside one
-``applyInPandas`` group — distributed *across* graphs, sequential
-*within* one — and BFS takes the Pregel superstep loop. The
-documented scale relaxation for one huge graph is reachable-sinks
-(``dfs_leaves_tree`` below), which is exact on trees/forests.
+Where each kernel runs: DFS is inherently sequential (P-complete), so
+one process always holds a graph's adjacency. A single-graph
+``GraphEngine.dfs_leaves`` collects the graph's edges and runs
+:func:`canonical_dfs_leaves` on the driver; the batched
+:func:`dfs_leaves` runs each graph inside one ``applyInPandas`` group —
+distributed *across* graphs, sequential *within* one. Either way a
+graph over ``MAX_DFS_VERTICES`` source vertices raises. A single-graph
+``GraphEngine.bfs`` whose edge read fits the reference's envelope
+(graphs cap at 100 vertices, ``secondary_server.c:30`` — at most
+100 × 100 edge rows) runs :func:`canonical_bfs_levels` on the driver
+from one bounded read; a larger graph, and the batched ``bfs_all``,
+take the Pregel superstep loop. The documented scale relaxation for
+one huge graph is reachable-sinks (``dfs_leaves_tree`` below), which
+is exact on trees/forests.
 """
 
 from __future__ import annotations
@@ -36,7 +39,24 @@ from pyspark.sql import functions as F
 
 from graphdatabase_spark.operators.pregel import DEFAULT_MAX_ITERATIONS, bfs_levels
 
-MAX_DFS_VERTICES = 100_000  # hard guard: per-graph adjacency must fit one task
+MAX_DFS_VERTICES = 100_000  # hard guard: per-graph adjacency must fit one process
+
+
+def adjacency(pairs) -> dict[int, list[int]]:
+    """Adjacency lists of ``(src, dst)`` pairs, in pair order."""
+    adj: dict[int, list[int]] = {}
+    for s, d in pairs:
+        adj.setdefault(int(s), []).append(int(d))
+    return adj
+
+
+def check_dfs_envelope(graph: str, adj: dict[int, list[int]]) -> None:
+    """Raise when ``graph`` has more source vertices than the
+    canonical DFS holds in one process."""
+    if len(adj) > MAX_DFS_VERTICES:
+        raise ValueError(
+            f"graph {graph!r} exceeds the canonical-DFS envelope "
+            f"({len(adj)} > {MAX_DFS_VERTICES} vertices); use dfs_leaves_tree")
 
 
 def canonical_bfs_levels(adj: dict[int, list[int]], start: int,
@@ -111,13 +131,8 @@ def dfs_leaves(edges: DataFrame, starts: DataFrame) -> DataFrame:
                 f"graph {graph!r} has {len(starts_here)} start vertices; "
                 f"canonical DFS is single-source — pass one start per graph")
         (start,) = starts_here
-        adj: dict[int, list[int]] = {}
-        for s, d in zip(pdf["src"].dropna(), pdf["dst"].dropna()):
-            adj.setdefault(int(s), []).append(int(d))
-        if len(adj) > MAX_DFS_VERTICES:
-            raise ValueError(
-                f"graph {graph!r} exceeds the canonical-DFS envelope "
-                f"({len(adj)} > {MAX_DFS_VERTICES} vertices); use dfs_leaves_tree")
+        adj = adjacency(zip(pdf["src"].dropna(), pdf["dst"].dropna()))
+        check_dfs_envelope(graph, adj)
         leaves = canonical_dfs_leaves(adj, start)
         return pd.DataFrame({"graph": graph, "leaf": leaves})
 

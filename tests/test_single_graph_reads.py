@@ -7,7 +7,8 @@ and the bucketed (``gb=<bucket>``) layout. A read of such a commit dir
 starts with a distributed "Listing leaf files" job, one task per dir;
 a one-graph read must not run it. Two graphs sit on either side of
 ``LOCAL_EDGE_ROWS``: at the cap, ``bfs`` and ``dfs_leaves`` run in at
-most two Spark jobs; one row over, ``bfs`` takes the Pregel loop.
+most two Spark jobs; one row over, ``bfs`` takes the Pregel loop and
+``dfs_leaves`` still runs on the driver.
 Every result is checked against a pure-Python model of the store and
 the oracles in ``tests/oracle.py``, which share no code with the
 engine.
@@ -20,6 +21,7 @@ import zlib
 import pytest
 
 from graphdatabase_spark.engine import LOCAL_EDGE_ROWS, GraphEngine
+from graphdatabase_spark.operators import dfs as dfs_mod
 
 from tests.oracle import bfs_levels, dfs_leaves
 
@@ -213,9 +215,13 @@ def _check_graph(eng, model, sc, g: str) -> dict[str, int]:
             got = run()
         assert got == want, (op, g)
         descs = _job_descriptions(sc, group)
-        # a traversal of a graph with no edge rows may need no job at all
-        assert descs or (op in ("bfs", "dfs_leaves") and not edges), (
-            op, g, "no job was tagged with the group")
+        if (g, op) == (EMPTY, "bfs"):
+            # the bounded edge read of a graph with no edge rows scans
+            # no partition and runs no job, so the no-listing check
+            # below holds trivially here
+            assert not descs, (op, g, descs)
+        else:
+            assert descs, (op, g, "no job was tagged with the group")
         listing = [d for d in descs if d.startswith(LISTING)]
         assert not listing, (op, g, listing)
         jobs[op] = len(descs)
@@ -231,8 +237,20 @@ def test_single_graph_reads(spark, store):
     for g in (EMPTY, AT_CAP):
         for op in ("bfs", "dfs_leaves"):
             assert jobs[g][op] <= MAX_LOCAL_JOBS, (g, op, jobs[g][op])
-    # one row over the cap, bfs runs the Pregel superstep loop
+    # one row over the cap, bfs runs the Pregel superstep loop, while
+    # dfs_leaves still collects the graph in one read
     assert jobs[OVER_CAP]["bfs"] > MAX_LOCAL_JOBS, jobs[OVER_CAP]
+    assert jobs[OVER_CAP]["dfs_leaves"] <= MAX_LOCAL_JOBS, jobs[OVER_CAP]
+
+
+def test_dfs_leaves_vertex_guard(store, monkeypatch):
+    """A graph with more source vertices than MAX_DFS_VERTICES raises
+    instead of being traversed."""
+    eng, _ = store
+    monkeypatch.setattr(dfs_mod, "MAX_DFS_VERTICES", 99)
+    with pytest.raises(ValueError, match="canonical-DFS envelope"):
+        eng.dfs_leaves(AT_CAP, 1)
+    assert eng.dfs_leaves(EMPTY, 1).collect() == [(1,)]
 
 
 def test_multi_graph_and_catalog_reads(store):
