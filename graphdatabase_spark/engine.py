@@ -59,10 +59,14 @@ import time
 import uuid
 from concurrent.futures import ThreadPoolExecutor
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark import inheritable_thread_target
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 from graphdatabase_spark import cache, metastore
 from graphdatabase_spark.functions.text import tokens_col
@@ -76,6 +80,16 @@ from graphdatabase_spark.sources import matrix as matrix_mod
 # (secondary_server.c:30), so its adjacency matrix holds at most
 # 100 x 100 edges.
 LOCAL_EDGE_ROWS = 10_000
+
+
+def _empty_frame(spark: SparkSession, ddl: str) -> DataFrame:
+    """An empty frame of DDL schema ``ddl`` as an Arrow-backed local
+    relation: reading it runs no Spark job (an empty parallelized list
+    runs one over every default partition). The Arrow schema comes from
+    the DDL, so map, decimal and nested property types keep working."""
+    schema = StructType.fromDDL(ddl)
+    return spark.createDataFrame(to_arrow_schema(schema).empty_table(),
+                                 schema)
 
 
 def _path_scheme(path: str) -> str:
@@ -119,6 +133,22 @@ def _check_layout(prev: dict | None, eff: int | None) -> None:
             f"store layout changed mid-write: this commit's data dirs "
             f"were written for buckets={eff} but the store's first "
             f"manifest established buckets={got}; re-run the write")
+
+
+def _check_edge_batch(op: str, null_keys: bool, bad_w: bool) -> None:
+    """The edge-batch invariants every append and upsert enforces
+    before any file lands, on the driver and the distributed path
+    alike: ``graph``, ``src`` and ``dst`` are non-NULL (a NULL endpoint
+    would land as a NULL vertex row), and ``w >= 1``."""
+    if null_keys:
+        raise ValueError(
+            f"{op} requires non-NULL graph, src and dst (a NULL endpoint "
+            f"would land as a NULL vertex row)")
+    if bad_w:
+        raise ValueError(
+            f"{op} requires integer edge weights >= 1 (w is the "
+            f"stored multiplicity/weight; 0, negative, and NULL "
+            f"break the store's CDC absence encoding)")
 
 
 _RESERVED_COLS = frozenset({"graph", "src", "dst", "w", "vid", "n", "gb"})
@@ -336,7 +366,7 @@ class GraphSnapshot:
             cond = exc.getCondition() if hasattr(exc, "getCondition") else None
             if "PATH_NOT_FOUND" not in (cond or str(exc)):
                 raise
-        return self.spark.createDataFrame([], schema)
+        return _empty_frame(self.spark, schema)
 
     def _leaves(self, cid: str, names: list[str]) -> list[str] | None:
         """The partition dirs of commit ``cid`` that hold ``names``, or
@@ -385,7 +415,6 @@ class GraphSnapshot:
         if not cmap:
             return self._graph_filter(
                 self._read_or_empty(root, leaves, full_schema), names)
-        from pyspark.sql.types import StructType
         fields = StructType.fromDDL(full_schema).fields
         phys_schema = ", ".join(
             f"{cmap.get(f.name, f.name)} {f.dataType.simpleString()}"
@@ -427,7 +456,6 @@ class GraphSnapshot:
         # DDL-parse for the column names — naive comma-splitting breaks
         # on property types that contain commas (decimal(10,2),
         # map<string,int>)
-        from pyspark.sql.types import StructType
         cols = [f.name for f in StructType.fromDDL(full_schema).fields]
         if name is not None:
             # Each chain commit of the named graphs is read through
@@ -459,7 +487,7 @@ class GraphSnapshot:
         parts = [self._commit_df(table, cid, row_schema, gs)
                  for cid, gs in sorted(by_cid.items())]
         if not parts:
-            return self.spark.createDataFrame([], full_schema)
+            return _empty_frame(self.spark, full_schema)
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)
@@ -507,7 +535,6 @@ class GraphSnapshot:
             for pos, cid in enumerate(_cids(ptr)):
                 part = delta_parts if cid in edeltas else base_parts_map
                 part.setdefault((cid, pos), []).append(g)
-        from pyspark.sql.types import StructType
         full_schema = ddl + ", graph string"
         cols = [f.name for f in StructType.fromDDL(full_schema).fields]
         if not delta_parts:
@@ -522,7 +549,7 @@ class GraphSnapshot:
                 self._commit_df("edges", cid, ddl, gs).select(*cols)
                 for cid, gs in sorted(base_by_cid.items())]
             base = (base_parts[0] if base_parts
-                    else self.spark.createDataFrame([], full_schema))
+                    else _empty_frame(self.spark, full_schema))
             for p in base_parts[1:]:
                 base = base.unionByName(p)
             return base
@@ -534,7 +561,7 @@ class GraphSnapshot:
         base_parts = [_part(cid, pos, gs)
                       for (cid, pos), gs in sorted(base_parts_map.items())]
         base = (base_parts[0] if base_parts
-                else self.spark.createDataFrame([], full_schema + ", __pos int"))
+                else _empty_frame(self.spark, full_schema + ", __pos int"))
         for p in base_parts[1:]:
             base = base.unionByName(p)
         dparts = [_part(cid, pos, gs)
@@ -638,14 +665,13 @@ class GraphSnapshot:
                     delta_parts.setdefault((cid, pos), []).append(g)
                 else:
                     base_by_cid.setdefault(cid, []).append(g)
-        from pyspark.sql.types import StructType
         full_schema = ddl + ", graph string"
         cols = [f.name for f in StructType.fromDDL(full_schema).fields]
         base_parts = [
             self._commit_df("vertices", cid, ddl, gs).select(*cols)
             for cid, gs in sorted(base_by_cid.items())]
         base = (base_parts[0] if base_parts
-                else self.spark.createDataFrame([], full_schema))
+                else _empty_frame(self.spark, full_schema))
         for p in base_parts[1:]:
             base = base.unionByName(p)
         if not delta_parts:
@@ -863,6 +889,46 @@ class GraphEngine:
             for f in futs:
                 f.result()   # propagate the first failure loudly
 
+    def _driver_write(self, rows: pa.Table, table: str, cid: str,
+                      buckets: int | None) -> None:
+        """Land one table's rows under ``c=<cid>`` from the driver, with
+        no Spark job: pyarrow serializes each partition dir's rows into
+        one zstd Parquet file in memory (zstd is the session's codec),
+        and the bytes go out through the store's Hadoop FileSystem, the
+        one ``_read_or_empty`` reads through, so local, ``file:`` and
+        ``hdfs://`` stores take one path. The dirs are the ones
+        :meth:`_store_write` names: ``graph=<name>`` escaped by Spark's
+        own escaper, or ``gb=<bucket>`` with ``graph`` kept as a data
+        column. ``c=<cid>`` is created even when ``rows`` is empty, so
+        a whole-dir read of the commit never takes the PATH_NOT_FOUND
+        fallback. No ``_SUCCESS`` marker is written: the manifest is
+        the commit record."""
+        Path = self.spark._jvm.org.apache.hadoop.fs.Path
+        root = os.path.join(self.store, "data", table, f"c={cid}")
+        fs = Path(root).getFileSystem(self.spark._jsc.hadoopConfiguration())
+        fs.mkdirs(Path(root))
+        names = rows.column("graph").to_pylist()
+        if buckets:
+            leaf = {g: f"gb={metastore.graph_bucket(g, buckets)}"
+                    for g in set(names)}
+        else:
+            esc = (self.spark._jvm.org.apache.spark.sql.catalyst.catalog
+                   .ExternalCatalogUtils.escapePathName)
+            leaf = {g: f"graph={esc(g)}" for g in set(names)}
+            rows = rows.drop_columns(["graph"])
+        parts: dict[str, list[int]] = {}
+        for i, g in enumerate(names):
+            parts.setdefault(leaf[g], []).append(i)
+        for name, idx in sorted(parts.items()):
+            buf = pa.BufferOutputStream()
+            pq.write_table(rows.take(idx), buf, compression="zstd")
+            out = fs.create(Path(os.path.join(
+                root, name, f"part-00000-{cid}.zstd.parquet")), False)
+            try:
+                out.write(buf.getvalue().to_pybytes())
+            finally:
+                out.close()
+
     # -- op 1 / op 2: add / modify (full overwrite of one graph) ---------
 
     def add_graph(self, name: str, matrix_text: str) -> None:
@@ -894,11 +960,10 @@ class GraphEngine:
         instead of documented. Columns beyond the core four are typed
         edge PROPERTY columns, kept verbatim; returns the batch's
         property schema alongside (``{name: ddl_type}``, empty for a
-        plain batch). Runs NO job: the invariant scan is fused into
-        the caller's touched-graphs collect
-        (:meth:`_touched_validated`) so the pre-write metadata pass
-        over the batch happens ONCE, not twice (round-15
-        optimization)."""
+        plain batch). Runs NO job: the invariant is checked
+        (:func:`_check_edge_batch`) on the caller's one pass over the
+        batch — the bounded read of :meth:`_land_edge_batch` or the
+        touched-graphs collect of :meth:`_touched_validated`."""
         props = _prop_schema(df, ("graph", "src", "dst", "w"), op)
         # case-insensitive presence check: withColumn resolves names
         # case-insensitively, so a batch carrying 'W' must not have its
@@ -914,20 +979,138 @@ class GraphEngine:
 
     @staticmethod
     def _touched_validated(df: DataFrame, op: str) -> list[str]:
-        """The batch's graph names AND the ``w >= 1`` store invariant
-        in ONE metadata-sized job (previously a distinct-collect plus
-        a separate isEmpty validation scan — two jobs per edge write).
-        Still fails loudly BEFORE any file lands: callers run this
-        ahead of every ``_store_write``."""
+        """The batch's graph names AND the edge-batch invariants
+        (:func:`_check_edge_batch`) in ONE metadata-sized job
+        (previously a distinct-collect plus a separate isEmpty
+        validation scan — two jobs per edge write). Still fails loudly
+        BEFORE any file lands: callers run this ahead of every
+        ``_store_write``."""
         rows = df.groupBy("graph").agg(
             F.count(F.when(F.col("w").isNull() | (F.col("w") < 1),
-                           F.lit(1))).alias("bad")).collect()
-        if any(r["bad"] for r in rows):
-            raise ValueError(
-                f"{op} requires integer edge weights >= 1 (w is the "
-                f"stored multiplicity/weight; 0, negative, and NULL "
-                f"break the store's CDC absence encoding)")
+                           F.lit(1))).alias("bad"),
+            F.count(F.when(F.col("src").isNull() | F.col("dst").isNull(),
+                           F.lit(1))).alias("nulls")).collect()
+        _check_edge_batch(
+            op, any(r["graph"] is None or r["nulls"] for r in rows),
+            any(r["bad"] for r in rows))
         return [r["graph"] for r in rows]
+
+    def _land_edge_batch(self, snap: GraphSnapshot, batch: DataFrame,
+                         batch_props: dict, cid: str, eff: int | None,
+                         op: str, kind: str) -> list[str]:
+        """Land the files of one O(batch) edge commit under ``c=<cid>``
+        and return the graphs it touches (none: publish nothing).
+        ``kind`` is ``"append"``, or a delta merge's ``"upsert"`` or
+        ``"delete"``. Validation fails before any file lands. The
+        commit holds:
+
+        - edges: the batch rows (for a delete, w = 0 markers);
+        - vertices: endpoint vids new to their graph in the pinned
+          snapshot, so reads never pay a dedup (none for a delete);
+        - meta: each graph's max endpoint vid, the ``n >= max vid``
+          bound — on an append for graphs new to the store, on an
+          upsert for every touched graph, none for a delete.
+
+        A delete only touches graphs the store has: deleting from an
+        unknown graph is a no-op, not a new empty catalog entry.
+
+        A batch of at most ``LOCAL_EDGE_ROWS`` rows without property
+        columns is read once, checked and derived on the driver, and
+        its files written by :meth:`_driver_write`: one job for the
+        batch plus one bounded read of the touched graphs' known vids.
+        Larger batches and batches with property columns keep the
+        distributed path. Its callers are streaming ``foreachBatch``
+        ingest, large SQL DML and typed-property writes (the column
+        mapping is applied by ``_store_write`` only). A batch over the
+        cap pays the bounded read once before that path reads it
+        again."""
+        gmap = (snap.manifest or {}).get("graphs", {})
+        if not batch_props:
+            # toArrow of the limit runs 1 job; collect() would run 2
+            local = batch.limit(LOCAL_EDGE_ROWS + 1).toArrow()
+            if local.num_rows <= LOCAL_EDGE_ROWS:
+                touched, tables = self._local_edge_tables(snap, local, op,
+                                                          kind)
+                if touched:
+                    for rows, table in tables:
+                        self._driver_write(rows, table, cid, eff)
+                return touched
+        batch = batch.persist()
+        try:
+            if kind == "delete":
+                touched = [r["graph"] for r in
+                           batch.select("graph").distinct().collect()
+                           if r["graph"] in gmap]
+                frames = [(batch.select("src", "dst", F.lit(0).alias("w"),
+                                        "graph"), "edges")]
+            else:
+                touched = self._touched_validated(batch, op)
+                vids = (batch.select(F.col("src").alias("vid"), "graph")
+                        .unionByName(batch.select(F.col("dst").alias("vid"),
+                                                  "graph"))
+                        .distinct())
+                known = snap.vertices(touched).select("vid", "graph")
+                meta = (vids.groupBy("graph")
+                        .agg(F.max("vid").cast("int").alias("n")))
+                old = [g for g in touched if g in gmap]
+                if kind == "append" and old:
+                    meta = meta.filter(~F.col("graph").isin(old))
+                frames = [(batch, "edges"),
+                          (vids.join(known, ["vid", "graph"], "left_anti"),
+                           "vertices"),
+                          (meta.select("n", "graph"), "meta")]
+            if touched:
+                # every frame reads the batch cache, filled by the
+                # collect above, so the writes are safe to overlap
+                self._store_write_all(frames, cid, eff)
+        finally:
+            batch.unpersist()
+        return touched
+
+    def _local_edge_tables(self, snap: GraphSnapshot, local: pa.Table,
+                           op: str, kind: str
+                           ) -> tuple[list[str], list[tuple[pa.Table, str]]]:
+        """:meth:`_land_edge_batch`'s touched graphs and three tables,
+        derived on the driver from the batch's Arrow rows. The only
+        Spark job is the read of the touched graphs' vertex ids that
+        the batch names."""
+        gmap = (snap.manifest or {}).get("graphs", {})
+        rows = list(zip(*(local.column(c).to_pylist()
+                          for c in ("graph", "src", "dst", "w"))))
+        if kind == "delete":
+            rows = [(g, s, d, 0) for g, s, d, _ in rows if g in gmap]
+        else:
+            _check_edge_batch(op, any(None in r[:3] for r in rows),
+                              any(r[3] is None or r[3] < 1 for r in rows))
+        touched = sorted({r[0] for r in rows})
+        ends: dict[str, set[int]] = {}
+        if kind != "delete":
+            for g, s, d, _ in rows:
+                ends.setdefault(g, set()).update((s, d))
+        known: set[tuple[str, int]] = set()
+        old = [g for g in ends if g in gmap]
+        if old:
+            vids = ",".join(map(str, sorted(set().union(*ends.values()))))
+            seen = (snap.vertices(old).filter(F.expr(f"vid IN ({vids})"))
+                    .select("graph", "vid").toArrow())
+            known = set(zip(seen.column("graph").to_pylist(),
+                            seen.column("vid").to_pylist()))
+        new = sorted((v, g) for g, vs in ends.items() for v in vs
+                     if (g, v) not in known)
+        meta = [(max(vs), g) for g, vs in sorted(ends.items())
+                if kind == "upsert" or g not in gmap]
+
+        def _table(names: tuple[str, ...], tuples: list) -> pa.Table:
+            cols = list(zip(*tuples)) or [()] * len(names)
+            return pa.table({n: pa.array(c, pa.string() if n == "graph"
+                                         else pa.int32())
+                             for n, c in zip(names, cols)})
+
+        return touched, [
+            (_table(("src", "dst", "w", "graph"),
+                    [(s, d, w, g) for g, s, d, w in rows]), "edges"),
+            (_table(("vid", "graph"), new), "vertices"),
+            (_table(("n", "graph"), meta), "meta")]
 
     def append_edges(self, edges: DataFrame,
                      commit_id: str | None = None,
@@ -949,6 +1132,12 @@ class GraphEngine:
         (n = the batch's max vertex id, so the ``n >= max(vid)`` packing
         bound holds for appended graphs too) and join the catalog.
         ``compact()`` collapses chains back to one commit per graph.
+        A batch of at most ``LOCAL_EDGE_ROWS`` rows without property
+        columns commits in at most two Spark jobs, with its files
+        written by the driver; larger batches and typed-property
+        batches take the distributed write (:meth:`_land_edge_batch`).
+        A NULL ``graph``, ``src`` or ``dst``, or a weight below 1,
+        raises before any file lands.
 
         Exactly-once: ``txn_app``/``txn_version`` record an applied
         transaction version IN THE MANIFEST itself (the Delta txn-action
@@ -990,77 +1179,41 @@ class GraphEngine:
         _merge_props(prev0.get("props", {}).get("edges", {}),
                      batch_props, "append_edges",
                      _blocked_physicals(prev0, "edges"))
-        # persist the batch across its consumers (validation collect,
-        # edges write, vid derivation) — one computation of the
-        # caller's batch plan instead of three (round-15 optimization).
-        # The try starts IMMEDIATELY after the persist (round-16
-        # ADVICE fix): a validation ValueError or a write failure must
-        # not leak the cached frames until release_caches.
-        edges = edges.persist()
-        batch_vids = None
-        try:
-            # graph NAMES of this batch + the w >= 1 invariant, one
-            # metadata-sized job (same envelope note as _write) — also
-            # prunes the anti-join reads
-            write_graphs = self._touched_validated(edges, "append_edges")
-            if not write_graphs:
-                return False  # empty batch publishes nothing
-            batch_vids = (edges.select(F.col("src").alias("vid"), "graph")
-                          .unionByName(edges.select(F.col("dst").alias("vid"),
-                                                    "graph"))
-                          .distinct()).persist()
-            known = snap.vertices(write_graphs).select("vid", "graph")
-            new_vids = batch_vids.join(known, ["vid", "graph"], "left_anti")
-            # n records an ID BOUND (max vid), not a count: appended
-            # graphs carry arbitrary user vids, and meta n's contract
-            # downstream (_packed_union's lower bound, the matrix
-            # dimension for ingested graphs) is "no vid exceeds n at
-            # write time".
-            new_graph_meta = (batch_vids.groupBy("graph")
-                              .agg(F.max("vid").cast("int").alias("n"))
-                              .join(snap.meta(write_graphs)
-                                    .select("graph").distinct(),
-                                    "graph", "left_anti"))
-            eff = self._eff_buckets(snap)
-            # all three frames read from the batch cache (already
-            # filled by the validation collect), so the writes are
-            # safe to overlap (guide §2.6)
-            self._store_write_all([(edges, "edges"), (new_vids, "vertices"),
-                                   (new_graph_meta, "meta")], cid, eff)
+        eff = self._eff_buckets(snap)
+        write_graphs = self._land_edge_batch(snap, edges, batch_props, cid,
+                                             eff, "append_edges", "append")
+        if not write_graphs:
+            return False  # empty batch publishes nothing
 
-            def update(prev: dict | None) -> dict | None:
-                _check_layout(prev, eff)
-                txns = dict((prev or {}).get("txns", {}))
-                if txn_app is not None:
-                    # re-checked INSIDE the CAS closure: a competing replica
-                    # may have applied this version since our snapshot
-                    if txns.get(txn_app, -1) >= txn_version:
-                        return None
-                    txns[txn_app] = txn_version
-                graphs_map = dict(prev["graphs"]) if prev else {}
-                changed = False
-                for g in write_graphs:
-                    chain = _cids(graphs_map[g]) if g in graphs_map else []
-                    if cid not in chain:
-                        graphs_map[g] = chain + [cid]
-                        changed = True
-                if not changed:
+        def update(prev: dict | None) -> dict | None:
+            _check_layout(prev, eff)
+            txns = dict((prev or {}).get("txns", {}))
+            if txn_app is not None:
+                # re-checked INSIDE the CAS closure: a competing replica
+                # may have applied this version since our snapshot
+                if txns.get(txn_app, -1) >= txn_version:
                     return None
-                body = {"commit": cid, "graphs": graphs_map, "txns": txns}
-                props_doc = dict((prev or {}).get("props", {}))
-                if batch_props:
-                    props_doc["edges"] = _merge_props(
-                        props_doc.get("edges", {}), batch_props, "append_edges",
-                        _blocked_physicals(prev, "edges"))
-                if props_doc:
-                    body["props"] = props_doc
-                return _carry_vdeltas(prev, body)
+                txns[txn_app] = txn_version
+            graphs_map = dict(prev["graphs"]) if prev else {}
+            changed = False
+            for g in write_graphs:
+                chain = _cids(graphs_map[g]) if g in graphs_map else []
+                if cid not in chain:
+                    graphs_map[g] = chain + [cid]
+                    changed = True
+            if not changed:
+                return None
+            body = {"commit": cid, "graphs": graphs_map, "txns": txns}
+            props_doc = dict((prev or {}).get("props", {}))
+            if batch_props:
+                props_doc["edges"] = _merge_props(
+                    props_doc.get("edges", {}), batch_props, "append_edges",
+                    _blocked_physicals(prev, "edges"))
+            if props_doc:
+                body["props"] = props_doc
+            return _carry_vdeltas(prev, body)
 
-            published = self.manifests.commit(update) is not None
-        finally:
-            edges.unpersist()
-            if batch_vids is not None:
-                batch_vids.unpersist()
+        published = self.manifests.commit(update) is not None
         if published:
             self._auto_compact(write_graphs)
         return published
@@ -1084,6 +1237,8 @@ class GraphEngine:
 
         Duplicate keys INSIDE ``updates`` are the caller's bug (which
         row wins is undefined in every MERGE dialect); pre-aggregate.
+        An upsert row with a NULL ``graph``, ``src`` or ``dst``, or a
+        weight below 1, raises before any file lands.
 
         Concurrency: the CAS publish flips a touched graph's pointer
         only if it is UNCHANGED since the merge pinned its snapshot —
@@ -1116,6 +1271,9 @@ class GraphEngine:
         COW (pinned by tests/test_props.py); unlike COW a delta never
         skips — an upsert/delete stays correct appended after any
         concurrent write — so the result is always ``(touched, ∅)``.
+        A delta batch of at most ``LOCAL_EDGE_ROWS`` rows without
+        property columns commits in at most two Spark jobs, with its
+        files written by the driver (:meth:`_land_edge_batch`).
         Choose delta for high-frequency small corrections, COW for
         read-hot stores (each chained delta adds a delta-sized window
         + join to every edge read until compaction)."""
@@ -1141,9 +1299,12 @@ class GraphEngine:
             _merge_props(snap.props.get("edges", {}), batch_props,
                          "merge_edges",
                          _blocked_physicals(snap.manifest, "edges"))
+        if mode == "delta":
+            return self._merge_edges_delta(snap, updates, batch_props,
+                                           delete)
         # persist the validated batch across its consumers (the
-        # touched-graphs collect and every table write), as
-        # append_edges does: one evaluation of the caller's batch plan
+        # touched-graphs collect and every table write): one
+        # evaluation of the caller's batch plan
         updates = updates.persist()
         try:
             touched = (self._touched_validated(updates, "merge_edges")
@@ -1157,9 +1318,6 @@ class GraphEngine:
                 touched = [g for g in touched if g in known]
             if not touched:
                 return frozenset(), frozenset()
-            if mode == "delta":
-                return self._merge_edges_delta(snap, updates, batch_props,
-                                               touched, delete)
             return self._merge_edges_cow(snap, updates, batch_props,
                                          touched, delete)
         finally:
@@ -1400,39 +1558,25 @@ class GraphEngine:
         return adopted, frozenset(touched) - adopted
 
     def _merge_edges_delta(self, snap: GraphSnapshot, updates: DataFrame,
-                           batch_props: dict, touched: list[str],
-                           delete: bool) -> tuple[frozenset, frozenset]:
+                           batch_props: dict, delete: bool
+                           ) -> tuple[frozenset, frozenset]:
         """The merge-on-read write leg of :meth:`merge_edges`: land the
-        batch as one O(batch) commit and append it to each touched
-        graph's chain, marked in ``edeltas``. Upsert batches carry
-        their validated (w ≥ 1) rows verbatim; delete batches write
-        w = 0 marker rows (keys only). Upserts also append membership
-        rows for endpoint vids NEW to their graph (the same anti-join
-        :meth:`append_edges` uses — a vertex-table-sized read, not an
-        edge rewrite) plus the per-graph max-vid meta bound. Appends
-        are unconditional — an upsert/delete stays correct appended
-        after any concurrent write — so nothing is ever skipped."""
+        batch as one O(batch) commit (:meth:`_land_edge_batch` — an
+        in-envelope batch in at most two Spark jobs) and append it to
+        each touched graph's chain, marked in ``edeltas``. Upsert
+        batches carry their validated (w ≥ 1) rows verbatim plus
+        membership rows for endpoint vids NEW to their graph and the
+        per-graph max-vid meta bound; delete batches write w = 0
+        marker rows (keys only). Appends are unconditional — an
+        upsert/delete stays correct appended after any concurrent
+        write — so nothing is ever skipped."""
         cid = uuid.uuid4().hex[:12]
         eff = self._eff_buckets(snap)
-        if delete:
-            rows = updates.select("src", "dst",
-                                  F.lit(0).alias("w"), "graph")
-            self._store_write(rows, "edges", cid, eff)
-        else:
-            known = snap.vertices(touched).select("vid", "graph")
-            evids = (updates.select(F.col("src").alias("vid"), "graph")
-                     .unionByName(updates.select(F.col("dst").alias("vid"),
-                                                 "graph"))
-                     .distinct())
-            new_verts = evids.join(known, ["vid", "graph"], "left_anti")
-            meta = (evids.groupBy("graph")
-                    .agg(F.max("vid").cast("int").alias("n"))
-                    .select("n", "graph"))
-            # all three are O(batch) plans over the update batch, which
-            # merge_edges has persisted and filled — overlap them
-            self._store_write_all([(updates, "edges"),
-                                   (new_verts, "vertices"),
-                                   (meta, "meta")], cid, eff)
+        touched = self._land_edge_batch(
+            snap, updates, batch_props, cid, eff, "merge_edges",
+            "delete" if delete else "upsert")
+        if not touched:
+            return frozenset(), frozenset()
 
         def update(prev: dict | None) -> dict | None:
             _check_layout(prev, eff)
@@ -1543,7 +1687,6 @@ class GraphEngine:
         # public StructType.fromDDL round-trip (the same DDL parse the
         # read paths use) — not the private _parse_datatype_string,
         # which has shifted between PySpark releases
-        from pyspark.sql.types import StructType
         try:
             fields = StructType.fromDDL(f"x {ddl_type}").fields
         except Exception as exc:
@@ -2315,8 +2458,6 @@ class GraphEngine:
         """Driver-side int columns as an Arrow-backed local relation:
         collecting it runs no Spark job (a parallelized list would run
         one, through Python workers)."""
-        import pyarrow as pa
-
         table = pa.table({c: pa.array(v, pa.int32()) for c, v in cols.items()})
         return self.spark.createDataFrame(
             table, ", ".join(f"{c} int" for c in cols))
@@ -2662,7 +2803,7 @@ class GraphEngine:
         snap = self.snapshot()
         graphs = snap.graphs()
         if not graphs:
-            return self.spark.createDataFrame([], "graph string, vid int, scc int")
+            return _empty_frame(self.spark, "graph string, vid int, scc int")
         gidx, stride, e, v = self._packed_union(snap, graphs)
         out = pregel.strongly_connected_components(e, v,
                                                    max_iterations=max_iterations)
@@ -2680,8 +2821,8 @@ class GraphEngine:
         snap = self.snapshot()
         graphs = snap.graphs()
         if not graphs:
-            return self.spark.createDataFrame(
-                [], "graph string, vid int, component int")
+            return _empty_frame(
+                self.spark, "graph string, vid int, component int")
         gidx, stride, e, v = self._packed_union(snap, graphs)
         out = pregel.connected_components(e, v, max_iterations=max_iterations)
         return self._unpack_labels(out, gidx, stride, "component")
@@ -2698,8 +2839,8 @@ class GraphEngine:
         snap = self.snapshot()
         graphs = snap.graphs()
         if not graphs:
-            return self.spark.createDataFrame(
-                [], "graph string, vid int, rank double")
+            return _empty_frame(
+                self.spark, "graph string, vid int, rank double")
         gidx = self.spark.createDataFrame(
             list(enumerate(graphs)), "gidx long, graph string")
         e = (snap.edges().join(F.broadcast(gidx), "graph")
@@ -2725,8 +2866,8 @@ class GraphEngine:
         snap = self.snapshot()
         graphs = snap.graphs()
         if not graphs:
-            return self.spark.createDataFrame(
-                [], "graph string, vid int, rank_q long")
+            return _empty_frame(
+                self.spark, "graph string, vid int, rank_q long")
         gidx = self.spark.createDataFrame(
             list(enumerate(graphs)), "gidx long, graph string")
         e = (snap.edges().join(F.broadcast(gidx), "graph")
@@ -2772,8 +2913,8 @@ class GraphEngine:
             r["graph"] for r in snap.vertices()
             .filter(F.col("vid") == start).select("graph").distinct().collect())
         if not graphs:
-            return self.spark.createDataFrame(
-                [], "graph string, vertex int, dist double")
+            return _empty_frame(
+                self.spark, "graph string, vertex int, dist double")
         gidx, stride, _, _ = self._packed_union(snap, graphs)
         we = _pack_ids(snap.weighted_edges(), gidx, stride,
                        ("src", "dst"), keep=("w",)) \
@@ -2857,8 +2998,8 @@ class GraphEngine:
         snap = self.snapshot()
         graphs = snap.graphs()
         if not graphs:
-            return self.spark.createDataFrame(
-                [], "graph string, n_triangles long")
+            return _empty_frame(
+                self.spark, "graph string, n_triangles long")
         gidx, stride, edges, _ = self._packed_union(snap, graphs)
         und = (edges.filter(F.col("src") != F.col("dst"))
                .select(F.least("src", "dst").alias("src"),
@@ -2907,8 +3048,8 @@ class GraphEngine:
         snap = self.snapshot()
         graphs = snap.graphs()
         if not graphs:
-            return self.spark.createDataFrame(
-                [], "graph string, vid int, core_deg long")
+            return _empty_frame(
+                self.spark, "graph string, vid int, core_deg long")
         gidx, stride, edges, _ = self._packed_union(snap, graphs)
         und = (edges.filter(F.col("src") != F.col("dst"))
                .select(F.least("src", "dst").alias("src"),
@@ -2937,8 +3078,8 @@ class GraphEngine:
         snap = self.snapshot()
         graphs = snap.graphs()
         if not graphs:
-            return self.spark.createDataFrame(
-                [], "graph string, vid int, deg long, n_tri long, "
+            return _empty_frame(
+                self.spark, "graph string, vid int, deg long, n_tri long, "
                     "coeff double")
         gidx, stride, edges, _ = self._packed_union(snap, graphs)
         und = (edges.filter(F.col("src") != F.col("dst"))
@@ -2969,8 +3110,8 @@ class GraphEngine:
         snap = self.snapshot()
         graphs = snap.graphs()
         if not graphs:
-            return self.spark.createDataFrame(
-                [], "graph string, vid int, label int")
+            return _empty_frame(
+                self.spark, "graph string, vid int, label int")
         gidx, stride, e, v = self._packed_union(snap, graphs)
         out = pregel.label_propagation(e, v, iterations=iterations)
         return self._unpack_labels(out, gidx, stride, "label")

@@ -13,8 +13,6 @@ from graphdatabase_spark.sources.tables import load_table
 
 from tests.oracle import dfs_leaves
 
-pytestmark = pytest.mark.slow  # heavyweight integration module: full-suite tier (pyproject.toml)
-
 REF_FIXTURES = "/root/reference/Assignment2"
 
 # Golden BFS level-sets for G6 from vertex 18 — the output of the

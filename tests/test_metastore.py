@@ -19,8 +19,6 @@ from graphdatabase_spark.metastore import (InMemoryManifestStore, ManifestLog,
                                            PosixManifestStore, manifest_name,
                                            parse_seq)
 
-pytestmark = pytest.mark.slow  # heavyweight integration module: full-suite tier (pyproject.toml)
-
 
 # -- blob-store contract ---------------------------------------------------
 
@@ -333,36 +331,53 @@ def test_engine_lifecycle_on_scheme_store_path(spark, tmp_path):
         assert len(dirs) == 1
 
 
-def test_vacuum_reclaims_orphaned_commit_dirs(spark, tmp_path):
-    """A writer that lands its data files but dies before publishing
-    its manifest leaves orphaned c=<cid> dirs; vacuum must reclaim
-    them (they are referenced by no retained manifest) without
-    touching the published state."""
+@pytest.mark.parametrize("write", [
+    lambda eng, spark: eng.add_graph("B", "2\n0 1\n1 0\n"),
+    lambda eng, spark: eng.append_edges(spark.createDataFrame(
+        [("A", 2, 3), ("B", 1, 2)], "graph string, src int, dst int")),
+    lambda eng, spark: eng.merge_edges(spark.createDataFrame(
+        [("A", 1, 2, 4), ("A", 2, 5, 1)],
+        "graph string, src int, dst int, w int"), mode="delta"),
+], ids=["add_graph", "append_edges", "merge_edges_delta"])
+def test_vacuum_reclaims_orphaned_commit_dirs(spark, tmp_path, write):
+    """A writer that lands its data files but dies at the manifest CAS
+    leaves orphaned c=<cid> dirs; vacuum must reclaim exactly them
+    (they are referenced by no retained manifest) without touching the
+    published state."""
     import os
 
     path = str(tmp_path / "s")
     eng = GraphEngine(spark, path)
     eng.add_graph("A", "2\n0 1\n0 0\n")
+    tables = ("edges", "vertices", "meta")
+
+    def dirs():
+        return {t: set(os.listdir(tmp_path / "s" / "data" / t))
+                for t in tables}
+
+    published = dirs()
+    head = eng.manifests.load()
 
     class _DieBeforePublish(Exception):
         pass
 
     class FailingLog:
-        def load(self, seq=None):
-            return None  # the writer reads fine, then dies at publish
+        load = eng.manifests.load  # the writer reads fine ...
 
         def commit(self, update, **kw):
-            raise _DieBeforePublish()
+            raise _DieBeforePublish()  # ... then dies at the CAS
 
     crashed = GraphEngine(spark, path)
     crashed.manifests = FailingLog()
     with pytest.raises(_DieBeforePublish):
-        crashed.add_graph("B", "2\n0 1\n1 0\n")
-    # the orphan's data landed, the manifest did not
-    assert len(os.listdir(tmp_path / "s" / "data" / "edges")) == 2
-    assert eng.graphs() == ["A"]
+        write(crashed, spark)
+    # the orphan's data landed, one dir per table; the manifest did not
+    orphans = {t: ds - published[t] for t, ds in dirs().items()}
+    assert all(len(ds) == 1 for ds in orphans.values()), orphans
+    assert eng.manifests.load() == head
     removed = eng.vacuum(force=True)
     assert removed == 3  # the orphan's edges+vertices+meta dirs
+    assert dirs() == published
     assert eng.graphs() == ["A"]  # published state untouched
     assert {(r["src"], r["dst"]) for r in eng.edges("A").collect()} == {(1, 2)}
 
