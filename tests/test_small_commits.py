@@ -145,3 +145,38 @@ def test_malformed_batches_raise_before_any_file(spark, tmp_path, buckets):
                         op(batch)
                     assert _files(tmp_path / "store") == files, (name, bad)
     assert eng.manifests.load()["seq"] == seq
+
+
+@pytest.mark.parametrize("buckets", [None, BUCKETS], ids=["flat", "bucketed"])
+def test_replayed_commit_id_after_crash_at_cas(spark, tmp_path, buckets):
+    """A writer that lands commit ``x``'s files and dies at the manifest
+    CAS publishes nothing, so a replay of the batch under the same
+    commit id must commit. The replay replaces the orphan's dirs
+    whole: here a write in between makes the new graph's vertices
+    known, so the replay writes no vertices or meta for it, and the
+    orphan's rows for it must not survive beside the replay's."""
+    eng, model = _store(spark, tmp_path, buckets)
+    schema = "graph string, src int, dst int, w int"
+    batch = [(BASE, 5, 6, 1), (NEW, 1, 2, 1)]
+
+    class _DieAtCas(Exception):
+        pass
+
+    class FailingLog:
+        load = eng.manifests.load
+
+        def commit(self, update, **kw):
+            raise _DieAtCas()
+
+    crashed = GraphEngine(spark, str(tmp_path / "store"), buckets=buckets)
+    crashed.manifests = FailingLog()
+    with pytest.raises(_DieAtCas):
+        crashed.append_edges(spark.createDataFrame(batch, schema),
+                             commit_id="x")
+    between = [(NEW, 1, 2, 3)]
+    assert eng.append_edges(spark.createDataFrame(between, schema))
+    model.append(between)
+    assert eng.append_edges(spark.createDataFrame(batch, schema),
+                            commit_id="x", txn_app="app", txn_version=0)
+    model.append(batch)
+    _check(eng, model)
