@@ -76,9 +76,10 @@ from graphdatabase_spark.sources import matrix as matrix_mod
 
 
 # A single-graph bfs / dfs_leaves whose edge read has at most this many
-# rows runs on the driver: the reference caps a graph at 100 vertices
-# (secondary_server.c:30), so its adjacency matrix holds at most
-# 100 x 100 edges.
+# rows, an edge batch of at most this many rows and a matrix of at most
+# this many cells run on the driver: the reference caps a graph at 100
+# vertices (secondary_server.c:30), so its adjacency matrix holds at
+# most 100 x 100 edges.
 LOCAL_EDGE_ROWS = 10_000
 
 
@@ -940,9 +941,26 @@ class GraphEngine:
 
     def add_graph(self, name: str, matrix_text: str) -> None:
         """Ingest one adjacency-matrix text (the reference's exchange
-        format) and atomically replace that graph's partition."""
-        self._write(matrix_mod.lines_from_text(self.spark, name, matrix_text),
-                    [name])
+        format) and atomically replace that graph's partition.
+
+        A matrix of declared N with N² ≤ ``LOCAL_EDGE_ROWS`` (N ≤ 100,
+        the reference's cap) is parsed and checked on the driver
+        (:func:`~graphdatabase_spark.sources.matrix.matrix_tables`)
+        and its files written by :meth:`_driver_write`, with no Spark
+        job; a cell that is not a 32-bit integer raises ValueError
+        before any file lands. A larger matrix takes :meth:`_write`'s
+        Spark melt."""
+        n = matrix_mod.declared_n(matrix_text)
+        if n * n > LOCAL_EDGE_ROWS:
+            self._write(matrix_mod.lines_from_text(self.spark, name,
+                                                   matrix_text), [name])
+            return
+        tables = matrix_mod.matrix_tables(name, matrix_text)
+        cid = uuid.uuid4().hex[:12]
+        eff = self._eff_buckets(self.snapshot())
+        for rows, table in zip(tables, ("edges", "vertices", "meta")):
+            self._driver_write(rows, table, cid, eff)
+        self._publish_overwrite(cid, eff, [name])
 
     # op 2 routes to the same implementation as op 1 — faithfully
     # mirroring the reference's dispatch (primary_server.c:223,
@@ -1932,17 +1950,18 @@ class GraphEngine:
 
     def _write(self, lines: DataFrame,
                write_graphs: list[str] | None = None) -> None:
-        # One COMMIT: land all three tables' files under a fresh
-        # immutable c=<cid> directory (one distributed write each, still
-        # graph-partitioned so single-graph reads prune by path), then
-        # publish a manifest pointing every graph in this write at the
-        # new commit — and every other graph at whatever commit already
-        # served it. Readers resolve the manifest once per snapshot, so
-        # they see the whole write or none of it. The meta table records
-        # every graph — including N=0 graphs, whose edge/vertex files
-        # are legitimately absent (the reference's G12.txt edge case):
-        # a modify that EMPTIES any number of graphs needs no per-graph
-        # clearing, the pointer flip is the clear.
+        """Overwrite the graphs of matrix ``lines`` through the Spark
+        melt: its callers are ``ingest_dir`` and an ``add_graph`` over
+        the driver-parse cap.
+
+        One COMMIT: land all three tables' files under a fresh
+        immutable c=<cid> directory (one distributed write each, still
+        graph-partitioned so single-graph reads prune by path), then
+        publish with :meth:`_publish_overwrite`. The meta table records
+        every graph — including N=0 graphs, whose edge/vertex files
+        are legitimately absent (the reference's G12.txt edge case):
+        a modify that EMPTIES any number of graphs needs no per-graph
+        clearing, the pointer flip is the clear."""
         meta = lines.filter(F.col("line_no") == 0).select(
             F.trim(F.col("line")).cast("int").alias("n"), "graph")
         cid = uuid.uuid4().hex[:12]
@@ -1969,6 +1988,14 @@ class GraphEngine:
             # catalog, not a bigger manifest.
             write_graphs = [r["graph"] for r in
                             meta.select("graph").distinct().collect()]
+        self._publish_overwrite(cid, eff, write_graphs)
+
+    def _publish_overwrite(self, cid: str, eff: int | None,
+                           graphs: list[str]) -> None:
+        """Publish a manifest pointing every graph in ``graphs`` at
+        commit ``cid`` — and every other graph at whatever commit
+        already served it. Readers resolve the manifest once per
+        snapshot, so they see the whole write or none of it."""
 
         def update(prev: dict | None) -> dict:
             # Pure merge onto whatever manifest is newest AT PUBLISH
@@ -1978,7 +2005,7 @@ class GraphEngine:
             # per-graph RW lock).
             _check_layout(prev, eff)
             graphs_map = dict(prev["graphs"]) if prev else {}
-            graphs_map.update({g: cid for g in write_graphs})
+            graphs_map.update({g: cid for g in graphs})
             body = {"commit": cid, "graphs": graphs_map,
                     "txns": (prev or {}).get("txns", {})}
             if (prev or {}).get("props"):

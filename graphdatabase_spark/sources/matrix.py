@@ -12,15 +12,28 @@ caps N at 100, ``secondary_server.c:30``; even N=10^4 is a ~200 MB
 text file), but a *corpus* of graph files can be arbitrarily large —
 so ingest reads many files distributed (``wholetext`` gives one row
 per file, keeping line order exact without any zipWithIndex order
-assumptions) and the melt is pure ``posexplode`` expressions.
+assumptions) and the melt is pure ``posexplode`` expressions. One
+request's text within the reference's cap is instead parsed on the
+driver (:func:`matrix_tables`), to the same rows.
 """
 
 from __future__ import annotations
 
+import re
+
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 MATRIX_LINES_COLUMNS = ("graph", "line_no", "line")
+
+# The melt's cell separator, Java's ``\s+``: Python's ``\s`` also
+# matches Unicode spaces, which the melt keeps inside a cell.
+_CELL_SEP = re.compile(r"[ \t\n\x0b\f\r]+")
+# Spark's ANSI ``cast(string as int)`` strips these bytes from both
+# ends of its input, then takes an optional sign and ASCII digits.
+_CAST_TRIM = "".join(map(chr, range(0x21))) + "\x7f"
+_CAST_INT = re.compile(r"[+-]?[0-9]+")
 
 
 def melt_matrix_lines(lines: DataFrame) -> DataFrame:
@@ -62,8 +75,10 @@ def melt_matrix_lines_weighted(lines: DataFrame) -> DataFrame:
     exactly :func:`melt_matrix_lines`'s edge set with ``w = 1``
     everywhere (pinned by tests), so the reference's own fixtures
     round-trip unchanged; the declared-N bounding is identical.
-    Non-integer cells parse to NULL and are non-edges, like the 0/1
-    melt's "anything but '1' is a non-edge"."""
+    Under the session's ANSI mode (Spark's default) a cell of a row
+    in 1..N that is not a 32-bit integer, past column N too, fails the
+    write with CAST_INVALID_INPUT; :func:`matrix_tables` is the
+    driver-side twin of this melt and rejects the same cells."""
     n_per_graph = lines.filter(F.col("line_no") == 0).select(
         "graph", F.trim(F.col("line")).cast("int").alias("__n"))
     rows = (lines.filter(F.col("line_no") >= 1)
@@ -108,23 +123,80 @@ def read_matrix_files(spark: SparkSession, path: str) -> DataFrame:
     )
 
 
+def _text_lines(text: str) -> list[str]:
+    return text.strip("\n").split("\n")
+
+
 def lines_from_text(spark: SparkSession, graph: str, text: str) -> DataFrame:
-    """Literal matrix text (an add/modify request, a test fixture) → the
-    lines shape.
+    """Literal matrix text → the lines shape, for the Spark melt: an
+    ``add_graph`` over the driver-parse cap, the registry's sample
+    matrix and tests that compare against :func:`matrix_tables`.
 
     The text is already on the driver, so it goes in as an Arrow-backed
     local relation: every action over it (each table write of a commit
     evaluates it again) scans the rows inside the JVM, with no Python
     worker unpickling a parallelized list. One partition, because each
     partition writes its own file per partition dir of every table."""
-    import pyarrow as pa
-
-    lines = text.strip("\n").split("\n")
+    lines = _text_lines(text)
     table = pa.table({"graph": [graph] * len(lines),
                       "line_no": pa.array(range(len(lines)), pa.int32()),
                       "line": lines})
     return spark.createDataFrame(
         table, "graph string, line_no int, line string").coalesce(1)
+
+
+def _cast_int(token: str, line_no: int) -> int:
+    """``token`` as Spark's ANSI ``cast(... as int)`` reads it, or
+    ValueError where that cast raises. Not bare ``int()``, which also
+    takes ``1_0`` and non-ASCII digits."""
+    s = token.strip(_CAST_TRIM)
+    if _CAST_INT.fullmatch(s):
+        v = int(s)
+        if -2**31 <= v < 2**31:
+            return v
+    raise ValueError(f"matrix line {line_no}: {token!r} is not a 32-bit "
+                     f"integer")
+
+
+def declared_n(text: str) -> int:
+    """The N on line 0 of a matrix text; ValueError where the melt's
+    cast of it raises."""
+    return _cast_int(_text_lines(text)[0], 0)
+
+
+def matrix_tables(graph: str, text: str
+                  ) -> tuple[pa.Table, pa.Table, pa.Table]:
+    """The driver-side parse of one matrix text: the edges
+    ``(src, dst, w, graph)``, vertices ``(vid, graph)`` and meta
+    ``(n, graph)`` tables that :func:`melt_matrix_lines_weighted`,
+    :func:`matrix_vertices` and the line-0 ``n`` give for the same
+    text through :func:`lines_from_text`, with no Spark job. Every
+    cell of rows 1..N is checked first, so a malformed text raises
+    ValueError before the caller writes anything. As in the melt, a
+    row of spaces still uses up its row number, and rows past N and
+    cells past column N are no edges."""
+    lines = _text_lines(text)
+    n = _cast_int(lines[0], 0)
+    src, dst, w = [], [], []
+    for i, line in enumerate(lines[1:max(n, 0) + 1], 1):
+        row = line.strip(" ")     # Spark's trim() strips spaces only
+        if not row:
+            continue
+        for j, token in enumerate(_CELL_SEP.split(row)):
+            v = _cast_int(token, i)
+            if v and j < n:
+                src.append(i)
+                dst.append(j + 1)
+                w.append(v)
+    vids = range(1, n + 1)
+    return (pa.table({"src": pa.array(src, pa.int32()),
+                      "dst": pa.array(dst, pa.int32()),
+                      "w": pa.array(w, pa.int32()),
+                      "graph": pa.array([graph] * len(src), pa.string())}),
+            pa.table({"vid": pa.array(vids, pa.int32()),
+                      "graph": pa.array([graph] * len(vids), pa.string())}),
+            pa.table({"n": pa.array([n], pa.int32()),
+                      "graph": pa.array([graph], pa.string())}))
 
 
 def edges_to_matrix_text(edges: DataFrame, n: int) -> str:

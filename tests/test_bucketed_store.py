@@ -17,8 +17,6 @@ from pyspark.sql import functions as F
 
 from graphdatabase_spark.engine import GraphEngine
 
-pytestmark = pytest.mark.slow  # heavyweight integration module: full-suite tier (pyproject.toml)
-
 B = 4
 
 

@@ -1,27 +1,31 @@
-"""Edge batches of at most ``LOCAL_EDGE_ROWS`` rows commit from the
-driver.
+"""Edge batches of at most ``LOCAL_EDGE_ROWS`` rows, and matrices of
+at most that many cells, commit from the driver.
 
 An append or a delta merge whose batch fits the cap reads it in one
 bounded read, checks it on the driver and writes its Parquet files
 without a Spark job, so the commit runs at most two jobs and leaves no
 ``_SUCCESS`` marker. One row more and the batch takes the distributed
-write. On both sides of the cap, in the flat and the bucketed layout,
-every commit must read back what the store model in ``tests/oracle.py``
-says, and a malformed batch must raise on either path before any file
+write. An ``add_graph`` / ``modify_graph`` of N ≤ 100 vertices parses
+its text on the driver and runs no job; N = 101 takes the Spark melt.
+On both sides of the caps, in the flat and the bucketed layout, every
+commit must read back what the store model in ``tests/oracle.py``
+says, and malformed input must raise on either path before any file
 lands.
 """
 
 import contextlib
+import math
 import os
 
 import pytest
 
 from graphdatabase_spark.engine import LOCAL_EDGE_ROWS, GraphEngine
 
-from tests.oracle import StoreModel
+from tests.oracle import StoreModel, bfs_levels
 
 BUCKETS = 8
 MAX_LOCAL_JOBS = 2
+MATRIX_CAP = math.isqrt(LOCAL_EDGE_ROWS)   # N = 100: N x N cells
 BASE = "A"       # a graph the store has before any batch
 NEW = "B#1"      # a graph the first append creates; the writer escapes it
 UNKNOWN = "Z"    # a graph only the delete batch names
@@ -180,3 +184,70 @@ def test_replayed_commit_id_after_crash_at_cas(spark, tmp_path, buckets):
                             commit_id="x", txn_app="app", txn_version=0)
     model.append(batch)
     _check(eng, model)
+
+
+def _matrix(n: int, edges) -> str:
+    cells = [["0"] * n for _ in range(n)]
+    for s, d in edges:
+        cells[s - 1][d - 1] = "1"
+    return "\n".join([str(n)] + [" ".join(row) for row in cells]) + "\n"
+
+
+def _graph_edges(n: int) -> list[tuple[int, int]]:
+    """A ring over 1..n with a chord from every seventh vertex."""
+    return sorted({(v, v % n + 1) for v in range(1, n + 1)}
+                  | {(v, 3 * v % n + 1) for v in range(1, n + 1, 7)})
+
+
+@pytest.mark.parametrize("buckets", [None, BUCKETS], ids=["flat", "bucketed"])
+def test_matrix_commits_either_side_of_the_cap(spark, tmp_path, buckets):
+    eng, model = _store(spark, tmp_path, buckets)
+    sc = spark.sparkContext
+    steps = [
+        ("add", NEW, MATRIX_CAP),
+        ("add", "C", MATRIX_CAP + 1),
+        ("add", "E", 0),
+        ("modify", NEW, 3),          # shrinks B#1 from 100 vertices
+        ("modify", "C", 2),          # over the cap before, driver now
+    ]
+    for op, g, n in steps:
+        edges = _graph_edges(n) if n else []
+        run = eng.add_graph if op == "add" else eng.modify_graph
+        group = f"matrix-commit-{op}-{g}-{n}-{buckets}"
+        with _job_group(sc, group):
+            run(g, _matrix(n, edges))
+        model.put(g, n, edges)
+        _check(eng, model)
+        got = eng.edges(g).select("src", "dst").collect()
+        assert sorted(map(tuple, got)) == edges, (op, g)
+        got = eng.bfs(g, 1).collect()
+        assert dict(map(tuple, got)) == bfs_levels(edges, 1), (op, g)
+        cid = eng.manifests.load()["commit"]
+        commit = tmp_path / "store" / "data" / "edges" / f"c={cid}"
+        if n <= MATRIX_CAP:
+            assert _jobs(sc, group) == 0, (op, g)
+            for table in ("edges", "vertices", "meta"):
+                tdir = commit.parent.parent / table / f"c={cid}"
+                assert tdir.is_dir() and not (tdir / "_SUCCESS").exists()
+        else:
+            assert (commit / "_SUCCESS").exists(), (op, g)
+
+
+@pytest.mark.parametrize("buckets", [None, BUCKETS], ids=["flat", "bucketed"])
+def test_malformed_matrix_raises_before_any_file(spark, tmp_path, buckets):
+    eng, _ = _store(spark, tmp_path, buckets)
+    seq = eng.manifests.load()["seq"]
+    files = _files(tmp_path / "store")
+    bad = ["2\n0 x\n1 0\n",           # a cell Spark's cast rejects
+           "2\n0 1 x\n1 0\n",         # past column N, still checked
+           "2\n0 1_0\n1 0\n",         # int() would take it
+           "2\n0 \u0663\n1 0\n",      # a non-ASCII digit
+           "2\n0 2147483648\n1 0\n",  # over int32
+           "2\r\n0 1\r\n1 0\r\n",      # CRLF: an empty last cell
+           "x\n0 1\n1 0\n"]           # line 0
+    for text in bad:
+        for g in (BASE, NEW):
+            with pytest.raises(ValueError, match="32-bit integer"):
+                eng.modify_graph(g, text)
+            assert _files(tmp_path / "store") == files, (g, text)
+    assert eng.manifests.load()["seq"] == seq
