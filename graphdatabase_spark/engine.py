@@ -82,6 +82,31 @@ from graphdatabase_spark.sources import matrix as matrix_mod
 # most 100 x 100 edges.
 LOCAL_EDGE_ROWS = 10_000
 
+# The Parquet bytes a driver-side read of one graph
+# (GraphSnapshot._local_chain) may fetch, summed over the lengths
+# listStatus reports for its chain's files: 16 bytes for each of
+# LOCAL_EDGE_ROWS rows. Three int32 columns of random values store as
+# 12 bytes a row, since zstd cannot shrink them; the rest covers page
+# headers, footers and a bucketed file's graph column. Measured at-cap
+# edge files are 2 KB for an all-ones 100 x 100 matrix and 59 KB with
+# random 32-bit weights.
+LOCAL_READ_BYTES = 16 * LOCAL_EDGE_ROWS
+
+
+def _leaf_dirs(spark: SparkSession, graphs, buckets: int | None
+               ) -> dict[str, str]:
+    """Each graph's partition dir under a commit dir: ``gb=<bucket>`` in
+    a bucketed store, else ``graph=<name>`` escaped by Spark's own
+    ``ExternalCatalogUtils.escapePathName``, the function the writer's
+    ``partitionBy`` names the dir with. A graph called "G#1" lives in
+    ``graph=G%231``; a raw-name path would not exist and read as empty."""
+    if buckets:
+        return {g: f"gb={metastore.graph_bucket(g, buckets)}"
+                for g in graphs}
+    esc = (spark._jvm.org.apache.spark.sql.catalyst.catalog
+           .ExternalCatalogUtils.escapePathName)
+    return {g: f"graph={esc(g)}" for g in graphs}
+
 
 def _empty_frame(spark: SparkSession, ddl: str) -> DataFrame:
     """An empty frame of DDL schema ``ddl`` as an Arrow-backed local
@@ -382,15 +407,10 @@ class GraphSnapshot:
         job, one task per dir, before any row is read."""
         if set(self._by_commit.get(cid, ())) <= set(names):
             return None
-        if self.buckets:
-            gbs = {metastore.graph_bucket(g, self.buckets) for g in names}
-            if len(gbs) == self.buckets:
-                return None
-            return [f"gb={b}" for b in sorted(gbs)]
-        # the writer's own escaper: see _table
-        esc = (self.spark._jvm.org.apache.spark.sql.catalyst.catalog
-               .ExternalCatalogUtils.escapePathName)
-        return sorted({f"graph={esc(g)}" for g in names})
+        leaves = set(_leaf_dirs(self.spark, names, self.buckets).values())
+        if self.buckets and len(leaves) == self.buckets:
+            return None
+        return sorted(leaves)
 
     def _commit_df(self, table: str, cid: str, row_schema: str,
                    names: list[str]) -> DataFrame:
@@ -522,7 +542,10 @@ class GraphSnapshot:
         deltas return the exact plain pre-MoR union. ``ddl`` must
         include ``w``. Plan cost: one window over the delta rows
         (delta-sized, not store-sized) + one delta-keyed join + one
-        union."""
+        union. :meth:`local_edges` applies the same rule in Python to
+        one graph within the driver-read envelope; this plan serves
+        graphs over it, multi-graph and whole-catalog reads, the
+        ``*_all`` kernels and the SQL views."""
         edeltas = set((self.manifest or {}).get("edeltas", []))
         names = ([name] if isinstance(name, str)
                  else list(name) if name is not None else self.graphs())
@@ -708,6 +731,114 @@ class GraphSnapshot:
     def meta(self, name: str | list[str] | None = None) -> DataFrame:
         return self._table("meta", "n int", name)
 
+    def _local_chain(self, table: str, g: str, cols: tuple[str, ...]
+                     ) -> list[tuple[str, list[tuple]]] | None:
+        """``(cid, rows)`` for each commit of graph ``g``'s chain, in
+        chain order, where ``rows`` are ``g``'s ``cols`` tuples of
+        ``table`` in that commit: the read-side twin of
+        ``GraphEngine._driver_write``, with no Spark job. The leaf dirs
+        (:func:`_leaf_dirs`) are listed and their files fetched through
+        the store's Hadoop FileSystem, so local, ``file:`` and
+        ``hdfs://`` stores take one path, and pyarrow decodes them.
+
+        None when ``g`` is outside the envelope. No byte is fetched when
+        the lengths listStatus reports add up to more than
+        ``LOCAL_READ_BYTES``, and the read stops, with at most
+        ``LOCAL_EDGE_ROWS`` rows decoded, once the fetched files'
+        Parquet metadata counts more rows than that. In a bucketed
+        store both limits also count the bucket's other graphs: they
+        bound the driver's work, and the merged rows of ``g`` are never
+        more than the rows counted.
+
+        The Spark read's rules hold: a leaf dir the commit never wrote
+        reads as empty, decided by ``FileSystem.exists`` and never by
+        os.path; files named ``_*`` or ``.*`` (``_SUCCESS``, checksum
+        sidecars) are skipped; columns resolve case-insensitively, as
+        Spark's Parquet reader resolves them, and a column a file lacks
+        (``w`` before weights existed) reads as None. No column mapping
+        is applied: ``src``, ``dst``, ``w`` and ``vid`` are reserved
+        names, which no property can take and no rename can map."""
+        ptr = (self.manifest or {}).get("graphs", {}).get(g)
+        if ptr is None:
+            return []
+        chain = _cids(ptr)
+        leaf = _leaf_dirs(self.spark, [g], self.buckets)[g]
+        Path = self.spark._jvm.org.apache.hadoop.fs.Path
+        fs = Path(self.store).getFileSystem(
+            self.spark._jsc.hadoopConfiguration())
+        files, size = [], 0
+        for pos, cid in enumerate(chain):
+            leaf_dir = Path(os.path.join(self.store, "data", table,
+                                         f"c={cid}", leaf))
+            if not fs.exists(leaf_dir):
+                continue
+            for status in fs.listStatus(leaf_dir):
+                path = status.getPath()
+                if path.getName().startswith(("_", ".")):
+                    continue
+                size += status.getLen()
+                if size > LOCAL_READ_BYTES:
+                    return None
+                files.append((pos, path))
+        rows: list[list[tuple]] = [[] for _ in chain]
+        nrows = 0
+        for pos, path in files:
+            stream = fs.open(path)
+            try:
+                data = stream.readAllBytes()
+            finally:
+                stream.close()
+            pf = pq.ParquetFile(pa.BufferReader(data))
+            nrows += pf.metadata.num_rows
+            if nrows > LOCAL_EDGE_ROWS:
+                return None
+            field = {n.lower(): n for n in pf.schema_arrow.names}
+            keep = [c for c in (*cols, "graph") if c in field]
+            t = pf.read(columns=[field[c] for c in keep])
+            got = dict(zip(keep, (c.to_pylist() for c in t.columns)))
+            tuples = zip(*(got.get(c, [None] * t.num_rows) for c in cols))
+            if self.buckets:
+                # a bucket's file holds every graph of the bucket
+                tuples = (r for r, name in zip(tuples, got["graph"])
+                          if name == g)
+            rows[pos].extend(tuples)
+        return list(zip(chain, rows))
+
+    def local_edges(self, g: str) -> list[tuple[int, int]] | None:
+        """Graph ``g``'s ``(src, dst)`` rows, the multiset :meth:`edges`
+        reads, from one driver-side read (:meth:`_local_chain`); None
+        outside that read's envelope. The merge-on-read rule is
+        :meth:`_edges_merged`'s: per ``(src, dst)`` the latest delta
+        row in the chain replaces every base row at a lower chain
+        position, a latest ``w = 0`` (or NULL) delta row is a delete
+        marker, and base rows after the latest delta survive.
+
+        The single-graph ``bfs`` and ``dfs_leaves`` read through here.
+        Graphs over the envelope, whole-catalog and multi-graph reads,
+        the ``*_all`` kernels and the SQL views keep the Spark read."""
+        chain = self._local_chain("edges", g, ("src", "dst", "w"))
+        if chain is None:
+            return None
+        edeltas = set((self.manifest or {}).get("edeltas", []))
+        latest: dict[tuple, tuple] = {}   # key -> (pos, w) of its last delta
+        for pos, (cid, rows) in enumerate(chain):
+            if cid in edeltas:
+                for s, d, w in rows:
+                    latest[(s, d)] = (pos, w)
+        out = [(s, d) for pos, (cid, rows) in enumerate(chain)
+               if cid not in edeltas
+               for s, d, _ in rows if pos > latest.get((s, d), (-1,))[0]]
+        return out + [key for key, (_, w) in latest.items() if w]
+
+    def local_vertices(self, g: str) -> list[int] | None:
+        """Graph ``g``'s vertex ids, the multiset :meth:`vertices` reads
+        (every chain commit's rows: a vertex delta adds membership),
+        from one driver-side read; None outside its envelope."""
+        chain = self._local_chain("vertices", g, ("vid",))
+        if chain is None:
+            return None
+        return [v for _, rows in chain for (v,) in rows]
+
 
 class GraphEngine:
     """Named-graph store + traversal queries over a Parquet-backed
@@ -873,7 +1004,10 @@ class GraphEngine:
         Callers order ``frames`` so a frame whose persisted cache is
         still COLD and feeds the other tables is NOT raced: pass it
         through :meth:`_store_write` first (merge_edges writes the
-        COW edge set alone, then vertices ∥ meta from its cache)."""
+        COW edge set alone, then vertices ∥ meta from its cache). The
+        one frame that can fail on malformed input goes first alone as
+        well (``_write``'s edges melt), so the others never land
+        beside a failed write."""
         if len(frames) == 1:
             self._store_write(frames[0][0], frames[0][1], cid, buckets)
             return
@@ -916,13 +1050,8 @@ class GraphEngine:
         fs.delete(Path(root), True)
         fs.mkdirs(Path(root))
         names = rows.column("graph").to_pylist()
-        if buckets:
-            leaf = {g: f"gb={metastore.graph_bucket(g, buckets)}"
-                    for g in set(names)}
-        else:
-            esc = (self.spark._jvm.org.apache.spark.sql.catalyst.catalog
-                   .ExternalCatalogUtils.escapePathName)
-            leaf = {g: f"graph={esc(g)}" for g in set(names)}
+        leaf = _leaf_dirs(self.spark, set(names), buckets)
+        if not buckets:
             rows = rows.drop_columns(["graph"])
         parts: dict[str, list[int]] = {}
         for i, g in enumerate(names):
@@ -1096,9 +1225,11 @@ class GraphEngine:
                            op: str, kind: str
                            ) -> tuple[list[str], list[tuple[pa.Table, str]]]:
         """:meth:`_land_edge_batch`'s touched graphs and three tables,
-        derived on the driver from the batch's Arrow rows. The only
-        Spark job is the read of the touched graphs' vertex ids that
-        the batch names."""
+        derived on the driver from the batch's Arrow rows. The touched
+        graphs' known vertex ids come from the driver-side read
+        (:meth:`GraphSnapshot.local_vertices`), with no Spark job; only
+        graphs over its envelope take one Spark read of the vertex ids
+        that the batch names."""
         gmap = (snap.manifest or {}).get("graphs", {})
         rows = list(zip(*(local.column(c).to_pylist()
                           for c in ("graph", "src", "dst", "w"))))
@@ -1113,16 +1244,25 @@ class GraphEngine:
             for g, s, d, _ in rows:
                 ends.setdefault(g, set()).update((s, d))
         known: set[tuple[str, int]] = set()
-        old = [g for g in ends if g in gmap]
-        if old:
+        spark_read = []
+        for g in sorted(ends):
+            if g in gmap:
+                vids = snap.local_vertices(g)
+                if vids is None:
+                    spark_read.append(g)
+                else:
+                    known.update((g, v) for v in vids)
+        if spark_read:
             # SQL text, not Column.isin: isin makes one py4j call per
             # literal, 7.2 s for the cap's 20,000 vids on a 4-core Xeon
             # VM, where parsing the text costs about 0.4 s
-            vids = ",".join(map(str, sorted(set().union(*ends.values()))))
-            seen = (snap.vertices(old).filter(F.expr(f"vid IN ({vids})"))
+            vids = ",".join(map(str, sorted(set().union(
+                *(ends[g] for g in spark_read)))))
+            seen = (snap.vertices(spark_read)
+                    .filter(F.expr(f"vid IN ({vids})"))
                     .select("graph", "vid").toArrow())
-            known = set(zip(seen.column("graph").to_pylist(),
-                            seen.column("vid").to_pylist()))
+            known.update(zip(seen.column("graph").to_pylist(),
+                             seen.column("vid").to_pylist()))
         new = sorted((v, g) for g, vs in ends.items() for v in vs
                      if (g, v) not in known)
         meta = [(max(vs), g) for g, vs in sorted(ends.items())
@@ -1966,17 +2106,17 @@ class GraphEngine:
             F.trim(F.col("line")).cast("int").alias("n"), "graph")
         cid = uuid.uuid4().hex[:12]
         eff = self._eff_buckets(self.snapshot())
-        writes = (
-            # weighted melt: on the reference's 0/1 matrices this is
-            # exactly the 0/1 edge set with w=1 (pinned by tests); a
-            # nonzero integer cell generalizes to a weighted edge.
-            (matrix_mod.melt_matrix_lines_weighted(lines), "edges"),
-            (matrix_mod.matrix_vertices(lines), "vertices"),
-            (meta, "meta"),
-        )
-        # three independent projections of the ingest read — overlap
-        # them (§2.6); the manifest publish below stays strictly last
-        self._store_write_all(list(writes), cid, eff)
+        # The edges melt lands alone first: it casts line 0 and every
+        # cell of rows 1..N, so a malformed matrix raises there, before
+        # the vertices and meta files land. Those two cast only line 0
+        # and overlap (§2.6); the manifest publish stays strictly last.
+        # The weighted melt is exactly the 0/1 edge set with w = 1 on
+        # the reference's matrices (pinned by tests); a nonzero integer
+        # cell generalizes to a weighted edge.
+        self._store_write(matrix_mod.melt_matrix_lines_weighted(lines),
+                          "edges", cid, eff)
+        self._store_write_all([(matrix_mod.matrix_vertices(lines), "vertices"),
+                               (meta, "meta")], cid, eff)
         if write_graphs is None:
             # The graph set of a bulk ingest is known only after the
             # read (one small driver-side collect of catalog metadata —
@@ -2505,19 +2645,19 @@ class GraphEngine:
         oracle (``utils/bfs_checker.py:75-76``); within-level order is
         unspecified, exactly as in the reference (SURVEY §2.2).
 
-        A graph within the reference's envelope (at most
-        ``LOCAL_EDGE_ROWS`` edge rows) is traversed on the driver from
-        one bounded edge read (``dfs_mod.canonical_bfs_levels``); a
-        larger graph runs the Pregel superstep loop
-        (``pregel.bfs_levels``), after the bounded read that found it
-        too large. Both read through the same merge-on-read edge view
-        and give the same levels."""
-        edges = self.edges(name).select("src", "dst")
-        # the bounded read is both the size check and the data read, so
-        # dispatch costs no extra job and needs no size in the manifest
-        rows = edges.limit(LOCAL_EDGE_ROWS + 1).collect()
-        if len(rows) > LOCAL_EDGE_ROWS:
-            levels = pregel.bfs_levels(edges, [start])
+        A graph within the reference's envelope is read on the driver
+        (:meth:`GraphSnapshot.local_edges`: its files fit
+        ``LOCAL_READ_BYTES`` and hold at most ``LOCAL_EDGE_ROWS`` rows)
+        and traversed there (``dfs_mod.canonical_bfs_levels``), with no
+        Spark job. A larger graph runs the Pregel superstep loop
+        (``pregel.bfs_levels``) over the Spark edge read of the same
+        pinned snapshot. Both apply the same merge-on-read rule and give
+        the same levels."""
+        snap = self.snapshot()
+        rows = snap.local_edges(name)
+        if rows is None:
+            levels = pregel.bfs_levels(snap.edges(name).select("src", "dst"),
+                                       [start])
             return levels.select(F.col("vid").cast("int").alias("vertex"), "level")
         levels = dfs_mod.canonical_bfs_levels(dfs_mod.adjacency(rows), start)
         return self._int_frame(vertex=list(levels), level=list(levels.values()))
@@ -2704,13 +2844,20 @@ class GraphEngine:
         """Deterministic canonical-DFS respec of the reference's racy
         concurrent DFS (SURVEY §2.1 A2-3): ``(leaf)``, 1-indexed.
 
-        The graph's edges are read in one collect and traversed on the
-        driver (``dfs_mod.canonical_dfs_leaves``). DFS is sequential,
-        so one process holds the whole graph whatever its size; a graph
-        over ``dfs_mod.MAX_DFS_VERTICES`` source vertices raises. The
-        batched :meth:`dfs_leaves_all` runs one ``applyInPandas`` group
-        per graph instead."""
-        adj = dfs_mod.adjacency(self.edges(name).select("src", "dst").collect())
+        The graph's edges are traversed on the driver
+        (``dfs_mod.canonical_dfs_leaves``). A graph within the
+        reference's envelope is read there too, with no Spark job
+        (:meth:`GraphSnapshot.local_edges`); a larger one is collected
+        from the Spark edge read of the same pinned snapshot. DFS is
+        sequential, so one process holds the whole graph whatever its
+        size; a graph over ``dfs_mod.MAX_DFS_VERTICES`` source vertices
+        raises. The batched :meth:`dfs_leaves_all` runs one
+        ``applyInPandas`` group per graph instead."""
+        snap = self.snapshot()
+        rows = snap.local_edges(name)
+        if rows is None:
+            rows = snap.edges(name).select("src", "dst").collect()
+        adj = dfs_mod.adjacency(rows)
         dfs_mod.check_dfs_envelope(name, adj)
         return self._int_frame(leaf=dfs_mod.canonical_dfs_leaves(adj, start))
 

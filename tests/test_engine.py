@@ -449,6 +449,9 @@ def test_legacy_unweighted_commits_read_as_weight_one(engine, spark):
      .write.partitionBy("graph").parquet(path))
     assert {(r["src"], r["dst"], r["w"])
             for r in engine.weighted_edges("L").collect()} == {(1, 2, 1)}
+    # the driver-side read of the same file reads w as None
+    assert engine.snapshot()._local_chain(
+        "edges", "L", ("src", "dst", "w")) == [(cid, [(1, 2, None)])]
     engine.compact()
     cid2 = engine.manifests.load()["graphs"]["L"]
     assert cid2 != cid

@@ -315,6 +315,9 @@ def test_engine_lifecycle_on_scheme_store_path(spark, tmp_path):
     eng.add_graph("A", "2\n0 1\n0 0\n")
     eng.modify_graph("A", "3\n0 0 0\n0 0 0\n1 0 0\n")
     assert {(r["src"], r["dst"]) for r in eng.edges("A").collect()} == {(3, 1)}
+    # the driver-side read goes through the same FileSystem
+    assert eng.snapshot().local_edges("A") == [(3, 1)]
+    assert sorted(map(tuple, eng.bfs("A", 3).collect())) == [(1, 1), (3, 0)]
     assert {(r["src"], r["dst"])
             for r in eng.snapshot(seq=1).edges("A").collect()} == {(1, 2)}
     eng.compact()

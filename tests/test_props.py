@@ -14,8 +14,6 @@ from graphdatabase_spark.engine import GraphEngine
 
 from tests.oracle import bfs_levels, dfs_leaves
 
-pytestmark = pytest.mark.slow  # heavyweight integration module: full-suite tier (pyproject.toml)
-
 
 @pytest.fixture()
 def engine(spark, tmp_path):

@@ -1,17 +1,18 @@
 """One-graph requests read only that graph's partition dirs, and a
-graph within the reference's envelope is traversed in one bounded read.
+graph within the reference's envelope is read and traversed on the
+driver.
 
 The store below has more partition dirs per commit than Spark's
 parallel-listing threshold (32), in both the flat (``graph=<name>``)
 and the bucketed (``gb=<bucket>``) layout. A read of such a commit dir
 starts with a distributed "Listing leaf files" job, one task per dir;
 a one-graph read must not run it. Two graphs sit on either side of
-``LOCAL_EDGE_ROWS``: at the cap, ``bfs`` and ``dfs_leaves`` run in at
-most two Spark jobs; one row over, ``bfs`` takes the Pregel loop and
-``dfs_leaves`` still runs on the driver.
+``LOCAL_EDGE_ROWS``: at the cap, and for every smaller graph, ``bfs``
+and ``dfs_leaves`` run no Spark job; one row over, ``bfs`` takes the
+Pregel loop and ``dfs_leaves`` collects the Spark read.
 Every result is checked against a pure-Python model of the store and
 the oracles in ``tests/oracle.py``, which share no code with the
-engine.
+engine, and the driver-side read against the Spark read.
 """
 
 import contextlib
@@ -20,6 +21,7 @@ import zlib
 
 import pytest
 
+from graphdatabase_spark import engine as engine_mod
 from graphdatabase_spark.engine import LOCAL_EDGE_ROWS, GraphEngine
 from graphdatabase_spark.operators import dfs as dfs_mod
 
@@ -32,7 +34,7 @@ SPECIAL = ("G#1", "G 2", "a=b", "ü")   # names the writer percent-escapes
 EMPTY = "Z0"          # an N = 0 graph
 AT_CAP = "K100"       # 100 x 100 all-ones matrix: LOCAL_EDGE_ROWS edge rows
 OVER_CAP = "K101"     # 101 x 101 all-ones matrix: over LOCAL_EDGE_ROWS
-MAX_LOCAL_JOBS = 2    # jobs of an in-envelope traversal on a delta-free chain
+MAX_SPARK_JOBS = 2    # jobs of the Spark collect of dfs_leaves over the cap
 
 
 class Model:
@@ -62,6 +64,10 @@ class Model:
 
     def delete(self, g: str, keys) -> None:
         self.edges[g] -= set(keys)
+
+    def add_vertices(self, g: str, vids) -> None:
+        self.verts[g] |= set(vids)
+        self.meta[g].append(max(vids))
 
 
 def _plain_names() -> list[str]:
@@ -150,6 +156,33 @@ def _build(spark, root, buckets):
         batch, "graph string, src int, dst int"), delete=True, mode="delta")
     assert adopted == set(SPECIAL) and not skipped
 
+    # an append after the delta delete re-inserts a deleted key: it
+    # lands after the delete marker in the chain, so it reads back
+    batch = [(g, 1, 2) for g in SPECIAL]
+    for g in SPECIAL:
+        model.append(g, [(1, 2)])
+    assert eng.append_edges(spark.createDataFrame(
+        batch, "graph string, src int, dst int")) is True
+
+    # an append of a key the graph already holds, then a delta upsert of
+    # that key, which collapses the two base rows into one
+    g = plain[1]
+    key = sorted(model.edges[g])[0]
+    assert eng.append_edges(spark.createDataFrame(
+        [(g, *key)], "graph string, src int, dst int")) is True
+    eng.merge_edges(spark.createDataFrame(
+        [(g, *key, 4)], "graph string, src int, dst int, w int"),
+        mode="delta")
+    model.merge(g, [key])
+
+    # a vertex delta: a typed-property row for a vid new to the graph
+    g = plain[2]
+    vid = max(model.verts[g]) + 1
+    eng.set_vertex_props(spark.createDataFrame(
+        [(g, vid, "new")], "graph string, vid int, tag string"),
+        mode="delta")
+    model.add_vertices(g, [vid])
+
     # the two sides of the local-traversal cap, on chains with no delta
     for g, n in ((AT_CAP, 100), (OVER_CAP, 101)):
         edges = {(i, j) for i in range(1, n + 1) for j in range(1, n + 1)}
@@ -215,10 +248,9 @@ def _check_graph(eng, model, sc, g: str) -> dict[str, int]:
             got = run()
         assert got == want, (op, g)
         descs = _job_descriptions(sc, group)
-        if (g, op) == (EMPTY, "bfs"):
-            # the bounded edge read of a graph with no edge rows scans
-            # no partition and runs no job, so the no-listing check
-            # below holds trivially here
+        if op in ("bfs", "dfs_leaves") and g != OVER_CAP:
+            # in the envelope the graph is read and traversed on the
+            # driver, so the no-listing check below holds trivially
             assert not descs, (op, g, descs)
         else:
             assert descs, (op, g, "no job was tagged with the group")
@@ -233,14 +265,44 @@ def test_single_graph_reads(spark, store):
     sc = spark.sparkContext
     assert len(model.edges) >= 40
     jobs = {g: _check_graph(eng, model, sc, g) for g in sorted(model.edges)}
-    # in the envelope, on a chain with no delta: one bounded read
-    for g in (EMPTY, AT_CAP):
-        for op in ("bfs", "dfs_leaves"):
-            assert jobs[g][op] <= MAX_LOCAL_JOBS, (g, op, jobs[g][op])
     # one row over the cap, bfs runs the Pregel superstep loop, while
     # dfs_leaves still collects the graph in one read
-    assert jobs[OVER_CAP]["bfs"] > MAX_LOCAL_JOBS, jobs[OVER_CAP]
-    assert jobs[OVER_CAP]["dfs_leaves"] <= MAX_LOCAL_JOBS, jobs[OVER_CAP]
+    assert jobs[OVER_CAP]["bfs"] > MAX_SPARK_JOBS, jobs[OVER_CAP]
+    assert jobs[OVER_CAP]["dfs_leaves"] <= MAX_SPARK_JOBS, jobs[OVER_CAP]
+
+
+def test_driver_read_matches_spark_read(spark, store):
+    """For every graph, the driver-side read returns the multiset of
+    rows the Spark read of the same snapshot returns, merge-on-read
+    included, and runs no Spark job. ``K101`` is over the edge cap and
+    gets None, so its traversals take the Spark read."""
+    eng, model = store
+    sc = spark.sparkContext
+    snap = eng.snapshot()
+    assert sorted(snap.graphs()) == sorted(model.edges)
+    for g in snap.graphs():
+        group = f"driver-read-{g}"
+        with _job_group(sc, group):
+            edges, vids = snap.local_edges(g), snap.local_vertices(g)
+        assert not _job_descriptions(sc, group), g
+        assert [(v,) for v in sorted(vids)] == _sorted_rows(
+            snap.vertices(g), "vid"), g
+        if g == OVER_CAP:
+            assert edges is None
+            continue
+        assert sorted(edges) == _sorted_rows(snap.edges(g), "src", "dst"), g
+    assert snap.local_edges("no such graph") == []
+
+
+def test_over_budget_graph_takes_the_spark_read(store, monkeypatch):
+    """A graph whose files are longer than LOCAL_READ_BYTES is not
+    fetched: the driver-side read gets None and bfs runs Pregel over
+    the Spark read, to the same levels."""
+    eng, model = store
+    monkeypatch.setattr(engine_mod, "LOCAL_READ_BYTES", 1)
+    assert eng.snapshot().local_edges("G#1") is None
+    assert _sorted_rows(eng.bfs("G#1", 1), "vertex", "level") == sorted(
+        bfs_levels(model.edges["G#1"], 1).items())
 
 
 def test_dfs_leaves_vertex_guard(store, monkeypatch):

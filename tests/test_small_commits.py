@@ -2,15 +2,17 @@
 at most that many cells, commit from the driver.
 
 An append or a delta merge whose batch fits the cap reads it in one
-bounded read, checks it on the driver and writes its Parquet files
-without a Spark job, so the commit runs at most two jobs and leaves no
-``_SUCCESS`` marker. One row more and the batch takes the distributed
+bounded read, checks it on the driver, reads the touched graphs' known
+vertex ids on the driver and writes its Parquet files without a Spark
+job, so the commit runs at most one job and leaves no ``_SUCCESS``
+marker. One row more and the batch takes the distributed
 write. An ``add_graph`` / ``modify_graph`` of N ≤ 100 vertices parses
 its text on the driver and runs no job; N = 101 takes the Spark melt.
 On both sides of the caps, in the flat and the bucketed layout, every
 commit must read back what the store model in ``tests/oracle.py``
 says, and malformed input must raise on either path before any file
-lands.
+lands; so must a malformed matrix that takes the Spark melt, from
+``add_graph`` or ``ingest_dir``.
 """
 
 import contextlib
@@ -18,13 +20,14 @@ import math
 import os
 
 import pytest
+from pyspark.errors import NumberFormatException
 
 from graphdatabase_spark.engine import LOCAL_EDGE_ROWS, GraphEngine
 
 from tests.oracle import StoreModel, bfs_levels
 
 BUCKETS = 8
-MAX_LOCAL_JOBS = 2
+MAX_LOCAL_JOBS = 1
 MATRIX_CAP = math.isqrt(LOCAL_EDGE_ROWS)   # N = 100: N x N cells
 BASE = "A"       # a graph the store has before any batch
 NEW = "B#1"      # a graph the first append creates; the writer escapes it
@@ -250,4 +253,29 @@ def test_malformed_matrix_raises_before_any_file(spark, tmp_path, buckets):
             with pytest.raises(ValueError, match="32-bit integer"):
                 eng.modify_graph(g, text)
             assert _files(tmp_path / "store") == files, (g, text)
+    assert eng.manifests.load()["seq"] == seq
+
+
+@pytest.mark.parametrize("buckets", [None, BUCKETS], ids=["flat", "bucketed"])
+def test_malformed_spark_melt_raises_before_any_file(spark, tmp_path, buckets):
+    """An over-cap matrix and a directory ingest take the Spark melt,
+    whose edges write casts every cell: it must fail before the
+    vertices and meta files of the commit land."""
+    eng, _ = _store(spark, tmp_path, buckets)
+    seq = eng.manifests.load()["seq"]
+    files = _files(tmp_path / "store")
+    n = MATRIX_CAP + 1
+    cells = [["1"] * n for _ in range(n)]
+    cells[n // 2][3] = "x"
+    text = "\n".join([str(n)] + [" ".join(row) for row in cells]) + "\n"
+    with pytest.raises(NumberFormatException, match="CAST_INVALID_INPUT"):
+        eng.add_graph(NEW, text)
+    assert _files(tmp_path / "store") == files
+    inputs = tmp_path / "inputs"
+    inputs.mkdir()
+    (inputs / "good.txt").write_text(_matrix(3, _graph_edges(3)))
+    (inputs / "bad.txt").write_text("2\n0 1\n1 y\n")
+    with pytest.raises(NumberFormatException, match="CAST_INVALID_INPUT"):
+        eng.ingest_dir(str(inputs))
+    assert _files(tmp_path / "store") == files
     assert eng.manifests.load()["seq"] == seq
