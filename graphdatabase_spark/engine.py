@@ -37,12 +37,20 @@ path keeps manifests in a POSIX directory next to the data, a URI
 scheme path (``hdfs://``, ``file:``, ``abfs://``, …) keeps them on
 that same Hadoop filesystem — and the same four blob calls map onto
 an object store's conditional put. The data-file layout needs no
-change, commit dirs are immutable. Publishing is an optimistic compare-and-swap append
-(put-if-absent on the next sequence number, re-read + re-merge on a
-lost race), which upgrades the reference's single-writer assumption
-(one primary server serializes writes, ``load_balancer.c``) to
-multi-writer safety: concurrent writers to different graphs both
-land, and compaction merges around — never over — a concurrent write.
+change, commit dirs are immutable. Every write lands its files first
+and then publishes through one routine, :meth:`GraphEngine._publish`:
+an optimistic compare-and-swap append (put-if-absent on the next
+sequence number, re-read + re-merge on a lost race), which upgrades
+the reference's single-writer assumption (one primary server
+serializes writes, ``load_balancer.c``) to multi-writer safety. A
+write moves its graphs' pointers by one of three disciplines:
+add/modify OVERWRITES them, an append or delta write EXTENDS their
+chains, and a copy-on-write rewrite (merge, vertex props, vertex
+delete, compaction) FLIPS only the pointers unchanged since it pinned
+its snapshot. So concurrent writers to different graphs both land,
+and a rewrite merges around — never over — a concurrent write. One
+builder, :func:`_next_manifest`, decides which manifest keys carry
+forward.
 Old commits are retained (time travel: ``snapshot(seq=N)`` pins any
 historical manifest) until maintenance runs: :meth:`GraphEngine.compact` rewrites
 the current state into one commit (collapsing the one-scan-per-live-
@@ -54,6 +62,7 @@ reference.
 
 from __future__ import annotations
 
+import functools
 import os
 import time
 import uuid
@@ -93,19 +102,43 @@ LOCAL_EDGE_ROWS = 10_000
 LOCAL_READ_BYTES = 16 * LOCAL_EDGE_ROWS
 
 
-def _leaf_dirs(spark: SparkSession, graphs, buckets: int | None
-               ) -> dict[str, str]:
-    """Each graph's partition dir under a commit dir: ``gb=<bucket>`` in
-    a bucketed store, else ``graph=<name>`` escaped by Spark's own
-    ``ExternalCatalogUtils.escapePathName``, the function the writer's
-    ``partitionBy`` names the dir with. A graph called "G#1" lives in
-    ``graph=G%231``; a raw-name path would not exist and read as empty."""
-    if buckets:
-        return {g: f"gb={metastore.graph_bucket(g, buckets)}"
-                for g in graphs}
-    esc = (spark._jvm.org.apache.spark.sql.catalyst.catalog
-           .ExternalCatalogUtils.escapePathName)
-    return {g: f"graph={esc(g)}" for g in graphs}
+class _StoreFs:
+    """The store's Hadoop FileSystem and the JVM names the driver-side
+    file IO uses, each resolved once per engine on first use: a
+    ``spark._jvm.org.apache...`` walk costs one Py4J round trip per
+    package segment. Every path under the store shares the one
+    FileSystem, so local, ``file:`` and ``hdfs://`` stores take one
+    path."""
+
+    def __init__(self, spark: SparkSession, store: str):
+        self.spark = spark
+        self.store = store
+
+    @functools.cached_property
+    def Path(self):
+        return self.spark._jvm.org.apache.hadoop.fs.Path
+
+    @functools.cached_property
+    def fs(self):
+        return self.Path(self.store).getFileSystem(
+            self.spark._jsc.hadoopConfiguration())
+
+    @functools.cached_property
+    def _escape(self):
+        return (self.spark._jvm.org.apache.spark.sql.catalyst.catalog
+                .ExternalCatalogUtils.escapePathName)
+
+    def leaf_dirs(self, graphs, buckets: int | None) -> dict[str, str]:
+        """Each graph's partition dir under a commit dir: ``gb=<bucket>``
+        in a bucketed store, else ``graph=<name>`` escaped by Spark's
+        own ``ExternalCatalogUtils.escapePathName``, the function the
+        writer's ``partitionBy`` names the dir with. A graph called
+        "G#1" lives in ``graph=G%231``; a raw-name path would not exist
+        and read as empty."""
+        if buckets:
+            return {g: f"gb={metastore.graph_bucket(g, buckets)}"
+                    for g in graphs}
+        return {g: f"graph={self._escape(g)}" for g in graphs}
 
 
 def _empty_frame(spark: SparkSession, ddl: str) -> DataFrame:
@@ -147,9 +180,9 @@ def _pack_ids(df: DataFrame, gidx: DataFrame, stride: int,
 
 
 def _check_layout(prev: dict | None, eff: int | None) -> None:
-    """Publish-time guard inside every commit closure: the data files
-    of this write were laid out for ``eff`` buckets (resolved from the
-    snapshot pinned at write start); if a CAS race establishes a
+    """Publish-time guard in every data write's CAS closure: the data
+    files of this write were laid out for ``eff`` buckets (resolved from
+    the snapshot pinned at write start); if a CAS race establishes a
     DIFFERENT layout first (two first-writers on a virgin store with
     different configs), publishing would register wrongly-partitioned
     dirs — fail loudly instead."""
@@ -220,14 +253,19 @@ def _prop_schema(df: DataFrame, core: tuple[str, ...],
     return props
 
 
-def _canon_props(df: DataFrame, props: dict[str, str], declared: dict,
+def _canon_props(df: DataFrame, props: dict[str, str],
+                 manifest: dict | None, table: str,
                  op: str) -> tuple[DataFrame, dict[str, str]]:
     """Rename a batch's property columns to the STORE's declared
     spelling when they differ only by case (Spark resolves columns
     case-insensitively, so 'Kind' and 'kind' are the same column —
     declaring both in the manifest would make every later props-aware
     read die on COLUMN_ALREADY_EXISTS). Returns the renamed frame and
-    the canonical-name property schema."""
+    the canonical-name property schema, checked against the pinned
+    ``manifest``'s schema of ``table`` (:func:`_merge_props`) so a type
+    conflict raises before any file lands; the publish re-checks it
+    against the newest manifest."""
+    declared = (manifest or {}).get("props", {}).get(table, {})
     low = {n.lower(): n for n in declared}
     out: dict[str, str] = {}
     for name, typ in props.items():
@@ -235,6 +273,7 @@ def _canon_props(df: DataFrame, props: dict[str, str], declared: dict,
         if canon != name:
             df = df.withColumnRenamed(name, canon)
         out[canon] = typ
+    _merge_props(declared, out, op, _blocked_physicals(manifest, table))
     return df, out
 
 
@@ -280,28 +319,40 @@ def _merge_props(declared: dict, batch: dict, op: str,
     return out
 
 
-def _carry_vdeltas(prev: dict | None, body: dict) -> dict:
-    """Carry the manifest's delta-commit classification sets —
-    ``vdeltas`` (vertex-prop deltas, set_vertex_props(mode="delta"))
-    and ``edeltas`` (edge deltas, merge_edges(mode="delta")) — through
-    a write that doesn't manage them itself. MANDATORY in every
-    manifest update function: dropping a set would downgrade chained
-    delta commits to plain base rows at read time (stale rows
-    resurface, delete markers become w=0 junk). Stale ids (deltas no
-    longer referenced by any chain after a COW flip or compaction) are
-    harmless — the sets only classify commit ids that DO appear in
-    chains; compact() prunes them.
+def _next_manifest(prev: dict | None, **keys) -> dict:
+    """The body of the manifest that follows ``prev``: the one place
+    that knows which keys a publish carries forward. ``keys`` replaces
+    any of ``commit``, ``graphs``, ``txns``, ``props``, ``vdeltas``,
+    ``edeltas``, ``colmap`` and ``ptomb``; an empty value clears it.
+    Every key not given carries over from ``prev``:
 
-    Also carries the COLUMN-MAPPING documents — ``colmap``
-    ({table: {logical: physical}}, written by RENAME COLUMN) and
-    ``ptomb`` ({table: [tombstoned physical, ...]}, written by DROP
-    COLUMN) — under the same rule: losing colmap would make every
-    post-rename read scan the logical name (absent from the data
-    files → silent NULLs), losing ptomb would let a dropped column's
-    stale values resurrect under a re-declared name."""
-    for k in ("vdeltas", "edeltas", "colmap", "ptomb"):
-        v = (prev or {}).get(k)
-        if v and k not in body:
+    - ``txns``, the exactly-once ledger ``{app: max version}``: a
+      replay after any later commit, a compaction among them, must
+      still no-op;
+    - ``props``, the store-wide property schema;
+    - ``vdeltas`` / ``edeltas``, the delta-commit sets: dropping one
+      would read chained deltas as plain base rows (stale rows
+      resurface, delete markers become w = 0 rows). Ids no chain
+      references any more are harmless; :meth:`GraphEngine.compact`
+      prunes them;
+    - ``colmap`` ({table: {logical: physical}}, from RENAME COLUMN)
+      and ``ptomb`` ({table: [physical, ...]}, from DROP COLUMN):
+      losing colmap reads every renamed column as NULL, losing ptomb
+      lets a dropped column's stale values come back under a
+      re-declared name;
+    - ``commit`` and ``graphs``, for the metadata-only writes.
+
+    ``seq`` and ``ts`` are stamped by :meth:`metastore.ManifestLog.commit`
+    and ``chunks``, ``buckets`` and ``n_graphs`` by its encoder, so
+    none of them carries. An empty ``props``, delta set, ``colmap``
+    or ``ptomb`` is left out."""
+    m = prev or {}
+    body = {"commit": keys.get("commit", m.get("commit")),
+            "graphs": keys.get("graphs", m.get("graphs", {})),
+            "txns": keys.get("txns", m.get("txns", {}))}
+    for k in ("props", "vdeltas", "edeltas", "colmap", "ptomb"):
+        v = keys[k] if k in keys else m.get(k)
+        if v:
             body[k] = v
     return body
 
@@ -337,9 +388,11 @@ class GraphSnapshot:
     commit set it pinned — concurrent writes publish new manifests and
     new commit dirs, never touching the files this snapshot reads."""
 
-    def __init__(self, spark: SparkSession, store: str, manifest: dict | None):
+    def __init__(self, spark: SparkSession, store: str, manifest: dict | None,
+                 fs: _StoreFs):
         self.spark = spark
         self.store = store
+        self._fs = fs
         self.manifest = manifest
         # bucketed layout (see GraphEngine): data dirs are partitioned
         # by gb = crc32(graph) % buckets instead of by graph name
@@ -380,9 +433,7 @@ class GraphSnapshot:
         paths = [root]
         if leaves is not None:
             reader = reader.option("basePath", root)
-            Path = self.spark._jvm.org.apache.hadoop.fs.Path
-            fs = Path(root).getFileSystem(
-                self.spark._jsc.hadoopConfiguration())
+            fs, Path = self._fs.fs, self._fs.Path
             paths = [p for p in (os.path.join(root, leaf) for leaf in leaves)
                      if fs.exists(Path(p))]
         try:
@@ -407,7 +458,7 @@ class GraphSnapshot:
         job, one task per dir, before any row is read."""
         if set(self._by_commit.get(cid, ())) <= set(names):
             return None
-        leaves = set(_leaf_dirs(self.spark, names, self.buckets).values())
+        leaves = set(self._fs.leaf_dirs(names, self.buckets).values())
         if self.buckets and len(leaves) == self.buckets:
             return None
         return sorted(leaves)
@@ -737,8 +788,8 @@ class GraphSnapshot:
         chain order, where ``rows`` are ``g``'s ``cols`` tuples of
         ``table`` in that commit: the read-side twin of
         ``GraphEngine._driver_write``, with no Spark job. The leaf dirs
-        (:func:`_leaf_dirs`) are listed and their files fetched through
-        the store's Hadoop FileSystem, so local, ``file:`` and
+        (:meth:`_StoreFs.leaf_dirs`) are listed and their files fetched
+        through the store's Hadoop FileSystem, so local, ``file:`` and
         ``hdfs://`` stores take one path, and pyarrow decodes them.
 
         None when ``g`` is outside the envelope. No byte is fetched when
@@ -762,10 +813,8 @@ class GraphSnapshot:
         if ptr is None:
             return []
         chain = _cids(ptr)
-        leaf = _leaf_dirs(self.spark, [g], self.buckets)[g]
-        Path = self.spark._jvm.org.apache.hadoop.fs.Path
-        fs = Path(self.store).getFileSystem(
-            self.spark._jsc.hadoopConfiguration())
+        leaf = self._fs.leaf_dirs([g], self.buckets)[g]
+        fs, Path = self._fs.fs, self._fs.Path
         files, size = [], 0
         for pos, cid in enumerate(chain):
             leaf_dir = Path(os.path.join(self.store, "data", table,
@@ -882,6 +931,7 @@ class GraphEngine:
                                                buckets=buckets)
         self._compact_max_deltas: int | None = None
         self._compact_max_chain: int | None = None
+        self._fs = _StoreFs(spark, store_path)
 
     def compact_policy(self, max_deltas: int | None = None,
                        max_chain: int | None = None) -> None:
@@ -1044,13 +1094,12 @@ class GraphEngine:
         writer that died at the manifest CAS must replace that
         orphan's files whole, and not keep its partition dirs beside
         its own."""
-        Path = self.spark._jvm.org.apache.hadoop.fs.Path
+        fs, Path = self._fs.fs, self._fs.Path
         root = os.path.join(self.store, "data", table, f"c={cid}")
-        fs = Path(root).getFileSystem(self.spark._jsc.hadoopConfiguration())
         fs.delete(Path(root), True)
         fs.mkdirs(Path(root))
         names = rows.column("graph").to_pylist()
-        leaf = _leaf_dirs(self.spark, set(names), buckets)
+        leaf = self._fs.leaf_dirs(set(names), buckets)
         if not buckets:
             rows = rows.drop_columns(["graph"])
         parts: dict[str, list[int]] = {}
@@ -1089,7 +1138,7 @@ class GraphEngine:
         eff = self._eff_buckets(self.snapshot())
         for rows, table in zip(tables, ("edges", "vertices", "meta")):
             self._driver_write(rows, table, cid, eff)
-        self._publish_overwrite(cid, eff, [name])
+        self._publish("overwrite", cid, eff, [name])
 
     # op 2 routes to the same implementation as op 1 — faithfully
     # mirroring the reference's dispatch (primary_server.c:223,
@@ -1339,52 +1388,21 @@ class GraphEngine:
             if cid in referenced:
                 return False  # replayed batch — already published
         edges, batch_props = self._validated_weights(edges, "append_edges")
-        edges, batch_props = _canon_props(
-            edges, batch_props, prev0.get("props", {}).get("edges", {}),
-            "append_edges")
-        # loud type-conflict check BEFORE any files land (re-checked
-        # inside the CAS closure against the then-current manifest)
-        _merge_props(prev0.get("props", {}).get("edges", {}),
-                     batch_props, "append_edges",
-                     _blocked_physicals(prev0, "edges"))
+        edges, batch_props = _canon_props(edges, batch_props, prev0,
+                                          "edges", "append_edges")
         eff = self._eff_buckets(snap)
         write_graphs = self._land_edge_batch(snap, edges, batch_props, cid,
                                              eff, "append_edges", "append")
         if not write_graphs:
             return False  # empty batch publishes nothing
-
-        def update(prev: dict | None) -> dict | None:
-            _check_layout(prev, eff)
-            txns = dict((prev or {}).get("txns", {}))
-            if txn_app is not None:
-                # re-checked INSIDE the CAS closure: a competing replica
-                # may have applied this version since our snapshot
-                if txns.get(txn_app, -1) >= txn_version:
-                    return None
-                txns[txn_app] = txn_version
-            graphs_map = dict(prev["graphs"]) if prev else {}
-            changed = False
-            for g in write_graphs:
-                chain = _cids(graphs_map[g]) if g in graphs_map else []
-                if cid not in chain:
-                    graphs_map[g] = chain + [cid]
-                    changed = True
-            if not changed:
-                return None
-            body = {"commit": cid, "graphs": graphs_map, "txns": txns}
-            props_doc = dict((prev or {}).get("props", {}))
-            if batch_props:
-                props_doc["edges"] = _merge_props(
-                    props_doc.get("edges", {}), batch_props, "append_edges",
-                    _blocked_physicals(prev, "edges"))
-            if props_doc:
-                body["props"] = props_doc
-            return _carry_vdeltas(prev, body)
-
-        published = self.manifests.commit(update) is not None
-        if published:
-            self._auto_compact(write_graphs)
-        return published
+        # the txn pair is re-checked inside the CAS closure: a
+        # competing replica may have applied this version since our
+        # snapshot
+        return self._publish(
+            "extend", cid, eff, write_graphs,
+            props=("edges", batch_props, "append_edges"),
+            txn=None if txn_app is None else (txn_app, txn_version)
+        ) is not None
 
     def merge_edges(self, updates: DataFrame, delete: bool = False, *,
                     pinned_snapshot: GraphSnapshot | None = None,
@@ -1462,11 +1480,7 @@ class GraphEngine:
             updates, batch_props = self._validated_weights(
                 updates, "merge_edges")
             updates, batch_props = _canon_props(
-                updates, batch_props, snap.props.get("edges", {}),
-                "merge_edges")
-            _merge_props(snap.props.get("edges", {}), batch_props,
-                         "merge_edges",
-                         _blocked_physicals(snap.manifest, "edges"))
+                updates, batch_props, snap.manifest, "edges", "merge_edges")
         if mode == "delta":
             return self._merge_edges_delta(snap, updates, batch_props,
                                            delete)
@@ -1544,46 +1558,14 @@ class GraphEngine:
             self._store_write_all(
                 [(verts, "vertices"),
                  (old_meta.unionByName(new_meta), "meta")], cid, eff)
-            pinned = (snap.manifest or {}).get("graphs", {})
-            # the CAS closure can retry; the LAST invocation is the
-            # one that published, so it overwrites (not accumulates)
-            # this cell
-            outcome: list[set] = [set()]
-
-            def update(prev: dict | None) -> dict | None:
-                _check_layout(prev, eff)
-                graphs_map = dict(prev["graphs"]) if prev else {}
-                adopted = set()
-                for g in touched:
-                    if graphs_map.get(g) == pinned.get(g):
-                        graphs_map[g] = cid
-                        adopted.add(g)
-                outcome[0] = adopted
-                if not adopted:
-                    # every touched graph's pointer moved mid-merge:
-                    # the rewrite is stale everywhere — publish
-                    # NOTHING (the c=cid dirs become orphans for
-                    # vacuum), mirroring append_edges'
-                    # changed-else-None guard, instead of a no-op
-                    # manifest whose "commit" nothing references
-                    return None
-                body = {"commit": cid, "graphs": graphs_map,
-                        "txns": (prev or {}).get("txns", {})}
-                props_doc = dict((prev or {}).get("props", {}))
-                if batch_props:
-                    props_doc["edges"] = _merge_props(
-                        props_doc.get("edges", {}), batch_props,
-                        "merge_edges",
-                        _blocked_physicals(prev, "edges"))
-                if props_doc:
-                    body["props"] = props_doc
-                return _carry_vdeltas(prev, body)
-
-            self.manifests.commit(update)
+            # when every touched pointer moved mid-merge nothing is
+            # published, and the c=cid dirs are orphans for vacuum
+            adopted = self._publish(
+                "flip", cid, eff, touched, pinned=snap.manifest,
+                props=("edges", batch_props, "merge_edges")) or frozenset()
         finally:
             merged.unpersist()
             verts.unpersist()
-        adopted = frozenset(outcome[0])
         return adopted, frozenset(touched) - adopted
 
     def set_vertex_props(self, verts: DataFrame, *,
@@ -1640,11 +1622,7 @@ class GraphEngine:
         batch_props = _prop_schema(verts, ("graph", "vid"),
                                    "set_vertex_props")
         verts, batch_props = _canon_props(
-            verts, batch_props, snap.props.get("vertices", {}),
-            "set_vertex_props")
-        _merge_props(snap.props.get("vertices", {}), batch_props,
-                     "set_vertex_props",
-                     _blocked_physicals(snap.manifest, "vertices"))
+            verts, batch_props, snap.manifest, "vertices", "set_vertex_props")
         verts = verts.select(F.col("vid").cast("int"),
                              F.col("graph").cast("string"), *batch_props)
         touched = [r["graph"]
@@ -1693,36 +1671,12 @@ class GraphEngine:
             self._store_write_all([(edges, "edges"),
                                    (new_verts, "vertices"),
                                    (meta, "meta")], cid, eff)
-            pinned = (snap.manifest or {}).get("graphs", {})
-            outcome: list[set] = [set()]
-
-            def update(prev: dict | None) -> dict | None:
-                _check_layout(prev, eff)
-                graphs_map = dict(prev["graphs"]) if prev else {}
-                adopted = set()
-                for g in touched:
-                    if graphs_map.get(g) == pinned.get(g):
-                        graphs_map[g] = cid
-                        adopted.add(g)
-                outcome[0] = adopted
-                if not adopted:
-                    return None
-                body = {"commit": cid, "graphs": graphs_map,
-                        "txns": (prev or {}).get("txns", {})}
-                props_doc = dict((prev or {}).get("props", {}))
-                if batch_props:
-                    props_doc["vertices"] = _merge_props(
-                        props_doc.get("vertices", {}), batch_props,
-                        "set_vertex_props",
-                        _blocked_physicals(prev, "vertices"))
-                if props_doc:
-                    body["props"] = props_doc
-                return _carry_vdeltas(prev, body)
-
-            self.manifests.commit(update)
+            adopted = self._publish(
+                "flip", cid, eff, touched, pinned=snap.manifest,
+                props=("vertices", batch_props, "set_vertex_props")
+            ) or frozenset()
         finally:
             new_verts.unpersist()
-        adopted = frozenset(outcome[0])
         return adopted, frozenset(touched) - adopted
 
     def _merge_edges_delta(self, snap: GraphSnapshot, updates: DataFrame,
@@ -1745,32 +1699,8 @@ class GraphEngine:
             "delete" if delete else "upsert")
         if not touched:
             return frozenset(), frozenset()
-
-        def update(prev: dict | None) -> dict | None:
-            _check_layout(prev, eff)
-            graphs_map = dict(prev["graphs"]) if prev else {}
-            for g in touched:
-                chain = _cids(graphs_map[g]) if g in graphs_map else []
-                if cid not in chain:
-                    graphs_map[g] = chain + [cid]
-            body = {"commit": cid, "graphs": graphs_map,
-                    "txns": (prev or {}).get("txns", {}),
-                    "edeltas": sorted(
-                        set((prev or {}).get("edeltas", [])) | {cid})}
-            props_doc = dict((prev or {}).get("props", {}))
-            if batch_props:
-                props_doc["edges"] = _merge_props(
-                    props_doc.get("edges", {}), batch_props, "merge_edges",
-                    _blocked_physicals(prev, "edges"))
-            if props_doc:
-                body["props"] = props_doc
-            return _carry_vdeltas(prev, body)
-
-        # gate compaction on the publish actually landing (mirrors
-        # append_edges): commit() returning None means nothing was
-        # published, and compacting then would be work on a no-op
-        if self.manifests.commit(update) is not None:
-            self._auto_compact(touched)
+        self._publish("extend", cid, eff, touched, deltas="edeltas",
+                      props=("edges", batch_props, "merge_edges"))
         return frozenset(touched), frozenset()
 
     def _set_vertex_props_delta(self, snap: GraphSnapshot,
@@ -1795,35 +1725,9 @@ class GraphEngine:
         # both O(batch) plans over the caller's batch — overlap them
         self._store_write_all([(verts, "vertices"), (meta, "meta")],
                               cid, eff)
-
-        def update(prev: dict | None) -> dict | None:
-            _check_layout(prev, eff)
-            graphs_map = dict(prev["graphs"]) if prev else {}
-            for g in touched:
-                chain = _cids(graphs_map[g]) if g in graphs_map else []
-                if cid not in chain:
-                    graphs_map[g] = chain + [cid]
-            body = {"commit": cid, "graphs": graphs_map,
-                    "txns": (prev or {}).get("txns", {})}
-            props_doc = dict((prev or {}).get("props", {}))
-            if batch_props:
-                props_doc["vertices"] = _merge_props(
-                    props_doc.get("vertices", {}), batch_props,
-                    "set_vertex_props",
-                    _blocked_physicals(prev, "vertices"))
-                body["vdeltas"] = sorted(
-                    set((prev or {}).get("vdeltas", [])) | {cid})
-            elif (prev or {}).get("vdeltas"):
-                body["vdeltas"] = prev["vdeltas"]
-            if props_doc:
-                body["props"] = props_doc
-            return _carry_vdeltas(prev, body)
-
-        # gate compaction on the publish actually landing (mirrors
-        # append_edges): commit() returning None means nothing was
-        # published, and compacting then would be work on a no-op
-        if self.manifests.commit(update) is not None:
-            self._auto_compact(touched)
+        self._publish("extend", cid, eff, touched,
+                      deltas="vdeltas" if batch_props else None,
+                      props=("vertices", batch_props, "set_vertex_props"))
         return frozenset(touched), frozenset()
 
     def declare_prop(self, table: str, name: str, ddl_type: str) -> bool:
@@ -1878,13 +1782,9 @@ class GraphEngine:
             if merged == declared:
                 return None   # already declared at this type: no-op
             props_doc[table] = merged
-            body = {"commit": (prev or {}).get("commit"),
-                    "graphs": dict((prev or {}).get("graphs", {})),
-                    "txns": (prev or {}).get("txns", {}),
-                    "props": props_doc}
-            return _carry_vdeltas(prev, body)
+            return {"props": props_doc}
 
-        return self.manifests.commit(update) is not None
+        return self._publish(keys=update) is not None
 
     def rename_prop(self, table: str, old: str, new: str) -> bool:
         """Rename a declared edge/vertex property — the ``ALTER TABLE
@@ -1955,17 +1855,9 @@ class GraphEngine:
             if phys != new:
                 tmap[new] = phys
             cmap_doc = {t: m for t, m in cmap_doc.items() if m}
-            body = {"commit": (prev or {}).get("commit"),
-                    "graphs": dict((prev or {}).get("graphs", {})),
-                    "txns": (prev or {}).get("txns", {}),
-                    "props": props_doc}
-            if cmap_doc:
-                body["colmap"] = cmap_doc
-            else:
-                body["colmap"] = {}   # overrides _carry_vdeltas
-            return _carry_vdeltas(prev, body)
+            return {"props": props_doc, "colmap": cmap_doc}
 
-        return self.manifests.commit(update) is not None
+        return self._publish(keys=update) is not None
 
     def drop_prop(self, table: str, name: str) -> bool:
         """Drop a declared edge/vertex property — ``ALTER TABLE …
@@ -2004,15 +1896,10 @@ class GraphEngine:
             tomb_doc.setdefault(table, [])
             if phys not in tomb_doc[table]:
                 tomb_doc[table] = sorted(tomb_doc[table] + [phys])
-            body = {"commit": (prev or {}).get("commit"),
-                    "graphs": dict((prev or {}).get("graphs", {})),
-                    "txns": (prev or {}).get("txns", {}),
-                    "colmap": cmap_doc, "ptomb": tomb_doc}
-            if props_doc:
-                body["props"] = props_doc
-            return _carry_vdeltas(prev, body)
+            return {"props": props_doc, "colmap": cmap_doc,
+                    "ptomb": tomb_doc}
 
-        return self.manifests.commit(update) is not None
+        return self._publish(keys=update) is not None
 
     def delete_vertices(self, keys: DataFrame, *,
                         pinned_snapshot: GraphSnapshot | None = None
@@ -2063,29 +1950,8 @@ class GraphEngine:
         # meta) sharing only the batch-sized key set — overlap them
         self._store_write_all([(edges, "edges"), (verts, "vertices"),
                                (meta, "meta")], cid, eff)
-        pinned = (snap.manifest or {}).get("graphs", {})
-        outcome: list[set] = [set()]
-
-        def update(prev: dict | None) -> dict | None:
-            _check_layout(prev, eff)
-            graphs_map = dict(prev["graphs"]) if prev else {}
-            adopted = set()
-            for g in touched:
-                if graphs_map.get(g) == pinned.get(g):
-                    graphs_map[g] = cid
-                    adopted.add(g)
-            outcome[0] = adopted
-            if not adopted:
-                return None  # every pointer moved mid-delete: publish
-                # nothing (the c=cid dirs become vacuum orphans)
-            body = {"commit": cid, "graphs": graphs_map,
-                    "txns": (prev or {}).get("txns", {})}
-            if (prev or {}).get("props"):
-                body["props"] = dict(prev["props"])
-            return _carry_vdeltas(prev, body)
-
-        self.manifests.commit(update)
-        adopted = frozenset(outcome[0])
+        adopted = self._publish("flip", cid, eff, touched,
+                                pinned=snap.manifest) or frozenset()
         return adopted, frozenset(touched) - adopted
 
     def _write(self, lines: DataFrame,
@@ -2097,7 +1963,7 @@ class GraphEngine:
         One COMMIT: land all three tables' files under a fresh
         immutable c=<cid> directory (one distributed write each, still
         graph-partitioned so single-graph reads prune by path), then
-        publish with :meth:`_publish_overwrite`. The meta table records
+        publish with :meth:`_publish`. The meta table records
         every graph — including N=0 graphs, whose edge/vertex files
         are legitimately absent (the reference's G12.txt edge case):
         a modify that EMPTIES any number of graphs needs no per-graph
@@ -2128,36 +1994,108 @@ class GraphEngine:
             # catalog, not a bigger manifest.
             write_graphs = [r["graph"] for r in
                             meta.select("graph").distinct().collect()]
-        self._publish_overwrite(cid, eff, write_graphs)
-
-    def _publish_overwrite(self, cid: str, eff: int | None,
-                           graphs: list[str]) -> None:
-        """Publish a manifest pointing every graph in ``graphs`` at
-        commit ``cid`` — and every other graph at whatever commit
-        already served it. Readers resolve the manifest once per
-        snapshot, so they see the whole write or none of it."""
-
-        def update(prev: dict | None) -> dict:
-            # Pure merge onto whatever manifest is newest AT PUBLISH
-            # TIME: on a lost CAS race this re-applies over the
-            # winner's map, so two writers to different graphs both
-            # land (the multi-writer analogue of the reference's
-            # per-graph RW lock).
-            _check_layout(prev, eff)
-            graphs_map = dict(prev["graphs"]) if prev else {}
-            graphs_map.update({g: cid for g in graphs})
-            body = {"commit": cid, "graphs": graphs_map,
-                    "txns": (prev or {}).get("txns", {})}
-            if (prev or {}).get("props"):
-                # the store-wide property schema carries forward; the
-                # overwritten graphs' new commit simply has no values
-                # for those columns (NULL-backfilled reads)
-                body["props"] = prev["props"]
-            return _carry_vdeltas(prev, body)
-
-        self.manifests.commit(update)
+        self._publish("overwrite", cid, eff, write_graphs)
 
     # -- manifest commit log ----------------------------------------------
+
+    def _publish(self, how: str | None = None, cid: str | None = None,
+                 eff: int | None = None, graphs=(), *,
+                 pinned: dict | None = None,
+                 props: tuple[str, dict, str] | None = None,
+                 txn: tuple[str, int] | None = None,
+                 deltas: str | None = None, prune: bool = False,
+                 keys=None) -> frozenset | None:
+        """Publish one write's manifest by compare-and-swap, after all of
+        its files have landed: the one routine that calls
+        ``manifests.commit``. Its closure is re-applied to the newest
+        manifest on a lost race, so two writers to different graphs
+        both land (the multi-writer form of the reference's per-graph
+        RW lock). Returns the graphs whose pointer moved, or None when
+        nothing was published.
+
+        ``how`` is the pointer discipline for ``graphs``:
+
+        - ``"overwrite"``: point each graph at commit ``cid``
+          (``add_graph`` and :meth:`_write`);
+        - ``"flip"``: point a graph at ``cid`` only if its pointer is
+          unchanged since the ``pinned`` manifest, so a write landing
+          meanwhile keeps its newer pointer and the graph is left out
+          of the result (copy-on-write ``merge_edges`` and
+          ``set_vertex_props``, ``delete_vertices`` and ``compact``);
+        - ``"extend"``: append ``cid`` to each graph's chain
+          (``append_edges`` and the delta legs of ``merge_edges`` and
+          ``set_vertex_props``); once published, the auto-compaction
+          policy (:meth:`_auto_compact`) runs on ``graphs``.
+
+        A data write publishes nothing when no pointer moves, and
+        refuses a store whose layout is no longer ``eff``
+        (:func:`_check_layout`). The parts only some writers have:
+
+        - ``props=(table, batch_props, op)`` merges the batch's property
+          schema into the newest manifest's (:func:`_merge_props`);
+        - ``txn=(app, version)`` is the exactly-once check: a version
+          at or below the recorded one publishes nothing;
+        - ``deltas`` names the delta set (``"edeltas"`` or
+          ``"vdeltas"``) that marks ``cid``;
+        - ``prune`` keeps only the delta ids some chain still
+          references (``compact``).
+
+        Without ``how``, the write is metadata-only: ``keys(prev)``
+        returns the manifest keys to replace, or None for a no-op
+        (``declare_prop``, ``rename_prop``, ``drop_prop``,
+        ``restore``). Every key not replaced carries forward through
+        :func:`_next_manifest`: ``txns``, ``props``, ``vdeltas``,
+        ``edeltas``, ``colmap`` and ``ptomb``."""
+        moved: list[frozenset] = [frozenset()]
+
+        def update(prev: dict | None) -> dict | None:
+            if how is None:
+                got = keys(prev)
+                return None if got is None else _next_manifest(prev, **got)
+            _check_layout(prev, eff)
+            m = prev or {}
+            pins = (pinned or {}).get("graphs", {})
+            gmap = dict(m.get("graphs", {}))
+            done = set()
+            for g in graphs:
+                chain = _cids(gmap[g]) if g in gmap else []
+                if how == "extend":
+                    if cid in chain:
+                        continue
+                    gmap[g] = chain + [cid]
+                elif how == "overwrite" or gmap.get(g) == pins.get(g):
+                    gmap[g] = cid
+                else:
+                    continue
+                done.add(g)
+            # the LAST invocation is the one that published
+            moved[0] = frozenset(done)
+            if not done:
+                return None
+            out = {"commit": cid, "graphs": gmap}
+            if txn is not None:
+                app, version = txn
+                if m.get("txns", {}).get(app, -1) >= version:
+                    return None
+                out["txns"] = {**m.get("txns", {}), app: version}
+            if props is not None and props[1]:
+                table, batch, op = props
+                out["props"] = {**m.get("props", {}), table: _merge_props(
+                    m.get("props", {}).get(table, {}), batch, op,
+                    _blocked_physicals(prev, table))}
+            if deltas:
+                out[deltas] = sorted(set(m.get(deltas, [])) | {cid})
+            if prune:
+                live = {c for ptr in gmap.values() for c in _cids(ptr)}
+                for k in ("vdeltas", "edeltas"):
+                    out[k] = sorted(set(m.get(k, [])) & live)
+            return _next_manifest(prev, **out)
+
+        if self.manifests.commit(update) is None:
+            return None
+        if how == "extend":
+            self._auto_compact(graphs)
+        return moved[0]
 
     def _load_manifest(self, seq: int | None = None) -> dict | None:
         """Newest published manifest (or the one with sequence ``seq``
@@ -2186,8 +2124,9 @@ class GraphEngine:
         graph at the compacted copy if that graph's pointer is
         UNCHANGED since compaction pinned its snapshot — a write
         landing mid-compaction keeps its (newer) pointer instead of
-        being reverted to the stale rewrite. Unknown ``names`` raise
-        (a typo must not silently compact nothing)."""
+        being reverted to the stale rewrite; when every pointer moved,
+        nothing is published. Unknown ``names`` raise (a typo must not
+        silently compact nothing)."""
         snap = self.snapshot()
         graphs = snap.graphs()
         if names is not None:
@@ -2223,48 +2162,14 @@ class GraphEngine:
         ]
         # three independent chain reads — overlap the rewrites (§2.6)
         self._store_write_all(frames, cid, eff)
-        pinned = snap.manifest["graphs"]
-        target = set(graphs)
-
-        def update(prev: dict | None) -> dict:
-            _check_layout(prev, eff)
-            graphs_map = {
-                g: cid if g in target and pinned.get(g) == ptr else ptr
-                for g, ptr in (prev["graphs"] if prev else {}).items()}
-            # txns carry forward VERBATIM: collapsing an append chain
-            # must not forget which streaming batch versions were
-            # applied, or a replay after compaction re-publishes
-            # (the exactly-once contract of streaming/ingest.py);
-            # props likewise (the compacted files were written under
-            # the pinned schema — a concurrently-added column simply
-            # NULL-backfills for the compacted commit)
-            body = {"commit": cid, "graphs": graphs_map,
-                    "txns": (prev or {}).get("txns", {})}
-            if (prev or {}).get("props"):
-                body["props"] = prev["props"]
-            # delta-set prune: keep only delta ids some chain still
-            # references (a graph written concurrently with this
-            # compaction keeps its chain, so its deltas survive).
-            # Stale ids are read-harmless but the sets must not grow
-            # forever on a long-lived store; compaction is the natural
-            # trim point, like the chain collapse itself.
-            live = None
-            for k in ("vdeltas", "edeltas"):
-                ids = set((prev or {}).get(k, []))
-                if not ids:
-                    continue
-                if live is None:
-                    live = set()
-                    for ptr in graphs_map.values():
-                        live.update(_cids(ptr))
-                kept = sorted(ids & live)
-                if kept:
-                    body[k] = kept
-            if live is not None:
-                return body     # pruned (possibly to nothing) — no carry
-            return _carry_vdeltas(prev, body)
-
-        self.manifests.commit(update)
+        # the compacted files were written under the pinned schema: a
+        # column declared meanwhile NULL-backfills for this commit. The
+        # delta sets are pruned to the ids some chain still references
+        # (a graph written meanwhile keeps its chain and its deltas):
+        # stale ids are harmless to reads, but the sets must not grow
+        # forever, and compaction is the trim point
+        self._publish("flip", cid, eff, graphs, pinned=snap.manifest,
+                      prune=True)
 
     def restore(self, seq: int) -> None:
         """Roll the whole store BACK to the state of retained manifest
@@ -2287,20 +2192,12 @@ class GraphEngine:
         overwrite), but the publish is a CAS append so it never tears
         a concurrent writer's manifest."""
         old = self._load_manifest(seq)
-
-        def update(prev: dict | None) -> dict:
-            body = {"commit": old.get("commit"),
-                    "graphs": dict(old.get("graphs", {})),
-                    "txns": (prev or {}).get("txns", {})}
-            # colmap/ptomb restore WITH the props doc they qualify: a
-            # restore to before a RENAME must read the old name again
-            # (and losing colmap would NULL every renamed column)
-            for k in ("props", "vdeltas", "edeltas", "colmap", "ptomb"):
-                if old.get(k):
-                    body[k] = old[k]
-            return body
-
-        self.manifests.commit(update)
+        # colmap/ptomb restore WITH the props doc they qualify: a
+        # restore to before a RENAME must read the old name again (and
+        # losing colmap would NULL every renamed column)
+        self._publish(keys=lambda prev: {
+            k: old.get(k) for k in ("commit", "graphs", "props", "vdeltas",
+                                    "edeltas", "colmap", "ptomb")})
 
     def vacuum(self, keep_last: int = 1, *,
                retain_hours: float | None = None,
@@ -2382,8 +2279,7 @@ class GraphEngine:
         import shutil
 
         if _path_scheme(self.store):
-            jpath = self.spark._jvm.org.apache.hadoop.fs.Path(root)
-            fs = jpath.getFileSystem(self.spark._jsc.hadoopConfiguration())
+            fs, jpath = self._fs.fs, self._fs.Path(root)
             try:
                 statuses = fs.listStatus(jpath)
             except Exception as exc:
@@ -2615,7 +2511,8 @@ class GraphEngine:
         immutable pointer read. ``seq`` pins a HISTORICAL manifest
         instead of the newest (time travel over the immutable commit
         dirs); raises FileNotFoundError if that manifest was vacuumed."""
-        return GraphSnapshot(self.spark, self.store, self._load_manifest(seq))
+        return GraphSnapshot(self.spark, self.store, self._load_manifest(seq),
+                             self._fs)
 
     def graphs(self) -> list[str]:
         return self.snapshot().graphs()

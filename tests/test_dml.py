@@ -9,8 +9,6 @@ from pyspark.sql import functions as F
 
 from graphdatabase_spark.engine import GraphEngine
 
-pytestmark = pytest.mark.slow  # heavyweight integration module: full-suite tier (pyproject.toml)
-
 
 @pytest.fixture()
 def engine(spark, tmp_path):

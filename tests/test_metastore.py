@@ -473,6 +473,94 @@ def test_compact_does_not_revert_concurrent_write(spark, tmp_path):
     assert final["graphs"]["Q"] != final["commit"]      # Q: writer's commit
 
 
+def _race(spark, store, path, competitor):
+    """Arm ``store`` so the first manifest put of the next write is
+    preceded by ``competitor(engine)``'s whole write through a second
+    engine: the write under test loses that CAS race and re-applies
+    its closure to the competitor's manifest. Returns the fired flag."""
+    fired = {}
+
+    def interleave(name):
+        if not fired:
+            fired["x"] = True
+            store.before_put = None
+            competitor(GraphEngine(spark, path, manifest_store=store))
+
+    store.before_put = interleave
+    return fired
+
+
+_E = "graph string, src int, dst int, w int"
+
+
+@pytest.mark.parametrize("delete", [False, True])
+def test_delta_merge_after_lost_race_extends_the_winners_chain(
+        spark, tmp_path, delete):
+    """A delta merge never skips: on a lost race it appends to the
+    chain the competing write published, so both commits serve the
+    graph and the merge reports every touched graph adopted."""
+    store = InMemoryManifestStore()
+    path = str(tmp_path / "s")
+    eng = GraphEngine(spark, path, manifest_store=store)
+    eng.add_graph("P", "2\n0 1\n0 0\n")
+    fired = _race(spark, store, path, lambda other: other.append_edges(
+        spark.createDataFrame([("P", 2, 1, 1)], _E)))
+    got = eng.merge_edges(spark.createDataFrame([("P", 1, 2, 5)], _E),
+                          delete=delete, mode="delta")
+    assert fired and got == (frozenset({"P"}), frozenset())
+    final = eng.manifests.load()
+    competitor = eng.manifests.load(final["seq"] - 1)["commit"]
+    assert final["graphs"]["P"][-2:] == [competitor, final["commit"]]
+    assert final["commit"] in final["edeltas"]
+    want = [(2, 1, 1)] if delete else [(1, 2, 5), (2, 1, 1)]
+    assert sorted(tuple(r)[:3] for r in
+                  eng.snapshot().weighted_edges("P").collect()) == want
+
+
+def test_delta_vertex_props_after_lost_race_extends_the_winners_chain(
+        spark, tmp_path):
+    """A delta vertex-prop write lands on top of a modify that won the
+    race: the chain is the modify's commit followed by the delta,
+    which the vdeltas set marks."""
+    store = InMemoryManifestStore()
+    path = str(tmp_path / "s")
+    eng = GraphEngine(spark, path, manifest_store=store)
+    eng.add_graph("P", "2\n0 1\n0 0\n")
+    fired = _race(spark, store, path,
+                  lambda other: other.modify_graph("P", "3\n0 0 1\n0 0 0\n"
+                                                   "0 1 0\n"))
+    got = eng.set_vertex_props(spark.createDataFrame(
+        [("P", 1, "x")], "graph string, vid int, tag string"), mode="delta")
+    assert fired and got == (frozenset({"P"}), frozenset())
+    final = eng.manifests.load()
+    competitor = eng.manifests.load(final["seq"] - 1)["commit"]
+    assert final["graphs"]["P"] == [competitor, final["commit"]]
+    assert final["vdeltas"] == [final["commit"]]
+    assert final["props"] == {"vertices": {"tag": "string"}}
+    assert sorted(tuple(r) for r in eng.snapshot().vertices(
+        "P", props=True).collect()) == [
+        (1, "x", "P"), (2, None, "P"), (3, None, "P")]
+
+
+def test_delete_vertices_after_lost_race_publishes_nothing(spark, tmp_path):
+    """A vertex delete whose graph was overwritten mid-delete reports
+    it skipped, keeps the competitor's pointer and, having adopted no
+    graph, publishes no manifest."""
+    store = InMemoryManifestStore()
+    path = str(tmp_path / "s")
+    eng = GraphEngine(spark, path, manifest_store=store)
+    eng.add_graph("P", "2\n0 1\n0 0\n")
+    fired = _race(spark, store, path,
+                  lambda other: other.modify_graph("P", "2\n0 0\n1 0\n"))
+    got = eng.delete_vertices(spark.createDataFrame(
+        [("P", 1)], "graph string, vid int"))
+    assert fired and got == (frozenset(), frozenset({"P"}))
+    assert [s for s, _ in eng.manifests.names()] == [1, 2]
+    final = eng.manifests.load()
+    assert final["graphs"]["P"] == final["commit"]
+    assert sorted(tuple(r)[:2] for r in eng.edges("P").collect()) == [(2, 1)]
+
+
 def test_engine_vacuum_keep_last_retains_time_travel(spark, tmp_path):
     """vacuum(keep_last=K) is the retention window that lets time
     travel and space reclamation coexist: seqs inside the window stay

@@ -796,6 +796,34 @@ def test_drop_column_everywhere_and_tombstoned(engine, spark):
     assert engine.declare_prop("edges", "score2", "double") is True
 
 
+@pytest.mark.parametrize("trigger", ["compact", "policy"])
+def test_compact_beside_deltas_keeps_column_mapping(engine, spark, trigger):
+    """A compaction of a store that holds delta commits carries the
+    column mapping like every other publish: without ``colmap`` the
+    renamed column reads as NULL, without ``ptomb`` the dropped name
+    could be re-declared over its stale values. The auto-compaction
+    policy reaches the same publish."""
+    engine.append_edges(_prop_edges(spark))
+    engine.rename_prop("edges", "kind", "category")
+    engine.drop_prop("edges", "score")
+    if trigger == "policy":
+        engine.compact_policy(max_deltas=1)
+    for _ in range(2 if trigger == "policy" else 1):
+        engine.merge_edges(spark.createDataFrame(
+            [("B", 5, 6, 1)], "graph string, src int, dst int, w int"),
+            mode="delta")
+    if trigger == "compact":
+        engine.compact()
+    snap = engine.snapshot()
+    assert snap.manifest["graphs"]["B"] == snap.manifest["commit"]
+    assert _rows(snap.weighted_edges("B", props=True)) == [
+        (1, 2, 2, "follows", "B"), (5, 6, 1, None, "B")]
+    assert snap.manifest["colmap"] == {"edges": {"category": "kind"}}
+    assert snap.manifest["ptomb"] == {"edges": ["score"]}
+    with pytest.raises(ValueError, match="DROPPED or RENAMED"):
+        engine.declare_prop("edges", "score", "int")
+
+
 def test_rename_drop_sql_spellings_and_vertex_mor(engine, spark):
     """The SQL grammar drives the same paths, and the vertex
     merge-on-read window keeps working through a rename."""

@@ -18,8 +18,6 @@ from graphdatabase_spark.engine import GraphEngine, _cids
 from graphdatabase_spark.streaming.ingest import (batch_commit_id,
                                                   stream_edges_into_store)
 
-pytestmark = pytest.mark.slow  # heavyweight integration module: full-suite tier (pyproject.toml)
-
 
 @pytest.fixture()
 def engine(spark, tmp_path):
