@@ -37,9 +37,10 @@ path keeps manifests in a POSIX directory next to the data, a URI
 scheme path (``hdfs://``, ``file:``, ``abfs://``, …) keeps them on
 that same Hadoop filesystem — and the same four blob calls map onto
 an object store's conditional put. The data-file layout needs no
-change, commit dirs are immutable. Every write lands its files first
-and then publishes through one routine, :meth:`GraphEngine._publish`:
-an optimistic compare-and-swap append (put-if-absent on the next
+change, commit dirs are immutable. Every data write hands its tables
+to one routine, :meth:`GraphEngine._commit`, which lands the files
+first and then publishes through :meth:`GraphEngine._publish`: an
+optimistic compare-and-swap append (put-if-absent on the next
 sequence number, re-read + re-merge on a lost race), which upgrades
 the reference's single-writer assumption (one primary server
 serializes writes, ``load_balancer.c``) to multi-writer safety. A
@@ -71,7 +72,6 @@ from concurrent.futures import ThreadPoolExecutor
 import pyarrow as pa
 import pyarrow.parquet as pq
 from pyspark import inheritable_thread_target
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
@@ -208,6 +208,21 @@ def _check_edge_batch(op: str, null_keys: bool, bad_w: bool) -> None:
             f"{op} requires integer edge weights >= 1 (w is the "
             f"stored multiplicity/weight; 0, negative, and NULL "
             f"break the store's CDC absence encoding)")
+
+
+def _meta_bound(verts: DataFrame,
+                old_meta: DataFrame | None = None) -> DataFrame:
+    """Meta rows ``(n, graph)`` that keep the ``n >= max vid`` packing
+    bound for the vertex set ``verts``: each graph's max vid, or, given
+    the graphs' ``old_meta``, the per-graph max over both (aggregated,
+    which also heals the duplicate rows two concurrent creators
+    write)."""
+    meta = (verts.groupBy("graph").agg(F.max("vid").cast("int").alias("n"))
+            .select("n", "graph"))
+    if old_meta is None:
+        return meta
+    return old_meta.unionByName(meta).groupBy("graph").agg(
+        F.max("n").alias("n"))
 
 
 _RESERVED_COLS = frozenset({"graph", "src", "dst", "w", "vid", "n", "gb"})
@@ -421,29 +436,25 @@ class GraphSnapshot:
         partition ``leaves`` (dir names under ``root``) when given.
 
         A path a commit never wrote (this table got zero rows for the
-        graph, or for the whole commit) reads as empty. That is decided
-        by Hadoop's ``exists`` for leaves (one missing leaf would fail a
-        multi-path scan, and Spark logs a stack trace per missing path)
-        and by Spark's PATH_NOT_FOUND error for the dir — never a
-        driver-local check: os.path.exists is always false for hdfs:// /
-        s3a:// store paths and would silently empty every remote read.
-        A leaf read keeps ``basePath`` at the commit dir, so partition
-        discovery still yields the ``graph`` / ``gb`` column."""
+        graph, or for the whole commit, like a delta ``set_vertex_props``
+        commit's edges) reads as empty. Each path is checked with
+        Hadoop's ``exists`` before Spark sees it: one missing path would
+        fail a multi-path scan, and Spark logs a stack trace per missing
+        path. Never a driver-local check: os.path.exists is always false
+        for hdfs:// / s3a:// store paths and would silently empty every
+        remote read. A leaf read keeps ``basePath`` at the commit dir,
+        so partition discovery still yields the ``graph`` / ``gb``
+        column."""
         reader = self.spark.read.schema(schema)
         paths = [root]
         if leaves is not None:
             reader = reader.option("basePath", root)
-            fs, Path = self._fs.fs, self._fs.Path
-            paths = [p for p in (os.path.join(root, leaf) for leaf in leaves)
-                     if fs.exists(Path(p))]
-        try:
-            if paths:
-                return reader.parquet(*paths)
-        except AnalysisException as exc:
-            cond = exc.getCondition() if hasattr(exc, "getCondition") else None
-            if "PATH_NOT_FOUND" not in (cond or str(exc)):
-                raise
-        return _empty_frame(self.spark, schema)
+            paths = [os.path.join(root, leaf) for leaf in leaves]
+        fs, Path = self._fs.fs, self._fs.Path
+        paths = [p for p in paths if fs.exists(Path(p))]
+        if not paths:
+            return _empty_frame(self.spark, schema)
+        return reader.parquet(*paths)
 
     def _leaves(self, cid: str, names: list[str]) -> list[str] | None:
         """The partition dirs of commit ``cid`` that hold ``names``, or
@@ -993,12 +1004,6 @@ class GraphEngine:
         if over:
             self.compact(sorted(over))
 
-    def _eff_buckets(self, snap: GraphSnapshot) -> int | None:
-        """The layout this write must use: the store's persisted layout
-        when a manifest exists, else the constructor's intent (first
-        write on a virgin store decides)."""
-        return snap.buckets if snap.manifest is not None else self.buckets
-
     def _store_write(self, df: DataFrame, table: str, cid: str,
                      buckets: int | None) -> None:
         """Land one table's rows under the immutable ``c=<cid>`` dir:
@@ -1036,43 +1041,6 @@ class GraphEngine:
             out.write.mode("overwrite").partitionBy("gb").parquet(path)
         else:
             out.write.mode("overwrite").partitionBy("graph").parquet(path)
-
-    def _store_write_all(self, frames: list[tuple[DataFrame, str]],
-                         cid: str, buckets: int | None) -> None:
-        """Land one commit's table dirs CONCURRENTLY (guide §2.6 —
-        overlap independent jobs): the edges/vertices/meta writes
-        target disjoint ``c=<cid>`` dirs and none reads another's
-        output, but each is a driver-blocking job whose task tail
-        leaves most of the cluster idle; a pool of one thread per
-        table overlaps them so the next write's tasks back-fill the
-        freed executors. The manifest CAS stays strictly AFTER every
-        write returns (the caller publishes only once this method
-        does), so the commit protocol — files first, pointer flip
-        last — is unchanged; any write failure propagates before a
-        manifest can reference the commit.
-
-        Callers order ``frames`` so a frame whose persisted cache is
-        still COLD and feeds the other tables is NOT raced: pass it
-        through :meth:`_store_write` first (merge_edges writes the
-        COW edge set alone, then vertices ∥ meta from its cache). The
-        one frame that can fail on malformed input goes first alone as
-        well (``_write``'s edges melt), so the others never land
-        beside a failed write."""
-        if len(frames) == 1:
-            self._store_write(frames[0][0], frames[0][1], cid, buckets)
-            return
-        with ThreadPoolExecutor(max_workers=len(frames)) as pool:
-            # each pool thread takes a copy of the caller's local
-            # properties (its job group among them), so the write jobs
-            # are charged to the op that called; one copy per thread,
-            # because Spark sets per-execution properties on it
-            futs = [pool.submit(
-                        inheritable_thread_target(self.spark)(
-                            self._store_write),
-                        df, table, cid, buckets)
-                    for df, table in frames]
-            for f in futs:
-                f.result()   # propagate the first failure loudly
 
     def _driver_write(self, rows: pa.Table, table: str, cid: str,
                       buckets: int | None) -> None:
@@ -1115,6 +1083,70 @@ class GraphEngine:
             finally:
                 out.close()
 
+    def _commit(self, snap: GraphSnapshot, how: str, graphs, stages, *,
+                cid: str | None = None, **publish) -> frozenset | None:
+        """Commit one data write: the one routine that knows the commit
+        protocol, and the only caller of the two landers. Every data
+        writer builds its tables and hands them here.
+
+        1. Mint the commit id, or take ``cid`` (``append_edges``'
+           ``commit_id``), and resolve the layout: the store's persisted
+           one when ``snap`` has a manifest, else the constructor's
+           ``buckets`` (the first write to a virgin store decides).
+        2. Land ``stages`` in order under ``c=<cid>``. A stage is a list
+           of ``(rows, table)`` and starts only after the previous one
+           returns. In a stage, an Arrow table is written on the driver
+           (:meth:`_driver_write`, no Spark job) and a DataFrame by
+           Spark (:meth:`_store_write`). Two or more DataFrames overlap
+           on a pool of one thread per table (guide §2.6): each write is
+           a driver-blocking job whose task tail leaves most executors
+           idle, and the next write's tasks back-fill them. A frame
+           gets a stage of its own when the others must not run beside
+           it: when it alone can fail on malformed input (``_write``'s
+           edges melt, so nothing lands beside a failed cast), or when
+           it fills a persisted cache the others read (the COW merge's
+           edge rewrite, so they read it warm instead of each
+           recomputing the touched graphs' scan).
+        3. Publish through :meth:`_publish` only once every landing has
+           returned: files first, CAS last. ``how``, ``graphs`` and the
+           ``publish`` parts go there as they are, plus
+           ``pinned=snap.manifest`` for ``"flip"``. A failed landing
+           propagates before any manifest references the commit, and
+           its files are orphans for :meth:`vacuum`.
+
+        A write with no ``graphs`` lands and publishes nothing. Returns
+        the graphs whose pointer moved, or None when nothing was
+        published."""
+        if not graphs:
+            return None
+        cid = cid or uuid.uuid4().hex[:12]
+        eff = snap.buckets if snap.manifest is not None else self.buckets
+        for stage in stages:
+            frames = [(rows, table) for rows, table in stage
+                      if isinstance(rows, DataFrame)]
+            for rows, table in stage:
+                if not isinstance(rows, DataFrame):
+                    self._driver_write(rows, table, cid, eff)
+            if len(frames) == 1:
+                self._store_write(*frames[0], cid, eff)
+            elif frames:
+                with ThreadPoolExecutor(max_workers=len(frames)) as pool:
+                    # each pool thread takes a copy of the caller's local
+                    # properties (its job group among them), so the
+                    # write jobs are charged to the op that called; one
+                    # copy per thread, because Spark sets per-execution
+                    # properties on it
+                    futs = [pool.submit(
+                                inheritable_thread_target(self.spark)(
+                                    self._store_write),
+                                df, table, cid, eff)
+                            for df, table in frames]
+                    for f in futs:
+                        f.result()   # propagate the first failure loudly
+        if how == "flip":
+            publish["pinned"] = snap.manifest
+        return self._publish(how, cid, eff, graphs, **publish)
+
     # -- op 1 / op 2: add / modify (full overwrite of one graph) ---------
 
     def add_graph(self, name: str, matrix_text: str) -> None:
@@ -1134,11 +1166,8 @@ class GraphEngine:
                                                    matrix_text), [name])
             return
         tables = matrix_mod.matrix_tables(name, matrix_text)
-        cid = uuid.uuid4().hex[:12]
-        eff = self._eff_buckets(self.snapshot())
-        for rows, table in zip(tables, ("edges", "vertices", "meta")):
-            self._driver_write(rows, table, cid, eff)
-        self._publish("overwrite", cid, eff, [name])
+        self._commit(self.snapshot(), "overwrite", [name],
+                     [list(zip(tables, ("edges", "vertices", "meta")))])
 
     # op 2 routes to the same implementation as op 1 — faithfully
     # mirroring the reference's dispatch (primary_server.c:223,
@@ -1186,8 +1215,8 @@ class GraphEngine:
         (:func:`_check_edge_batch`) in ONE metadata-sized job
         (previously a distinct-collect plus a separate isEmpty
         validation scan — two jobs per edge write). Still fails loudly
-        BEFORE any file lands: callers run this ahead of every
-        ``_store_write``."""
+        BEFORE any file lands: callers run this before they hand their
+        tables to :meth:`_commit`."""
         rows = df.groupBy("graph").agg(
             F.count(F.when(F.col("w").isNull() | (F.col("w") < 1),
                            F.lit(1))).alias("bad"),
@@ -1199,13 +1228,15 @@ class GraphEngine:
         return [r["graph"] for r in rows]
 
     def _land_edge_batch(self, snap: GraphSnapshot, batch: DataFrame,
-                         batch_props: dict, cid: str, eff: int | None,
-                         op: str, kind: str) -> list[str]:
-        """Land the files of one O(batch) edge commit under ``c=<cid>``
-        and return the graphs it touches (none: publish nothing).
-        ``kind`` is ``"append"``, or a delta merge's ``"upsert"`` or
-        ``"delete"``. Validation fails before any file lands. The
-        commit holds:
+                         batch_props: dict, op: str, kind: str, *,
+                         cid: str | None = None,
+                         **publish) -> frozenset | None:
+        """Build the tables of one O(batch) edge commit and commit them
+        through :meth:`_commit`, extending each touched graph's chain
+        with the ``publish`` parts; returns what :meth:`_commit`
+        returns (None when the batch touches no graph). ``kind`` is
+        ``"append"``, or a delta merge's ``"upsert"`` or ``"delete"``.
+        Validation fails before any file lands. The commit holds:
 
         - edges: the batch rows (for a delete, w = 0 markers);
         - vertices: endpoint vids new to their graph in the pinned
@@ -1218,15 +1249,15 @@ class GraphEngine:
         unknown graph is a no-op, not a new empty catalog entry.
 
         A batch of at most ``LOCAL_EDGE_ROWS`` rows without property
-        columns is read once, checked and derived on the driver, and
-        its files written by :meth:`_driver_write`: one job for the
-        batch plus one bounded read of the touched graphs' known vids.
-        Larger batches and batches with property columns keep the
-        distributed path. Its callers are streaming ``foreachBatch``
-        ingest, large SQL DML and typed-property writes (the column
-        mapping is applied by ``_store_write`` only). A batch over the
-        cap pays the bounded read once before that path reads it
-        again."""
+        columns is read once (one Spark job), checked and derived on
+        the driver, and lands as Arrow tables; the touched graphs'
+        known vids come from the driver-side read
+        (:meth:`_local_edge_tables`). Larger batches and batches with
+        property columns keep the distributed path. Its callers are
+        streaming ``foreachBatch`` ingest, large SQL DML and
+        typed-property writes (the column mapping is applied by
+        ``_store_write`` only). A batch over the cap pays the bounded
+        read once before that path reads it again."""
         gmap = (snap.manifest or {}).get("graphs", {})
         if not batch_props:
             # toArrow of the limit runs 1 job; collect() would run 2
@@ -1234,10 +1265,8 @@ class GraphEngine:
             if local.num_rows <= LOCAL_EDGE_ROWS:
                 touched, tables = self._local_edge_tables(snap, local, op,
                                                           kind)
-                if touched:
-                    for rows, table in tables:
-                        self._driver_write(rows, table, cid, eff)
-                return touched
+                return self._commit(snap, "extend", touched, [tables],
+                                    cid=cid, **publish)
         batch = batch.persist()
         try:
             if kind == "delete":
@@ -1253,22 +1282,18 @@ class GraphEngine:
                                                   "graph"))
                         .distinct())
                 known = snap.vertices(touched).select("vid", "graph")
-                meta = (vids.groupBy("graph")
-                        .agg(F.max("vid").cast("int").alias("n")))
+                meta = _meta_bound(vids)
                 old = [g for g in touched if g in gmap]
                 if kind == "append" and old:
                     meta = meta.filter(~F.col("graph").isin(old))
                 frames = [(batch, "edges"),
                           (vids.join(known, ["vid", "graph"], "left_anti"),
                            "vertices"),
-                          (meta.select("n", "graph"), "meta")]
-            if touched:
-                # every frame reads the batch cache, filled by the
-                # collect above, so the writes are safe to overlap
-                self._store_write_all(frames, cid, eff)
+                          (meta, "meta")]
+            return self._commit(snap, "extend", touched, [frames], cid=cid,
+                                **publish)
         finally:
             batch.unpersist()
-        return touched
 
     def _local_edge_tables(self, snap: GraphSnapshot, local: pa.Table,
                            op: str, kind: str
@@ -1376,7 +1401,6 @@ class GraphEngine:
         Returns True if a manifest was published."""
         if (txn_app is None) != (txn_version is None):
             raise ValueError("txn_app and txn_version come as a pair")
-        cid = commit_id or uuid.uuid4().hex[:12]
         snap = self.snapshot()
         prev0 = snap.manifest or {}
         if txn_app is not None and \
@@ -1385,22 +1409,17 @@ class GraphEngine:
         if commit_id is not None:
             referenced = {c for ptr in prev0.get("graphs", {}).values()
                           for c in _cids(ptr)}
-            if cid in referenced:
+            if commit_id in referenced:
                 return False  # replayed batch — already published
         edges, batch_props = self._validated_weights(edges, "append_edges")
         edges, batch_props = _canon_props(edges, batch_props, prev0,
                                           "edges", "append_edges")
-        eff = self._eff_buckets(snap)
-        write_graphs = self._land_edge_batch(snap, edges, batch_props, cid,
-                                             eff, "append_edges", "append")
-        if not write_graphs:
-            return False  # empty batch publishes nothing
         # the txn pair is re-checked inside the CAS closure: a
         # competing replica may have applied this version since our
-        # snapshot
-        return self._publish(
-            "extend", cid, eff, write_graphs,
-            props=("edges", batch_props, "append_edges"),
+        # snapshot. An empty batch publishes nothing.
+        return self._land_edge_batch(
+            snap, edges, batch_props, "append_edges", "append",
+            cid=commit_id, props=("edges", batch_props, "append_edges"),
             txn=None if txn_app is None else (txn_app, txn_version)
         ) is not None
 
@@ -1482,8 +1501,11 @@ class GraphEngine:
             updates, batch_props = _canon_props(
                 updates, batch_props, snap.manifest, "edges", "merge_edges")
         if mode == "delta":
-            return self._merge_edges_delta(snap, updates, batch_props,
-                                           delete)
+            moved = self._land_edge_batch(
+                snap, updates, batch_props, "merge_edges",
+                "delete" if delete else "upsert", deltas="edeltas",
+                props=("edges", batch_props, "merge_edges"))
+            return frozenset(moved or ()), frozenset()
         # persist the validated batch across its consumers (the
         # touched-graphs collect and every table write): one
         # evaluation of the caller's batch plan
@@ -1533,13 +1555,8 @@ class GraphEngine:
                        ["vid", "graph"], "left_anti"),
             allowMissingColumns=True)
         # meta carries over (graph stays cataloged even if the merge
-        # deletes its last edge); graphs new to the store gain a row
-        old_meta = snap.meta(touched).distinct()
-        new_meta = (verts.groupBy("graph")
-                    .agg(F.max("vid").cast("int").alias("n"))
-                    .join(old_meta.select("graph"), "graph", "left_anti"))
-        cid = uuid.uuid4().hex[:12]
-        eff = self._eff_buckets(snap)
+        # deletes its last edge) and keeps the n >= max vid bound
+        meta = _meta_bound(verts, snap.meta(touched))
         # persist the rewrite across the three table writes: without
         # this the edges write, the vertices write (via evids) and the
         # meta write (via verts) each recomputed the full COW union —
@@ -1549,19 +1566,11 @@ class GraphEngine:
         merged = merged.persist()
         verts = verts.persist()
         try:
-            # the edges write goes ALONE first: it fills the COW
-            # cache (`merged`), which both remaining tables read —
-            # racing them against a cold cache would recompute the
-            # touched-graph scan per thread instead of once. Then
-            # vertices ∥ meta overlap from the warm cache (§2.6).
-            self._store_write(merged, "edges", cid, eff)
-            self._store_write_all(
-                [(verts, "vertices"),
-                 (old_meta.unionByName(new_meta), "meta")], cid, eff)
             # when every touched pointer moved mid-merge nothing is
             # published, and the c=cid dirs are orphans for vacuum
-            adopted = self._publish(
-                "flip", cid, eff, touched, pinned=snap.manifest,
+            adopted = self._commit(
+                snap, "flip", touched,
+                [[(merged, "edges")], [(verts, "vertices"), (meta, "meta")]],
                 props=("edges", batch_props, "merge_edges")) or frozenset()
         finally:
             merged.unpersist()
@@ -1630,8 +1639,14 @@ class GraphEngine:
         if not touched:
             return frozenset(), frozenset()
         if mode == "delta":
-            return self._set_vertex_props_delta(snap, verts, batch_props,
-                                                touched)
+            # a prop-less batch is a plain membership append, NOT
+            # marked in vdeltas: a membership row must never null a
+            # matched key's props through the wholesale-row merge rule
+            self._commit(snap, "extend", touched,
+                         [[(verts, "vertices"), (_meta_bound(verts), "meta")]],
+                         deltas="vdeltas" if batch_props else None,
+                         props=("vertices", batch_props, "set_vertex_props"))
+            return frozenset(touched), frozenset()
         old_verts = snap.vertices(touched, props=True).distinct()
         if batch_props:
             kept = old_verts.join(verts.select("vid", "graph"),
@@ -1646,89 +1661,21 @@ class GraphEngine:
                 verts.join(old_verts.select("vid", "graph"),
                            ["vid", "graph"], "left_anti"),
                 allowMissingColumns=True)
-        edges = snap.weighted_edges(touched, props=True)
-        # meta keeps the "n >= max vid at write time" bound: max of the
-        # old rows (aggregated — heals concurrent-create duplicates)
-        # and the post-upsert vertex set's own bound; a graph new to
-        # the store gains its row from the latter
-        meta = (snap.meta(touched)
-                .unionByName(new_verts.groupBy("graph")
-                             .agg(F.max("vid").cast("int").alias("n"))
-                             .select("n", "graph"))
-                .groupBy("graph").agg(F.max("n").alias("n")))
-        cid = uuid.uuid4().hex[:12]
-        eff = self._eff_buckets(snap)
         # persist across the two consumers (vertices write + the meta
         # bound aggregate) — same one-scan-instead-of-two reasoning as
         # the merge_edges COW persist
         new_verts = new_verts.persist()
         try:
-            # the heavy frame here is the copy-through EDGE rewrite
-            # (independent of new_verts), so all three writes overlap
-            # (§2.6); the vertices/meta race can at worst recompute
-            # the touched graphs' VERTEX scan once — small next to
-            # overlapping it with the edge copy.
-            self._store_write_all([(edges, "edges"),
-                                   (new_verts, "vertices"),
-                                   (meta, "meta")], cid, eff)
-            adopted = self._publish(
-                "flip", cid, eff, touched, pinned=snap.manifest,
+            adopted = self._commit(
+                snap, "flip", touched,
+                [[(snap.weighted_edges(touched, props=True), "edges"),
+                  (new_verts, "vertices"),
+                  (_meta_bound(new_verts, snap.meta(touched)), "meta")]],
                 props=("vertices", batch_props, "set_vertex_props")
             ) or frozenset()
         finally:
             new_verts.unpersist()
         return adopted, frozenset(touched) - adopted
-
-    def _merge_edges_delta(self, snap: GraphSnapshot, updates: DataFrame,
-                           batch_props: dict, delete: bool
-                           ) -> tuple[frozenset, frozenset]:
-        """The merge-on-read write leg of :meth:`merge_edges`: land the
-        batch as one O(batch) commit (:meth:`_land_edge_batch` — an
-        in-envelope batch in at most two Spark jobs) and append it to
-        each touched graph's chain, marked in ``edeltas``. Upsert
-        batches carry their validated (w ≥ 1) rows verbatim plus
-        membership rows for endpoint vids NEW to their graph and the
-        per-graph max-vid meta bound; delete batches write w = 0
-        marker rows (keys only). Appends are unconditional — an
-        upsert/delete stays correct appended after any concurrent
-        write — so nothing is ever skipped."""
-        cid = uuid.uuid4().hex[:12]
-        eff = self._eff_buckets(snap)
-        touched = self._land_edge_batch(
-            snap, updates, batch_props, cid, eff, "merge_edges",
-            "delete" if delete else "upsert")
-        if not touched:
-            return frozenset(), frozenset()
-        self._publish("extend", cid, eff, touched, deltas="edeltas",
-                      props=("edges", batch_props, "merge_edges"))
-        return frozenset(touched), frozenset()
-
-    def _set_vertex_props_delta(self, snap: GraphSnapshot,
-                                verts: DataFrame, batch_props: dict,
-                                touched: list[str]
-                                ) -> tuple[frozenset, frozenset]:
-        """The merge-on-read write leg of :meth:`set_vertex_props`:
-        land the batch as one O(batch) commit (vertices rows + the
-        per-graph max-vid meta bound — the same ``n >= max vid`` rule
-        every writer keeps), append it to each touched graph's chain,
-        and — when the batch carries properties — mark the commit id
-        in the manifest's ``vdeltas`` set so reads merge it
-        latest-wins. A prop-less batch is a plain membership append
-        (NOT marked: a membership row must never null a matched key's
-        props through the wholesale-row merge rule). Appends are
-        unconditional (an upsert stays correct appended after any
-        concurrent write), so nothing is ever skipped."""
-        cid = uuid.uuid4().hex[:12]
-        eff = self._eff_buckets(snap)
-        meta = verts.groupBy("graph").agg(
-            F.max("vid").cast("int").alias("n")).select("n", "graph")
-        # both O(batch) plans over the caller's batch — overlap them
-        self._store_write_all([(verts, "vertices"), (meta, "meta")],
-                              cid, eff)
-        self._publish("extend", cid, eff, touched,
-                      deltas="vdeltas" if batch_props else None,
-                      props=("vertices", batch_props, "set_vertex_props"))
-        return frozenset(touched), frozenset()
 
     def declare_prop(self, table: str, name: str, ddl_type: str) -> bool:
         """Declare a typed edge/vertex property WITHOUT writing data —
@@ -1943,15 +1890,10 @@ class GraphEngine:
                        ["graph", "dst"], "left_anti"))
         # meta carries over: the graph stays cataloged and n keeps the
         # "n >= max vid" packing bound (removal only lowers max vid)
-        meta = snap.meta(touched).distinct()
-        cid = uuid.uuid4().hex[:12]
-        eff = self._eff_buckets(snap)
-        # three INDEPENDENT anti-join scans (edge table, vertex table,
-        # meta) sharing only the batch-sized key set — overlap them
-        self._store_write_all([(edges, "edges"), (verts, "vertices"),
-                               (meta, "meta")], cid, eff)
-        adopted = self._publish("flip", cid, eff, touched,
-                                pinned=snap.manifest) or frozenset()
+        adopted = self._commit(
+            snap, "flip", touched,
+            [[(edges, "edges"), (verts, "vertices"),
+              (snap.meta(touched).distinct(), "meta")]]) or frozenset()
         return adopted, frozenset(touched) - adopted
 
     def _write(self, lines: DataFrame,
@@ -1960,29 +1902,16 @@ class GraphEngine:
         melt: its callers are ``ingest_dir`` and an ``add_graph`` over
         the driver-parse cap.
 
-        One COMMIT: land all three tables' files under a fresh
-        immutable c=<cid> directory (one distributed write each, still
-        graph-partitioned so single-graph reads prune by path), then
-        publish with :meth:`_publish`. The meta table records
+        One COMMIT through :meth:`_commit`: one distributed write per
+        table, still graph-partitioned so single-graph reads prune by
+        path; the edges melt casts every cell, so a malformed matrix
+        raises before any file lands. The meta table records
         every graph — including N=0 graphs, whose edge/vertex files
         are legitimately absent (the reference's G12.txt edge case):
         a modify that EMPTIES any number of graphs needs no per-graph
         clearing, the pointer flip is the clear."""
         meta = lines.filter(F.col("line_no") == 0).select(
             F.trim(F.col("line")).cast("int").alias("n"), "graph")
-        cid = uuid.uuid4().hex[:12]
-        eff = self._eff_buckets(self.snapshot())
-        # The edges melt lands alone first: it casts line 0 and every
-        # cell of rows 1..N, so a malformed matrix raises there, before
-        # the vertices and meta files land. Those two cast only line 0
-        # and overlap (§2.6); the manifest publish stays strictly last.
-        # The weighted melt is exactly the 0/1 edge set with w = 1 on
-        # the reference's matrices (pinned by tests); a nonzero integer
-        # cell generalizes to a weighted edge.
-        self._store_write(matrix_mod.melt_matrix_lines_weighted(lines),
-                          "edges", cid, eff)
-        self._store_write_all([(matrix_mod.matrix_vertices(lines), "vertices"),
-                               (meta, "meta")], cid, eff)
         if write_graphs is None:
             # The graph set of a bulk ingest is known only after the
             # read (one small driver-side collect of catalog metadata —
@@ -1994,7 +1923,14 @@ class GraphEngine:
             # catalog, not a bigger manifest.
             write_graphs = [r["graph"] for r in
                             meta.select("graph").distinct().collect()]
-        self._publish("overwrite", cid, eff, write_graphs)
+        # The weighted melt is exactly the 0/1 edge set with w = 1 on
+        # the reference's matrices (pinned by tests); a nonzero integer
+        # cell generalizes to a weighted edge.
+        edges = matrix_mod.melt_matrix_lines_weighted(lines)
+        self._commit(self.snapshot(), "overwrite", write_graphs,
+                     [[(edges, "edges")],
+                      [(matrix_mod.matrix_vertices(lines), "vertices"),
+                       (meta, "meta")]])
 
     # -- manifest commit log ----------------------------------------------
 
@@ -2007,11 +1943,12 @@ class GraphEngine:
                  keys=None) -> frozenset | None:
         """Publish one write's manifest by compare-and-swap, after all of
         its files have landed: the one routine that calls
-        ``manifests.commit``. Its closure is re-applied to the newest
-        manifest on a lost race, so two writers to different graphs
-        both land (the multi-writer form of the reference's per-graph
-        RW lock). Returns the graphs whose pointer moved, or None when
-        nothing was published.
+        ``manifests.commit``, and for a data write called only by
+        :meth:`_commit`. Its closure is re-applied to the newest manifest
+        on a lost race, so two writers to different graphs both land
+        (the multi-writer form of the reference's per-graph RW lock).
+        Returns the graphs whose pointer moved, or None when nothing was
+        published.
 
         ``how`` is the pointer discipline for ``graphs``:
 
@@ -2097,12 +2034,6 @@ class GraphEngine:
             self._auto_compact(graphs)
         return moved[0]
 
-    def _load_manifest(self, seq: int | None = None) -> dict | None:
-        """Newest published manifest (or the one with sequence ``seq``
-        for time travel), or None for a virgin store. Delegates to the
-        pluggable metadata store (metastore.py)."""
-        return self.manifests.load(seq)
-
     # -- store maintenance -------------------------------------------------
 
     def compact(self, names: list[str] | None = None) -> None:
@@ -2137,8 +2068,6 @@ class GraphEngine:
         if not graphs:
             return
         sel = graphs if names is not None else None
-        cid = uuid.uuid4().hex[:12]
-        eff = self._eff_buckets(snap)
         frames = [
             # the weighted read normalizes legacy commits (no w
             # column) to w=1, so compaction also migrates them;
@@ -2160,16 +2089,13 @@ class GraphEngine:
             (snap._table("meta", "n int", sel)
              .groupBy("graph").agg(F.max("n").alias("n")), "meta"),
         ]
-        # three independent chain reads — overlap the rewrites (§2.6)
-        self._store_write_all(frames, cid, eff)
         # the compacted files were written under the pinned schema: a
         # column declared meanwhile NULL-backfills for this commit. The
         # delta sets are pruned to the ids some chain still references
         # (a graph written meanwhile keeps its chain and its deltas):
         # stale ids are harmless to reads, but the sets must not grow
         # forever, and compaction is the trim point
-        self._publish("flip", cid, eff, graphs, pinned=snap.manifest,
-                      prune=True)
+        self._commit(snap, "flip", graphs, [frames], prune=True)
 
     def restore(self, seq: int) -> None:
         """Roll the whole store BACK to the state of retained manifest
@@ -2191,7 +2117,7 @@ class GraphEngine:
         last-writer-wins by design (a restore IS a whole-store
         overwrite), but the publish is a CAS append so it never tears
         a concurrent writer's manifest."""
-        old = self._load_manifest(seq)
+        old = self.manifests.load(seq)
         # colmap/ptomb restore WITH the props doc they qualify: a
         # restore to before a RENAME must read the old name again (and
         # losing colmap would NULL every renamed column)
@@ -2511,7 +2437,7 @@ class GraphEngine:
         immutable pointer read. ``seq`` pins a HISTORICAL manifest
         instead of the newest (time travel over the immutable commit
         dirs); raises FileNotFoundError if that manifest was vacuumed."""
-        return GraphSnapshot(self.spark, self.store, self._load_manifest(seq),
+        return GraphSnapshot(self.spark, self.store, self.manifests.load(seq),
                              self._fs)
 
     def graphs(self) -> list[str]:

@@ -385,6 +385,96 @@ def test_vacuum_reclaims_orphaned_commit_dirs(spark, tmp_path, write):
     assert {(r["src"], r["dst"]) for r in eng.edges("A").collect()} == {(1, 2)}
 
 
+class _DieAtLastLanding(Exception):
+    pass
+
+
+def _matrix(n):
+    return f"{n}\n" + "".join(
+        " ".join("1" if j == i + 1 else "0" for j in range(n)) + "\n"
+        for i in range(n))
+
+
+def _ingest_dir(eng, spark, tmp_path):
+    d = tmp_path / "in"
+    d.mkdir()
+    (d / "D.txt").write_text(_matrix(3))
+    eng.ingest_dir(str(d))
+
+
+@pytest.mark.parametrize("write", [
+    lambda eng, spark, tmp: eng.add_graph("B", _matrix(2)),
+    lambda eng, spark, tmp: eng.add_graph("A", _matrix(101)),
+    _ingest_dir,
+    lambda eng, spark, tmp: eng.append_edges(spark.createDataFrame(
+        [("A", 3, 4)], "graph string, src int, dst int")),
+    lambda eng, spark, tmp: eng.merge_edges(spark.createDataFrame(
+        [("A", 1, 3, 2)], "graph string, src int, dst int, w int"),
+        mode="delta"),
+    lambda eng, spark, tmp: eng.merge_edges(spark.createDataFrame(
+        [("A", 1, 3, 2)], "graph string, src int, dst int, w int")),
+    lambda eng, spark, tmp: eng.set_vertex_props(spark.createDataFrame(
+        [("A", 1, "x")], "graph string, vid int, kind string")),
+    lambda eng, spark, tmp: eng.set_vertex_props(spark.createDataFrame(
+        [("A", 1, "x")], "graph string, vid int, kind string"),
+        mode="delta"),
+    lambda eng, spark, tmp: eng.delete_vertices(spark.createDataFrame(
+        [("A", 2)], "graph string, vid int")),
+    lambda eng, spark, tmp: eng.compact(),
+], ids=["add_graph", "add_graph_n101", "ingest_dir", "append_edges",
+        "merge_edges_delta", "merge_edges_cow", "set_vertex_props_cow",
+        "set_vertex_props_delta", "delete_vertices", "compact"])
+def test_writer_dying_at_its_last_landing_publishes_nothing(
+        spark, tmp_path, monkeypatch, write):
+    """Every data writer commits through GraphEngine._commit. When the
+    last of its table landings raises, after that table's files are
+    written, the exception reaches the caller, no manifest is
+    published and every read returns the state before the write."""
+    import threading
+
+    eng = GraphEngine(spark, str(tmp_path / "s"))
+    eng.add_graph("A", _matrix(3))
+    eng.append_edges(spark.createDataFrame(
+        [("A", 3, 1)], "graph string, src int, dst int"))
+
+    def state():
+        snap = eng.snapshot()
+        return (snap.manifest["seq"], snap.graphs(),
+                sorted(tuple(r) for r in snap.weighted_edges().collect()),
+                sorted(tuple(r) for r in snap.vertices().collect()),
+                sorted(tuple(r) for r in snap.meta().collect()))
+
+    before = state()
+    real_commit = eng._commit
+    landed = []
+
+    def dying_commit(snap, how, graphs, stages, **kw):
+        left = [sum(len(stage) for stage in stages)]
+        lock = threading.Lock()
+
+        def dying(lander):
+            def land(rows, table, cid, buckets):
+                lander(rows, table, cid, buckets)
+                landed.append(table)
+                with lock:
+                    left[0] -= 1
+                    last = left[0] == 0
+                if last:
+                    raise _DieAtLastLanding()
+            return land
+
+        monkeypatch.setattr(eng, "_store_write", dying(eng._store_write))
+        monkeypatch.setattr(eng, "_driver_write", dying(eng._driver_write))
+        return real_commit(snap, how, graphs, stages, **kw)
+
+    monkeypatch.setattr(eng, "_commit", dying_commit)
+    with pytest.raises(_DieAtLastLanding):
+        write(eng, spark, tmp_path)
+    monkeypatch.undo()
+    assert landed  # the files landed before the writer died
+    assert state() == before
+
+
 def test_engine_history_tracks_commits_and_retention(spark, tmp_path):
     """history() mirrors the retained manifest log: one row per commit
     with the live graph count, shrinking with vacuum's retention

@@ -449,6 +449,45 @@ def test_edge_delta_merge_equals_cow(spark, tmp_path):
     assert 9 in {r["vid"] for r in
                  engines["delta"].snapshot().vertices("A").collect()}
     assert "B" in engines["delta"].graphs()
+    # both legs keep the meta bound n >= max vid: the COW upsert of
+    # endpoint 9 must raise A's n as the delta leg's meta row does
+    nmax = {}
+    for m, eng in engines.items():
+        snap = eng.snapshot()
+        nmax[m] = dict(snap.meta().groupBy("graph").agg(F.max("n")).collect())
+        vmax = dict(snap.vertices().groupBy("graph").agg(F.max("vid"))
+                    .collect())
+        assert all(nmax[m][g] >= v for g, v in vmax.items()), (m, nmax)
+    assert nmax["delta"] == nmax["cow"]
+
+
+def test_whole_commit_reads_check_the_dir_first(spark, tmp_path,
+                                                monkeypatch):
+    """A delta set_vertex_props commit lands no edges dir, and an edge
+    read that covers that whole commit skips it instead of handing
+    Spark a missing path (each one costs a failed analysis and a
+    logged stack trace)."""
+    import os
+
+    from pyspark.sql.readwriter import DataFrameReader
+
+    eng = GraphEngine(spark, str(tmp_path / "s"))
+    eng.add_graph("C", "2\n0 1\n0 0\n")
+    eng.set_vertex_props(spark.createDataFrame(
+        [("C", 1, "x")], "graph string, vid int, kind string"), mode="delta")
+    real = DataFrameReader.parquet
+
+    def checked(self, *paths, **kw):
+        missing = [p for p in paths if not os.path.exists(p)]
+        assert not missing, missing
+        return real(self, *paths, **kw)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", checked)
+    snap = eng.snapshot()
+    assert len(snap.manifest["graphs"]["C"]) == 2
+    assert [(r["src"], r["dst"]) for r in
+            snap.weighted_edges("C").collect()] == [(1, 2)]
+    assert snap.weighted_edges().count() == 1
 
 
 def test_edge_delta_delete_of_prior_delta_and_kernels(spark, tmp_path):

@@ -12,8 +12,6 @@ from pyspark.sql import functions as F
 from graphdatabase_spark.engine import GraphEngine
 from graphdatabase_spark.streaming.store_source import GraphStoreDataSource
 
-pytestmark = pytest.mark.slow  # heavyweight integration module: full-suite tier (pyproject.toml)
-
 
 @pytest.fixture()
 def engine(spark, tmp_path):
