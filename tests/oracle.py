@@ -1,5 +1,5 @@
-"""Pure-Python BFS and DFS oracles for the traversal tests, and a
-model of the store's edge-batch writes.
+"""Pure-Python BFS, DFS and PageRank oracles for the kernel tests, and
+a model of the store's edge-batch writes.
 
 They share no code with ``graphdatabase_spark``: the engine serves
 in-envelope graphs with its own pure-Python kernels, and derives small
@@ -53,6 +53,45 @@ def dfs_leaves(edges, start: int) -> list[int]:
             if not frame[2]:
                 leaves.append(frame[0])
     return sorted(leaves)
+
+
+def pagerank(edges, vertices, iterations: int = 10, scale=None,
+             sources=None) -> dict:
+    """Power iteration over one graph, step for step as the DuckDB
+    oracles unroll it: out-degree counts every edge row (duplicates and
+    self-loops included), a vertex without out-edges is dangling, and
+    its mass returns to the teleport set. The teleport set is every
+    vertex, or ``sources`` when given.
+
+    ``scale=None`` iterates in floats with damping 0.85:
+    ``t·((1 − d) + d·m/n) + d·recv``. An int ``scale`` iterates in
+    scaled int64 with damping 85/100 and ``//`` truncation:
+    ``t·((15·scale)//100 + (85·(m//n))//100) + (85·recv)//100``. Here
+    ``t`` is 1 on the teleport set and 0 elsewhere, ``n`` its size and
+    ``m`` the dangling mass."""
+    edges = list(edges)
+    odeg: dict[int, int] = {}
+    for s, _d in edges:
+        odeg[s] = odeg.get(s, 0) + 1
+    verts = sorted(set(vertices))
+    tele = set(verts) if sources is None else set(sources)
+    n = len(tele)
+    one = 1.0 if scale is None else scale
+    rank = {v: one if v in tele else 0 * one for v in verts}
+    for _ in range(iterations):
+        recv = {v: 0 * one for v in verts}
+        for s, d in edges:
+            recv[d] += (rank[s] / odeg[s] if scale is None
+                        else rank[s] // odeg[s])
+        m = sum(rank[v] for v in verts if v not in odeg)
+        if scale is None:
+            rank = {v: (v in tele) * ((1.0 - 0.85) + 0.85 * m / n)
+                    + 0.85 * recv[v] for v in verts}
+        else:
+            base = (15 * scale) // 100 + (85 * (m // n)) // 100
+            rank = {v: (v in tele) * base + (85 * recv[v]) // 100
+                    for v in verts}
+    return rank
 
 
 class StoreModel:
