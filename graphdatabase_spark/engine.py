@@ -160,6 +160,16 @@ def _path_scheme(path: str) -> str:
     return scheme if len(scheme) > 1 else ""
 
 
+def _canonical_undirected(edges: DataFrame) -> DataFrame:
+    """``(src, dst)`` edges viewed as undirected: one canonical
+    ``src < dst`` row per vertex pair. Self-loops drop — they contribute
+    to no triangle, coefficient or core."""
+    return (edges.filter(F.col("src") != F.col("dst"))
+            .select(F.least("src", "dst").alias("src"),
+                    F.greatest("src", "dst").alias("dst"))
+            .distinct())
+
+
 def _pack_ids(df: DataFrame, gidx: DataFrame, stride: int,
               cols: tuple[str, ...],
               keep: tuple[str, ...] = ()) -> DataFrame:
@@ -2785,17 +2795,20 @@ class GraphEngine:
         return gidx, stride, e, v
 
     def _unpack_labels(self, out: DataFrame, gidx: DataFrame, stride: int,
-                       label_col: str) -> DataFrame:
-        """Decode a packed kernel result ``(vid, <label>)`` back to
-        ``(graph, vid, <label>)``. ``div`` is exact integer division
-        on longs — float division was exact only below 2^53 and could
-        mis-decode labels on a very large store."""
+                       *labels: str, keep: tuple[str, ...] = ()) -> DataFrame:
+        """Decode a packed kernel result ``(vid, *labels, *keep)`` back
+        to ``(graph, vid, *labels, *keep)``: ``vid`` and the vertex-id
+        ``labels`` lose their packing offset, and ``keep`` columns
+        (distances, degrees, coefficients) pass through unchanged.
+        ``div`` is exact integer division on longs — float division was
+        exact only below 2^53 and could mis-decode labels on a very
+        large store."""
         dec = out.select(
             F.expr(f"vid div {stride}").alias("gidx"),
-            (F.col("vid") % stride).cast("int").alias("vid"),
-            (F.col(label_col) % stride).cast("int").alias(label_col))
+            *[(F.col(c) % stride).cast("int").alias(c) for c in ("vid", *labels)],
+            *keep)
         return dec.join(F.broadcast(gidx), "gidx") \
-            .select("graph", "vid", label_col)
+            .select("graph", "vid", *labels, *keep)
 
     def scc_all(self,
                 max_iterations: int = pregel.DEFAULT_MAX_ITERATIONS) -> DataFrame:
@@ -2836,55 +2849,33 @@ class GraphEngine:
 
     def pagerank_all(self, iterations: int = 10) -> DataFrame:
         """Batched PageRank: ``(graph, vid, rank)`` for EVERY stored
-        graph in ONE superstep loop, with per-graph semantics equal to
-        :meth:`pagerank` (pinned by tests). PageRank CANNOT run on the
-        packed disjoint union — teleport and dangling mass would leak
-        across graphs — so this routes to the grouped kernel
-        (:func:`pregel.pagerank_grouped`), which keeps those terms
-        per-group; the graph name still joins through the small
-        broadcast index, never a per-graph literal in the plan."""
-        snap = self.snapshot()
-        graphs = snap.graphs()
-        if not graphs:
-            return _empty_frame(
-                self.spark, "graph string, vid int, rank double")
-        gidx = self.spark.createDataFrame(
-            list(enumerate(graphs)), "gidx long, graph string")
-        e = (snap.edges().join(F.broadcast(gidx), "graph")
-             .select(F.col("gidx").alias("g"), "src", "dst"))
-        v = (snap.vertices().join(F.broadcast(gidx), "graph")
-             .select(F.col("gidx").alias("g"), "vid"))
-        out = pregel.pagerank_grouped(e, v, iterations=iterations)
-        return (out.join(F.broadcast(gidx), out.g == gidx.gidx)
-                .select("graph", F.col("vid").cast("int").alias("vid"), "rank"))
+        graph in ONE superstep loop keyed by ``graph``
+        (:func:`pregel.pagerank` with ``keys=["graph"]``), with
+        per-graph semantics equal to :meth:`pagerank` (pinned by
+        tests). PageRank CANNOT run on the packed disjoint union —
+        teleport and dangling mass would leak across graphs — so the
+        loop keeps those terms per key."""
+        return self._pagerank_all(iterations, None)
 
     def pagerank_all_quantized(self, iterations: int = 10,
                                scale: int = 10**9) -> DataFrame:
         """Batched bit-exact PageRank: ``(graph, vid, rank_q)`` for
-        EVERY stored graph in ONE superstep loop, in the scaled-int64
-        arithmetic of :func:`pregel.pagerank_quantized` (``rank_q ≈
-        rank * scale``; damping the exact rational 85/100). Per-graph
-        results equal the single-graph quantized kernel (pinned by
-        tests), and — unlike the float :meth:`pagerank_all` — the
-        whole-store output is deterministic across partitionings and
-        engines, so it can be driver-oracle-checked. Routes to the
-        grouped kernel for the same reason as :meth:`pagerank_all`:
-        teleport/dangling mass must stay per-group."""
+        EVERY stored graph, the same loop as :meth:`pagerank_all` in
+        scaled-int64 arithmetic (``rank_q ≈ rank * scale``; damping the
+        exact rational 85/100). Unlike the float form, the whole-store
+        output is deterministic across partitionings and engines, so it
+        can be oracle-checked."""
+        return self._pagerank_all(iterations, scale)
+
+    def _pagerank_all(self, iterations: int, scale: int | None) -> DataFrame:
+        rank, dtype = ("rank", "double") if scale is None else ("rank_q", "long")
         snap = self.snapshot()
-        graphs = snap.graphs()
-        if not graphs:
-            return _empty_frame(
-                self.spark, "graph string, vid int, rank_q long")
-        gidx = self.spark.createDataFrame(
-            list(enumerate(graphs)), "gidx long, graph string")
-        e = (snap.edges().join(F.broadcast(gidx), "graph")
-             .select(F.col("gidx").alias("g"), "src", "dst"))
-        v = (snap.vertices().join(F.broadcast(gidx), "graph")
-             .select(F.col("gidx").alias("g"), "vid"))
-        out = pregel.pagerank_grouped_quantized(e, v, iterations=iterations,
-                                                scale=scale)
-        return (out.join(F.broadcast(gidx), out.g == gidx.gidx)
-                .select("graph", F.col("vid").cast("int").alias("vid"), "rank_q"))
+        if not snap.graphs():
+            return _empty_frame(self.spark, f"graph string, vid int, {rank} {dtype}")
+        out = pregel.pagerank(snap.edges().select("graph", "src", "dst"),
+                              snap.vertices().select("graph", "vid"), ["graph"],
+                              iterations=iterations, scale=scale)
+        return out.select("graph", F.col("vid").cast("int").alias("vid"), rank)
 
     def sssp(self, name: str, start: int) -> DataFrame:
         """``(vertex, dist)`` weighted single-source shortest paths
@@ -2933,11 +2924,8 @@ class GraphEngine:
         sources = [i * stride + start for i in range(len(graphs))]
         out = pregel.sssp_weighted(we, sources,
                                    max_iterations=max_iterations)
-        dec = out.select(
-            F.expr(f"vid div {stride}").alias("gidx"),
-            (F.col("vid") % stride).cast("int").alias("vertex"), "dist")
-        return dec.join(F.broadcast(gidx), "gidx") \
-            .select("graph", "vertex", "dist")
+        return self._unpack_labels(out, gidx, stride, keep=("dist",)) \
+            .withColumnRenamed("vid", "vertex")
 
     def pagerank(self, name: str, iterations: int = 10) -> DataFrame:
         """``(vid, rank)`` over one stored graph (float API; the
@@ -2968,24 +2956,15 @@ class GraphEngine:
         the source set, so ranks measure proximity to ``sources``.
         Raises if any source vertex is absent from the graph."""
         snap = self.snapshot()
-        return pregel.personalized_pagerank_quantized(
+        return pregel.pagerank(
             snap.edges(name).select("src", "dst"),
-            snap.vertices(name).select("vid"),
-            sources, iterations=iterations) \
+            snap.vertices(name).select("vid"), iterations=iterations,
+            scale=10**9, sources=sources) \
             .select(F.col("vid").cast("int").alias("vid"), "rank_q")
-
-    def _canonical_undirected(self, name: str) -> DataFrame:
-        """Stored graph viewed as undirected: symmetrize, then one
-        canonical ``src < dst`` row per edge (self-loops drop — they
-        contribute to no triangle/coefficient/core)."""
-        e = self.edges(name).select("src", "dst")
-        und = e.unionByName(e.select(F.col("dst").alias("src"),
-                                     F.col("src").alias("dst")))
-        return und.filter(F.col("src") < F.col("dst")).distinct()
 
     def triangle_count(self, name: str) -> DataFrame:
         """Triangle count of the stored graph viewed as undirected."""
-        return graph_algos.triangle_count(self._canonical_undirected(name))
+        return graph_algos.triangle_count(_canonical_undirected(self.edges(name)))
 
     def triangle_count_all(self) -> DataFrame:
         """Batched triangle counting: ``(graph, n_triangles)`` for
@@ -3008,11 +2987,8 @@ class GraphEngine:
             return _empty_frame(
                 self.spark, "graph string, n_triangles long")
         gidx, stride, edges, _ = self._packed_union(snap, graphs)
-        und = (edges.filter(F.col("src") != F.col("dst"))
-               .select(F.least("src", "dst").alias("src"),
-                       F.greatest("src", "dst").alias("dst"))
-               .distinct())
-        _, oriented, adj = graph_algos._forward_adjacency(und)
+        _, oriented, adj = graph_algos._forward_adjacency(
+            _canonical_undirected(edges))
         per_edge = (
             oriented
             .join(adj.select(F.col("vid").alias("u"),
@@ -3031,12 +3007,12 @@ class GraphEngine:
     def clustering_coefficient(self, name: str) -> DataFrame:
         """``(vid, deg, n_tri, coeff)`` local clustering coefficients
         of the stored graph viewed as undirected."""
-        return graph_algos.clustering_coefficient(self._canonical_undirected(name))
+        return graph_algos.clustering_coefficient(_canonical_undirected(self.edges(name)))
 
     def k_core(self, name: str, k: int) -> DataFrame:
         """``(vid, core_deg)`` of the stored graph's k-core (undirected
         degrees; iterative peeling)."""
-        return graph_algos.k_core(self._canonical_undirected(name), k)
+        return graph_algos.k_core(_canonical_undirected(self.edges(name)), k)
 
     def kcore_all(self, k: int,
                   max_rounds: int = graph_algos.KCORE_MAX_ROUNDS) -> DataFrame:
@@ -3051,24 +3027,17 @@ class GraphEngine:
         :meth:`k_core` exactly (pinned by tests). Graphs whose k-core
         is empty contribute no rows — same contract as the per-graph
         form. core_deg is a DEGREE, not a vertex id, so the decode
-        passes it through unmodded (unlike :meth:`_unpack_labels`)."""
+        passes it through unmodded (a ``keep`` column of
+        :meth:`_unpack_labels`)."""
         snap = self.snapshot()
         graphs = snap.graphs()
         if not graphs:
             return _empty_frame(
                 self.spark, "graph string, vid int, core_deg long")
         gidx, stride, edges, _ = self._packed_union(snap, graphs)
-        und = (edges.filter(F.col("src") != F.col("dst"))
-               .select(F.least("src", "dst").alias("src"),
-                       F.greatest("src", "dst").alias("dst"))
-               .distinct())
-        out = graph_algos.k_core(und, k, max_rounds=max_rounds)
-        dec = out.select(
-            F.expr(f"vid div {stride}").alias("gidx"),
-            (F.col("vid") % stride).cast("int").alias("vid"),
-            F.col("core_deg").cast("long").alias("core_deg"))
-        return dec.join(F.broadcast(gidx), "gidx") \
-            .select("graph", "vid", "core_deg")
+        out = graph_algos.k_core(_canonical_undirected(edges), k,
+                                 max_rounds=max_rounds)
+        return self._unpack_labels(out, gidx, stride, keep=("core_deg",))
 
     def clustering_all(self) -> DataFrame:
         """Batched local clustering coefficients: ``(graph, vid, deg,
@@ -3089,19 +3058,9 @@ class GraphEngine:
                 self.spark, "graph string, vid int, deg long, n_tri long, "
                     "coeff double")
         gidx, stride, edges, _ = self._packed_union(snap, graphs)
-        und = (edges.filter(F.col("src") != F.col("dst"))
-               .select(F.least("src", "dst").alias("src"),
-                       F.greatest("src", "dst").alias("dst"))
-               .distinct())
-        out = graph_algos.clustering_coefficient(und)
-        dec = out.select(
-            F.expr(f"vid div {stride}").alias("gidx"),
-            (F.col("vid") % stride).cast("int").alias("vid"),
-            F.col("deg").cast("long").alias("deg"),
-            F.col("n_tri").cast("long").alias("n_tri"),
-            F.col("coeff").cast("double").alias("coeff"))
-        return dec.join(F.broadcast(gidx), "gidx") \
-            .select("graph", "vid", "deg", "n_tri", "coeff")
+        out = graph_algos.clustering_coefficient(_canonical_undirected(edges))
+        return self._unpack_labels(out, gidx, stride,
+                                   keep=("deg", "n_tri", "coeff"))
 
     def label_propagation_all(self, iterations: int = 4) -> DataFrame:
         """Batched deterministic label propagation: ``(graph, vid,

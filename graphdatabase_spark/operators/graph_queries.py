@@ -339,17 +339,17 @@ def q_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     partitioning or engine, so the DuckDB oracle (the same 10 iterations
     unrolled as a CTE chain) hash-matches — float PageRank can't be
     oracled this way because per-vertex sums are association-order-
-    sensitive. The float variant (:func:`pregel.pagerank`) remains the
-    user API; unit tests pin the two within truncation tolerance plus
-    the float fixed-point/replica properties.
+    sensitive. The same loop in floats (``scale=None``) serves the user
+    API (``GraphEngine.pagerank``); unit tests pin the two within
+    truncation tolerance plus the float fixed-point/replica properties.
     """
     edges = dg.community_edges_cached(spark, sf_dir)
     vertices = dg.community_vertices_cached(spark, sf_dir)
-    return pregel.pagerank_quantized(edges, vertices)
+    return pregel.pagerank(edges, vertices, scale=10**9)
 
 
 def _pagerank_oracle_sql(iterations: int = 10, scale: int = 10**9) -> str:
-    """Unrolled power iteration mirroring pregel.pagerank_quantized
+    """Unrolled power iteration mirroring pregel.pagerank (scale=10**9)
     integer-for-integer: r0..r{k} CTEs, each one iteration (contribs =
     SUM(rank_q // odeg) per dst, dangling mass redistributed uniformly,
     damping as the exact rational 85/100). No recursive-CTE aggregates
@@ -396,13 +396,13 @@ def q_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     which the oracle checks)."""
     edges = dg.community_edges_cached(spark, sf_dir)
     vertices = dg.community_vertices_cached(spark, sf_dir)
-    return pregel.personalized_pagerank_quantized(edges, vertices, [PPR_SOURCE])
+    return pregel.pagerank(edges, vertices, scale=10**9, sources=[PPR_SOURCE])
 
 
 def _ppr_oracle_sql(source: int = PPR_SOURCE, iterations: int = 10,
                     scale: int = 10**9) -> str:
-    """Unrolled personalized power iteration mirroring
-    pregel.personalized_pagerank_quantized integer-for-integer (the
+    """Unrolled personalized power iteration mirroring pregel.pagerank
+    (scale=10**9, sources=[source]) integer-for-integer (the
     S = {source} case: teleport + dangling mass return to the source)."""
     base_const = (15 * scale) // 100
     parts = [

@@ -25,11 +25,18 @@ Scale design (the parts that matter at 100 TB / 1000 executors):
 - **AQE** converts the frontier side to a broadcast join at runtime
   whenever a superstep's frontier is small (first/last supersteps),
   and falls back to shuffle join for the wide middle supersteps.
+- **One loop per traversal, keyed.** Grouping columns select one graph
+  (``[]``) or a whole catalog (``["graph"]``) in the same loop:
+  :func:`_bfs_loop` for BFS, :func:`pagerank` for every PageRank. The
+  latter also takes ``scale`` (``None`` = float, an int = bit-exact
+  scaled int64) and ``sources`` (personalized PageRank: the teleport
+  weight ``t`` is 1 on the sources, 0 elsewhere; 1 everywhere without).
 """
 
 from __future__ import annotations
 
 import contextvars
+from collections.abc import Sequence
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame
@@ -315,336 +322,97 @@ def sssp_weighted(edges: DataFrame, start_vids: list[int],
     return dist
 
 
-def pagerank(edges: DataFrame, vertices: DataFrame, damping: float = 0.85,
-             iterations: int = 10) -> DataFrame:
-    """Fixed-iteration PageRank: ``(vid, rank)``, ranks summing to the
-    vertex count (the standard 1.0-per-vertex normalization).
+def pagerank(edges: DataFrame, vertices: DataFrame, keys: Sequence[str] = (),
+             iterations: int = 10, scale: int | None = None,
+             sources: list[int] | None = None) -> DataFrame:
+    """THE PageRank superstep loop, for one graph or a catalog, float or
+    bit-exact, global or personalized. Edges ``(*keys, src, dst)`` and
+    vertices ``(*keys, vid)`` give ``(*keys, vid, rank)`` in floats or
+    ``(*keys, vid, rank_q)`` in scaled int64.
 
-    Each iteration is one superstep: every vertex sends rank/out_degree
-    along its out-edges (a join + map-side-combined sum shuffle), and
-    dangling vertices' mass redistributes uniformly (one scalar agg) —
-    without that term the total mass leaks and ranks drift from the
-    power-iteration fixed point. Per-iteration cost at scale: one join
-    against the persisted pre-partitioned edges + one groupBy — the
-    same shuffle shape as the BFS kernel, with a double instead of a
-    frontier."""
-    spark = edges.sparkSession
-    e = _prepare_edges(edges)
-    out_deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("odeg"))
-    ev = e.join(out_deg, "src").select("src", "dst", "odeg").persist()
-    verts = vertices.select(F.col("vid").cast("long")).distinct().persist()
-    n = verts.count()
-    # Static dangling-vertex set, as in the quantized kernels: never
-    # re-derive the out-degree aggregate inside the loop.
-    dang = verts.join(out_deg, verts.vid == out_deg.src, "left_anti") \
-        .select("vid").persist()
-    dang.count()
-    ranks = verts.withColumn("rank", F.lit(1.0))
-    ranks = ranks.transform(_ckpt)
+    - ``keys`` are grouping columns, as in :func:`_bfs_loop`: ``[]`` for
+      one graph, ``["graph"]`` for a catalog. Each key runs as if alone:
+      its teleport and dangling mass stay within it. (A packed disjoint
+      union would leak both across graphs in proportion to their sizes.)
+    - ``scale=None`` iterates in floats with damping ``d`` = 0.85. An int
+      ``scale`` iterates in int64 with ``rank_q ≈ rank·scale``, damping
+      the exact rational 85/100 and ``div`` truncation, so the result is
+      bit-exact whatever the partitioning or engine, and DuckDB oracles
+      can hash-match it (float sums are association-order-sensitive).
+      Overflow envelope: ``85·recv ≤ 85·n·scale`` stays under 2^63 for n
+      up to ~1e8 at scale 1e9; drop ``scale`` a decade per 10× beyond.
+    - ``sources=None`` is global PageRank. A vid list (``keys=[]`` only)
+      is personalized PageRank: teleport and dangling mass return to the
+      source set, so ranks measure proximity to it.
 
-    for _ in range(iterations):
-        contribs = (
-            ranks.join(ev, ranks.vid == ev.src)
-            .select(F.col("dst").alias("vid"), (F.col("rank") / F.col("odeg")).alias("c"))
-            .groupBy("vid").agg(F.sum("c").alias("recv"))
-        )
-        # mass held by dangling vertices (no out-edges) this iteration —
-        # a 1-row aggregate broadcast into the plan, NOT collected: one
-        # materialization per iteration (the checkpoint), no extra
-        # driver round trip.
-        dangling = (
-            ranks.join(dang, "vid", "left_semi")
-            .agg(F.coalesce(F.sum("rank"), F.lit(0.0)).alias("__m"))
-        )
-        base = F.lit(1.0 - damping) + F.lit(damping) * F.col("__m") / F.lit(float(n))
-        ranks = (
-            verts.join(contribs, "vid", "left")
-            .crossJoin(F.broadcast(dangling))
-            .select("vid", (base + F.lit(damping) * F.coalesce(F.col("recv"), F.lit(0.0))).alias("rank"))
-        )
-        ranks = ranks.transform(_ckpt)
-    ev.unpersist()
-    verts.unpersist()
-    dang.unpersist()
-    e.unpersist()
-    return ranks
+    Each vertex carries a teleport weight ``t``: 1 for every vertex in
+    global PageRank, 1 only for the sources in personalized PageRank.
+    Ranks start at ``t`` (``t·scale``). Per key, ``n = sum(t)`` and ``m``
+    is the mass on dangling vertices (no out-edge; out-degree counts
+    every edge row), and each superstep sets
 
+    - float: ``t·((1−d) + d·m/n) + d·recv``, ``recv = sum(rank/odeg)``;
+    - int: ``t·((15·scale) div 100 + (85·(m div n)) div 100)
+      + (85·recv) div 100``, ``recv = sum(rank_q div odeg)``.
 
-def pagerank_grouped(edges: DataFrame, vertices: DataFrame,
-                     damping: float = 0.85, iterations: int = 10) -> DataFrame:
-    """PageRank over MANY disjoint graphs in ONE superstep loop:
-    edges ``(g, src, dst)``, vertices ``(g, vid)`` → ``(g, vid, rank)``,
-    with per-group semantics identical to :func:`pagerank` run on each
-    group alone — teleport mass is ``(1-d)`` per vertex OF THAT GROUP
-    and dangling mass redistributes within its group only. (Running the
-    ungrouped kernel on a packed disjoint union would be wrong for
-    exactly that reason: teleport and dangling mass would leak across
-    graphs in proportion to their sizes.)
-
-    The batched form of the reference's one-graph-per-request serving
-    (``secondary_server.c:588-618``; SURVEY §1.4): per superstep the
-    union of all graphs' contributions shuffles once against the
-    (g, src)-partitioned edges, and the per-group scalars (vertex
-    count, dangling mass) are one-row-per-group aggregates joined back
-    on ``g`` — never collected, and broadcast by AQE while the catalog
-    is small. Whole-store cost ≈ the cost of the largest graph's
-    iterations, not the sum of per-graph runs."""
-    e = edges.select(F.col("g").cast("long"), F.col("src").cast("long"),
-                     F.col("dst").cast("long"))
-    e = e.repartition("g", "src").persist()
-    out_deg = e.groupBy("g", "src").agg(F.count(F.lit(1)).alias("odeg"))
-    ev = e.join(out_deg, ["g", "src"]).select("g", "src", "dst", "odeg").persist()
-    verts = (vertices.select(F.col("g").cast("long"), F.col("vid").cast("long"))
-             .distinct().persist())
-    # per-group vertex count: the grouped analogue of pagerank's scalar n
-    ng = verts.groupBy("g").agg(F.count(F.lit(1)).alias("__n")).persist()
-    ng.count()
-    dang = (verts.join(out_deg,
-                       (verts.g == out_deg.g) & (verts.vid == out_deg.src),
-                       "left_anti")
-            .select("g", "vid").persist())
-    dang.count()
-    ranks = verts.withColumn("rank", F.lit(1.0))
-    ranks = ranks.transform(_ckpt)
-
-    for _ in range(iterations):
-        contribs = (
-            ranks.join(ev, (ranks.g == ev.g) & (ranks.vid == ev.src))
-            .select(ev.g.alias("g"), F.col("dst").alias("vid"),
-                    (F.col("rank") / F.col("odeg")).alias("c"))
-            .groupBy("g", "vid").agg(F.sum("c").alias("recv"))
-        )
-        # dangling mass per group — one row per graph, joined back on g
-        # (groups with no dangling vertices get no row → coalesce 0)
-        dangling = (
-            ranks.join(dang, ["g", "vid"], "left_semi")
-            .groupBy("g").agg(F.sum("rank").alias("__m"))
-        )
-        base = (F.lit(1.0 - damping)
-                + F.lit(damping) * F.coalesce(F.col("__m"), F.lit(0.0))
-                / F.col("__n"))
-        ranks = (
-            verts.join(contribs, ["g", "vid"], "left")
-            .join(dangling, "g", "left")
-            .join(ng, "g")
-            .select("g", "vid",
-                    (base + F.lit(damping)
-                     * F.coalesce(F.col("recv"), F.lit(0.0))).alias("rank"))
-        )
-        ranks = ranks.transform(_ckpt)
-    ev.unpersist()
-    verts.unpersist()
-    ng.unpersist()
-    dang.unpersist()
-    e.unpersist()
-    return ranks
-
-
-def pagerank_grouped_quantized(edges: DataFrame, vertices: DataFrame,
-                               iterations: int = 10,
-                               scale: int = 10**9) -> DataFrame:
-    """Scaled-int64 PageRank over MANY disjoint graphs in ONE superstep
-    loop: edges ``(g, src, dst)``, vertices ``(g, vid)`` →
-    ``(g, vid, rank_q)`` — :func:`pagerank_grouped`'s batching with
-    :func:`pagerank_quantized`'s bit-exact integer arithmetic, so the
-    whole-store result is oracle-checkable (float grouped PageRank is
-    not: per-vertex sums are association-order-sensitive).
-
-    Per-group semantics are identical to :func:`pagerank_quantized` run
-    on each group alone — teleport is ``(15·scale) div 100`` per vertex
-    OF THAT GROUP and dangling mass redistributes as ``__m div __n``
-    within its group only (running the single-graph kernel on a packed
-    disjoint union would leak both terms across graphs). The per-group
-    scalars (vertex count, dangling mass) are one-row-per-group
-    aggregates joined back on ``g`` — never collected. Same overflow
-    envelope as the single-graph kernel (per-group n up to ~1e8 at the
-    default scale). Reference anchor: the batched form of
-    ``secondary_server.c:588-618``'s one-graph-per-request BSP serving."""
-    e = edges.select(F.col("g").cast("long"), F.col("src").cast("long"),
-                     F.col("dst").cast("long"))
-    e = e.repartition("g", "src").persist()
-    out_deg = e.groupBy("g", "src").agg(F.count(F.lit(1)).alias("odeg"))
-    ev = e.join(out_deg, ["g", "src"]).select("g", "src", "dst", "odeg").persist()
-    verts = (vertices.select(F.col("g").cast("long"), F.col("vid").cast("long"))
-             .distinct().persist())
-    ng = verts.groupBy("g").agg(F.count(F.lit(1)).alias("__n")).persist()
-    ng.count()
-    dang = (verts.join(out_deg,
-                       (verts.g == out_deg.g) & (verts.vid == out_deg.src),
-                       "left_anti")
-            .select("g", "vid").persist())
-    dang.count()
-    base_const = (15 * scale) // 100
-    ranks = verts.withColumn("rank_q", F.lit(scale).cast("long"))
-    ranks = ranks.transform(_ckpt)
-
-    for _ in range(iterations):
-        contribs = (
-            ranks.join(ev, (ranks.g == ev.g) & (ranks.vid == ev.src))
-            .select(ev.g.alias("g"), F.col("dst").alias("vid"),
-                    F.expr("rank_q div odeg").alias("c"))
-            .groupBy("g", "vid").agg(F.sum("c").alias("recv"))
-        )
-        # dangling mass per group — one row per graph, joined back on g
-        # (groups with no dangling vertices get no row → coalesce 0)
-        dangling = (
-            ranks.join(dang, ["g", "vid"], "left_semi")
-            .groupBy("g").agg(F.sum("rank_q").cast("long").alias("__m"))
-        )
-        ranks = (
-            verts.join(contribs, ["g", "vid"], "left")
-            .join(dangling, "g", "left")
-            .join(ng, "g")
-            .select("g", "vid",
-                    (F.lit(base_const)
-                     + F.expr("(85 * (coalesce(__m, 0L) div __n)) div 100")
-                     + F.expr("(85 * coalesce(recv, 0L)) div 100")
-                     ).cast("long").alias("rank_q"))
-        )
-        ranks = ranks.transform(_ckpt)
-    ev.unpersist()
-    verts.unpersist()
-    ng.unpersist()
-    dang.unpersist()
-    e.unpersist()
-    return ranks
-
-
-def pagerank_quantized(edges: DataFrame, vertices: DataFrame,
-                       iterations: int = 10, scale: int = 10**9) -> DataFrame:
-    """PageRank in scaled-int64 arithmetic: ``(vid, rank_q)`` where
-    ``rank_q ≈ rank * scale`` and damping is the exact rational 85/100.
-
-    Same superstep structure as :func:`pagerank` (contribution join +
-    map-side-combined sum + dangling-mass redistribution), but every
-    operation is integer — per-edge contribution is ``rank_q div odeg``
-    and the damping multiply-divide is ``(85 * x) div 100`` — so the
-    result is BIT-EXACT regardless of execution order, partitioning, or
-    engine. That makes it cross-engine oracle-able (float PageRank is
-    not: per-vertex sums are association-order-sensitive). Truncation
-    error vs the float fixed point is ≤ odeg/scale per vertex per
-    iteration — ~1e-9 at the default scale, far below any ranking use.
-
-    Overflow envelope: total mass is n*scale and the hottest intermediate
-    is ``85 * recv_q ≤ 85 * n * scale``; with scale=1e9 that stays under
-    2^63 for n up to ~1e8 vertices. Beyond that, drop ``scale`` one
-    decade per 10× vertices (resolution degrades gracefully).
-
-    Reference anchor: flagship Pregel instantiation of the BSP kernel
-    (``secondary_server.c:588-618``).
+    Per superstep: one join against the (keys, src)-partitioned edges,
+    a map-side-combined sum shuffle, and one per-key ``(m, n)`` aggregate
+    joined back (a broadcast cross join without keys), never collected.
     """
-    e = _prepare_edges(edges)
-    out_deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("odeg"))
-    ev = e.join(out_deg, "src").select("src", "dst", "odeg").persist()
-    verts = vertices.select(F.col("vid").cast("long")).distinct().persist()
-    n = verts.count()
-    # The dangling-vertex SET (no outgoing edges) is static across
-    # supersteps — materialize it once; the unpersisted anti-join form
-    # re-ran the full out-degree aggregate inside every iteration.
-    dang = verts.join(out_deg, verts.vid == out_deg.src, "left_anti") \
-        .select("vid").persist()
-    dang.count()
-    base_const = (15 * scale) // 100
-    ranks = verts.withColumn("rank_q", F.lit(scale).cast("long"))
-    ranks = ranks.transform(_ckpt)
+    keys = list(keys)
+    rank = "rank" if scale is None else "rank_q"
+    e = (edges.select(*keys, F.col("src").cast("long"), F.col("dst").cast("long"))
+         .repartition(*keys, "src").persist())
+    out_deg = e.groupBy(*keys, "src").agg(F.count(F.lit(1)).alias("odeg"))
+    ev = e.join(out_deg, [*keys, "src"]).persist()
+    t = F.lit(1)
+    if sources is not None:
+        uniq = sorted({int(s) for s in sources})
+        if not uniq or keys:
+            raise ValueError("personalized PageRank needs a non-empty "
+                             "source set and one graph (keys=[])")
+        t = F.col("vid").isin(uniq).cast("int")
+    one = F.lit(1.0) if scale is None else F.lit(scale).cast("long")
+    ranks = (vertices.select(*keys, F.col("vid").cast("long")).distinct()
+             .join(out_deg.withColumnRenamed("src", "vid"), [*keys, "vid"], "left")
+             .select(*keys, "vid", t.alias("t"), F.col("odeg").isNull().alias("dang"))
+             .withColumn(rank, F.col("t") * one)
+             .transform(_ckpt))
+    if sources is not None:
+        # A source absent from the vertex table would get no teleport
+        # row: dangling mass would leak every superstep. Fail loudly.
+        n_src = ranks.agg(F.sum("t")).collect()[0][0] or 0
+        if n_src != len(uniq):
+            raise ValueError(f"{len(uniq) - n_src} source vertex id(s) "
+                             f"not present in the graph")
+    if scale is None:
+        share = F.col(rank) / F.col("odeg")
+        m = F.coalesce(F.col("__m"), F.lit(0.0))
+        step = (F.col("t") * (F.lit(1.0 - 0.85) + F.lit(0.85) * m / F.col("__n"))
+                + F.lit(0.85) * F.coalesce(F.col("recv"), F.lit(0.0)))
+    else:
+        share = F.expr(f"{rank} div odeg")
+        step = (F.col("t") * (F.lit((15 * scale) // 100)
+                              + F.expr("(85 * (coalesce(__m, 0L) div __n)) div 100"))
+                + F.expr("(85 * coalesce(recv, 0L)) div 100")).cast("long")
 
     for _ in range(iterations):
         contribs = (
-            ranks.join(ev, ranks.vid == ev.src)
-            .select(F.col("dst").alias("vid"), F.expr("rank_q div odeg").alias("c"))
-            .groupBy("vid").agg(F.sum("c").alias("recv"))
+            ranks.select(*keys, F.col("vid").alias("src"), rank).join(ev, [*keys, "src"])
+            .select(*keys, F.col("dst").alias("vid"), share.alias("c"))
+            .groupBy(*keys, "vid").agg(F.sum("c").alias("recv"))
         )
-        dangling = (
-            ranks.join(dang, "vid", "left_semi")
-            .agg(F.coalesce(F.sum("rank_q"), F.lit(0)).cast("long").alias("__m"))
-        )
-        ranks = (
-            verts.join(contribs, "vid", "left")
-            .crossJoin(F.broadcast(dangling))
-            .select(
-                "vid",
-                (F.lit(base_const)
-                 + F.expr(f"(85 * (__m div {n})) div 100")
-                 + F.expr("(85 * coalesce(recv, 0L)) div 100")
-                 ).cast("long").alias("rank_q"))
-        )
-        ranks = ranks.transform(_ckpt)
+        scalars = ranks.groupBy(*keys).agg(
+            F.sum(F.when(F.col("dang"), F.col(rank))).alias("__m"),
+            F.sum("t").alias("__n"))
+        nxt = ranks.select(*keys, "vid", "t", "dang").join(contribs, [*keys, "vid"], "left")
+        nxt = (nxt.join(scalars, keys) if keys
+               else nxt.crossJoin(F.broadcast(scalars)))
+        ranks = (nxt.select(*keys, "vid", "t", "dang", step.alias(rank))
+                 .transform(_ckpt))
     ev.unpersist()
-    verts.unpersist()
-    dang.unpersist()
     e.unpersist()
-    return ranks
-
-
-def personalized_pagerank_quantized(edges: DataFrame, vertices: DataFrame,
-                                    sources: list[int], iterations: int = 10,
-                                    scale: int = 10**9) -> DataFrame:
-    """Personalized PageRank in the same scaled-int64 arithmetic as
-    :func:`pagerank_quantized` — teleport (and dangling mass) return to
-    the SOURCE SET instead of all vertices, so ranks measure proximity
-    to the sources: ``(vid, rank_q)``, total mass |S|·scale.
-
-    Global PageRank is exactly the S = V special case of this
-    iteration; keeping the two kernels separate keeps the hot global
-    path free of the source-membership join. Bit-exact for the same
-    reason as the global variant (all-integer ops), hence
-    oracle-checkable via the same unrolled-CTE technique."""
-    spark = edges.sparkSession
-    e = _prepare_edges(edges)
-    out_deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("odeg"))
-    ev = e.join(out_deg, "src").select("src", "dst", "odeg").persist()
-    uniq_sources = sorted({int(s) for s in sources})
-    if not uniq_sources:
-        raise ValueError("personalized PageRank needs a non-empty source set")
-    s_n = len(uniq_sources)
-    src_df = spark.createDataFrame([(s,) for s in uniq_sources], "vid long")
-    verts = (vertices.select(F.col("vid").cast("long")).distinct()
-             .join(src_df.withColumn("__is_src", F.lit(1)), "vid", "left")
-             .select("vid", F.coalesce("__is_src", F.lit(0)).alias("is_src"))
-             .persist())
-    # Sources absent from the vertex table would receive no teleport
-    # row while s_n still counts them — dangling mass would leak every
-    # iteration and the |S|·scale invariant silently break. Fail loudly.
-    n_src_present = verts.filter(F.col("is_src") == 1).count()
-    if n_src_present != s_n:
-        raise ValueError(
-            f"{s_n - n_src_present} source vertex id(s) not present in the graph")
-    # Static dangling set, as in the global kernel: never re-derive the
-    # out-degree aggregate inside the loop.
-    dang = verts.join(out_deg, verts.vid == out_deg.src, "left_anti") \
-        .select("vid").persist()
-    dang.count()
-    base_const = (15 * scale) // 100
-    ranks = verts.select(
-        "vid", (F.col("is_src") * scale).cast("long").alias("rank_q"))
-    ranks = ranks.transform(_ckpt)
-
-    for _ in range(iterations):
-        contribs = (
-            ranks.join(ev, ranks.vid == ev.src)
-            .select(F.col("dst").alias("vid"), F.expr("rank_q div odeg").alias("c"))
-            .groupBy("vid").agg(F.sum("c").alias("recv"))
-        )
-        dangling = (
-            ranks.join(dang, "vid", "left_semi")
-            .agg(F.coalesce(F.sum("rank_q"), F.lit(0)).cast("long").alias("__m"))
-        )
-        ranks = (
-            verts.join(contribs, "vid", "left")
-            .crossJoin(F.broadcast(dangling))
-            .select(
-                "vid",
-                (F.col("is_src") * (F.lit(base_const)
-                                    + F.expr(f"(85 * (__m div {s_n})) div 100"))
-                 + F.expr("(85 * coalesce(recv, 0L)) div 100")
-                 ).cast("long").alias("rank_q"))
-        )
-        ranks = ranks.transform(_ckpt)
-    ev.unpersist()
-    verts.unpersist()
-    dang.unpersist()
-    e.unpersist()
-    return ranks
+    return ranks.select(*keys, "vid", rank)
 
 
 def label_propagation(edges: DataFrame, vertices: DataFrame,

@@ -304,8 +304,8 @@ def q_store_pagerank_all(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _store_pagerank_oracle_sql(iterations: int = 10, scale: int = 10**9) -> str:
-    """Unrolled grouped power iteration mirroring
-    pregel.pagerank_grouped_quantized integer-for-integer (the
+    """Unrolled grouped power iteration mirroring pregel.pagerank
+    (keys=["graph"], scale=10**9) integer-for-integer (the
     multi-graph form of graph_queries._pagerank_oracle_sql: every CTE
     carries the graph column; per-graph n and dangling mass).
     MATERIALIZED hints for the same 3^k-blowup reason."""

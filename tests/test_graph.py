@@ -467,7 +467,7 @@ def test_pagerank_quantized_tracks_float(spark):
     verts = spark.createDataFrame([(v,) for v in (1, 2, 3, 4)], "vid long")
     flt = {r["vid"]: r["rank"] for r in pregel.pagerank(edges, verts).collect()}
     qnt = {r["vid"]: r["rank_q"] for r in
-           pregel.pagerank_quantized(edges, verts).collect()}
+           pregel.pagerank(edges, verts, scale=10**9).collect()}
     assert qnt.keys() == flt.keys()
     for v in flt:
         assert abs(qnt[v] / 1e9 - flt[v]) < 1e-6, (v, qnt[v], flt[v])

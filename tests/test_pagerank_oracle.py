@@ -74,14 +74,14 @@ def test_float_kernel(frames):
 
 
 def test_quantized_kernel(frames):
-    got = _rows(pregel.pagerank_quantized(*frames, iterations=ITERATIONS),
+    got = _rows(pregel.pagerank(*frames, iterations=ITERATIONS, scale=SCALE),
                 "rank_q")
     assert got == oracle.pagerank(EDGES, VERTS, ITERATIONS, SCALE)
 
 
 def test_personalized_kernel(frames):
-    got = _rows(pregel.personalized_pagerank_quantized(
-        *frames, SOURCES, iterations=ITERATIONS), "rank_q")
+    got = _rows(pregel.pagerank(*frames, iterations=ITERATIONS, scale=SCALE,
+                                sources=SOURCES), "rank_q")
     assert got == oracle.pagerank(EDGES, VERTS, ITERATIONS, SCALE, SOURCES)
 
 

@@ -8,9 +8,16 @@ from pyspark.sql import functions as F
 
 from graphdatabase_spark.operators import store_queries as sq
 
+from tests.parity import assert_parity
+
 pytestmark = pytest.mark.slow  # heavyweight integration module: full-suite tier (pyproject.toml)
 
 REF_FIXTURES = "/root/reference/Assignment2"
+STORE_KERNELS = (
+    "store_bfs_all", "store_cc_all", "store_scc_all", "store_sssp_all",
+    "store_pagerank_all", "store_triangle_all", "store_kcore_all",
+    "store_label_propagation_all", "store_clustering_all", "store_stats",
+)
 
 
 def test_fixture_transcription_matches_reference_files():
@@ -56,11 +63,18 @@ def test_pagerank_all_quantized_equals_per_graph_kernel(spark):
                for r in eng.pagerank_all_quantized().collect()}
     for name in ("G2", "G5", "W1", "G0"):
         snap = eng.snapshot()
-        single = pregel.pagerank_quantized(
+        single = pregel.pagerank(
             snap.edges(name).select("src", "dst"),
-            snap.vertices(name).select("vid"))
+            snap.vertices(name).select("vid"), scale=10**9)
         for r in single.collect():
             assert batched[(name, r["vid"])] == r["rank_q"], (name, r)
+
+
+@pytest.mark.parametrize("name", STORE_KERNELS)
+def test_store_kernel_parity(spark, sf_dir, name):
+    """Each batched store kernel over the fixture store equals its
+    DuckDB oracle, which reads the same graphs as literal rows."""
+    assert_parity(sq.QUERIES[name](spark, sf_dir), sq.ORACLES[name], sf_dir)
 
 
 def test_fixture_engine_is_built_once_and_reused(spark):
