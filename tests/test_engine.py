@@ -23,6 +23,42 @@ G6_GOLDEN_LEVELS = {
     6: {9, 10, 6, 7, 8}, 7: {20, 21, 22, 23, 24, 25, 26, 27},
 }
 
+# The output schema (``schema.simpleString()``) of every whole-catalog
+# method, the same whether the store is empty or populated. The
+# batched-vs-per-graph tests check it where they run each kernel.
+CATALOG_SCHEMAS = {
+    "bfs_all": "struct<graph:string,vertex:int,level:int>",
+    "dfs_leaves_all": "struct<graph:string,leaf:int>",
+    "scc_all": "struct<graph:string,vid:int,scc:int>",
+    "cc_all": "struct<graph:string,vid:int,component:int>",
+    "pagerank_all": "struct<graph:string,vid:int,rank:double>",
+    "pagerank_all_quantized": "struct<graph:string,vid:int,rank_q:bigint>",
+    "sssp_all": "struct<graph:string,vertex:int,dist:double>",
+    "triangle_count_all": "struct<graph:string,n_triangles:bigint>",
+    "kcore_all": "struct<graph:string,vid:int,core_deg:bigint>",
+    "clustering_all":
+        "struct<graph:string,vid:int,deg:bigint,n_tri:bigint,coeff:double>",
+    "label_propagation_all": "struct<graph:string,vid:int,label:int>",
+    "bfs_expr": "struct<graph:string,vid:int,hops:int>",
+    "shortest_paths": "struct<graph:string,vid:int,landmark:int,hops:int>",
+}
+
+CATALOG_CALLS = {
+    "bfs_all": lambda e: e.bfs_all(1),
+    "dfs_leaves_all": lambda e: e.dfs_leaves_all(1),
+    "scc_all": lambda e: e.scc_all(),
+    "cc_all": lambda e: e.cc_all(),
+    "pagerank_all": lambda e: e.pagerank_all(5),
+    "pagerank_all_quantized": lambda e: e.pagerank_all_quantized(5),
+    "sssp_all": lambda e: e.sssp_all(1),
+    "triangle_count_all": lambda e: e.triangle_count_all(),
+    "kcore_all": lambda e: e.kcore_all(2),
+    "clustering_all": lambda e: e.clustering_all(),
+    "label_propagation_all": lambda e: e.label_propagation_all(4),
+    "bfs_expr": lambda e: e.bfs_expr("vid = 1", "vid = 3"),
+    "shortest_paths": lambda e: e.shortest_paths([1, 2]),
+}
+
 
 def _fixture_text(name):
     path = os.path.join(REF_FIXTURES, f"{name}.txt")
@@ -301,6 +337,16 @@ def test_empty_store_reads_are_empty(spark, tmp_path):
     assert eng.vertices().count() == 0
 
 
+def test_catalog_methods_on_empty_store_keep_their_schema(spark, tmp_path):
+    """Every whole-catalog method answers an empty store with no rows
+    and the schema it returns on a populated store."""
+    eng = GraphEngine(spark, str(tmp_path / "fresh"))
+    for name, call in CATALOG_CALLS.items():
+        out = call(eng)
+        assert out.schema.simpleString() == CATALOG_SCHEMAS[name], name
+        assert out.collect() == [], name
+
+
 def test_bfs_all_matches_per_graph_bfs(engine):
     """The batched multi-graph traversal must reproduce the per-graph
     kernel's (vertex, level) sets for every stored fixture graph,
@@ -309,7 +355,9 @@ def test_bfs_all_matches_per_graph_bfs(engine):
     for name in ("G1", "G3", "G5", "G6", "G12"):
         engine.add_graph(name, _fixture_text(name))
     batched = {}
-    for r in engine.bfs_all(1).collect():
+    out = engine.bfs_all(1)
+    assert out.schema.simpleString() == CATALOG_SCHEMAS["bfs_all"]
+    for r in out.collect():
         batched.setdefault(r["graph"], set()).add((r["vertex"], r["level"]))
     assert "G12" not in batched  # empty graph: no start vertex, no rows
     for name in ("G1", "G3", "G5", "G6"):
@@ -321,7 +369,9 @@ def test_dfs_leaves_all_matches_per_graph(engine):
     for name in ("G1", "G3", "G5", "G12"):
         engine.add_graph(name, _fixture_text(name))
     batched = {}
-    for r in engine.dfs_leaves_all(1).collect():
+    out = engine.dfs_leaves_all(1)
+    assert out.schema.simpleString() == CATALOG_SCHEMAS["dfs_leaves_all"]
+    for r in out.collect():
         batched.setdefault(r["graph"], set()).add(r["leaf"])
     assert "G12" not in batched
     for name in ("G1", "G3", "G5"):
@@ -337,7 +387,9 @@ def test_scc_all_matches_per_graph(engine):
         engine.add_graph(name, _fixture_text(name))
     engine.add_graph("CYC", "4\n0 1 0 0\n0 0 1 0\n1 0 0 1\n0 0 0 0\n")
     batched = {}
-    for r in engine.scc_all().collect():
+    out = engine.scc_all()
+    assert out.schema.simpleString() == CATALOG_SCHEMAS["scc_all"]
+    for r in out.collect():
         batched.setdefault(r["graph"], set()).add((r["vid"], r["scc"]))
     assert "G12" not in batched  # empty graph: no vertices, no rows
     for name in ("G1", "G2", "CYC"):
@@ -373,7 +425,9 @@ def test_cc_all_matches_per_graph(engine):
         engine.add_graph(name, _fixture_text(name))
     engine.add_graph("MC", "5\n0 1 0 0 0\n1 0 0 0 0\n0 0 0 1 0\n0 0 1 0 0\n0 0 0 0 0\n")
     batched = {}
-    for r in engine.cc_all().collect():
+    out = engine.cc_all()
+    assert out.schema.simpleString() == CATALOG_SCHEMAS["cc_all"]
+    for r in out.collect():
         batched.setdefault(r["graph"], set()).add((r["vid"], r["component"]))
     assert "G12" not in batched
     for name in ("G1", "G3", "MC"):
@@ -394,7 +448,9 @@ def test_pagerank_all_matches_per_graph(engine):
     engine.add_graph("PB", "4\n0 1 1 0\n0 0 1 0\n1 0 0 1\n0 0 0 0\n")
     engine.add_graph("PC", _fixture_text("G1"))
     batched = {}
-    for r in engine.pagerank_all(iterations=8).collect():
+    out = engine.pagerank_all(iterations=8)
+    assert out.schema.simpleString() == CATALOG_SCHEMAS["pagerank_all"]
+    for r in out.collect():
         batched.setdefault(r["graph"], {})[r["vid"]] = r["rank"]
     for name in ("PA", "PB", "PC"):
         want = {r["vid"]: r["rank"]
@@ -516,7 +572,9 @@ def test_sssp_all_matches_per_graph(engine):
     engine.add_graph("H", "4\n0 1 0 0\n0 0 1 0\n0 0 0 1\n0 0 0 0\n")  # 0/1 path
     engine.add_graph("G12", _fixture_text("G12"))          # empty
     batched = {}
-    for r in engine.sssp_all(1).collect():
+    out = engine.sssp_all(1)
+    assert out.schema.simpleString() == CATALOG_SCHEMAS["sssp_all"]
+    for r in out.collect():
         batched.setdefault(r["graph"], {})[r["vertex"]] = r["dist"]
     assert set(batched) == {"W", "H"}  # G12 lacks vertex 1 entirely
     for name in ("W", "H"):

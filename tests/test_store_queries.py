@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 from graphdatabase_spark.operators import store_queries as sq
 
 from tests.parity import assert_parity
+from tests.test_engine import CATALOG_SCHEMAS
 
 pytestmark = pytest.mark.slow  # heavyweight integration module: full-suite tier (pyproject.toml)
 
@@ -106,8 +107,9 @@ def test_triangle_count_all_equals_per_graph_kernel(spark):
     identical. G2's directed asymmetry still closes one undirected
     triangle {1,2,4}; W1/W2 each close two; the empty graph reports 0."""
     eng = sq.fixture_engine(spark)
-    batched = {r["graph"]: r["n_triangles"]
-               for r in eng.triangle_count_all().collect()}
+    out = eng.triangle_count_all()
+    assert out.schema.simpleString() == CATALOG_SCHEMAS["triangle_count_all"]
+    batched = {r["graph"]: r["n_triangles"] for r in out.collect()}
     assert set(batched) == set(sq.FIXTURE_GRAPHS)
     assert batched["G2"] == 1 and batched["W1"] == 2 and batched["W2"] == 2
     assert batched["G12"] == 0
@@ -125,7 +127,9 @@ def test_kcore_all_equals_per_graph_kernel(spark):
     degree, never modded by the decode."""
     eng = sq.fixture_engine(spark)
     batched = {}
-    for r in eng.kcore_all(sq.KCORE_ALL_K).collect():
+    out = eng.kcore_all(sq.KCORE_ALL_K)
+    assert out.schema.simpleString() == CATALOG_SCHEMAS["kcore_all"]
+    for r in out.collect():
         batched.setdefault(r["graph"], {})[r["vid"]] = r["core_deg"]
     # graphs with empty 2-cores contribute no rows
     assert "G1" not in batched and "G6" not in batched
@@ -145,7 +149,9 @@ def test_label_propagation_all_equals_per_graph_kernel(spark):
     invariant within a graph's packed offset."""
     eng = sq.fixture_engine(spark)
     batched = {}
-    for r in eng.label_propagation_all(iterations=4).collect():
+    out = eng.label_propagation_all(iterations=4)
+    assert out.schema.simpleString() == CATALOG_SCHEMAS["label_propagation_all"]
+    for r in out.collect():
         batched.setdefault(r["graph"], {})[r["vid"]] = r["label"]
     for name in sq.FIXTURE_GRAPHS:
         single = {r["vid"]: r["label"]
@@ -160,7 +166,9 @@ def test_clustering_all_equals_per_graph_kernel(spark):
     ties break by in-graph vid order either way."""
     eng = sq.fixture_engine(spark)
     batched = {}
-    for r in eng.clustering_all().collect():
+    out = eng.clustering_all()
+    assert out.schema.simpleString() == CATALOG_SCHEMAS["clustering_all"]
+    for r in out.collect():
         batched.setdefault(r["graph"], {})[r["vid"]] = (
             r["deg"], r["n_tri"], r["coeff"])
     for name in sq.FIXTURE_GRAPHS:
