@@ -170,23 +170,141 @@ def _canonical_undirected(edges: DataFrame) -> DataFrame:
             .distinct())
 
 
-def _pack_ids(df: DataFrame, gidx: DataFrame, stride: int,
-              cols: tuple[str, ...],
-              keep: tuple[str, ...] = ()) -> DataFrame:
-    """Map per-graph vertex ids into disjoint long ranges
-    (``gidx * stride + id``) via a broadcast join against the small
-    ``(gidx, graph)`` index DataFrame, carrying ``keep`` columns (edge
-    weights) through unchanged. The join keeps the PLAN size
-    constant regardless of catalog size — the previous literal
-    ``create_map`` encode grew the plan by two entries per stored
-    graph, which blows up at a 10^5-graph catalog even though the data
-    path is fine (pinned by the plan-size test in test_engine.py).
-    The inner join also restricts the pack to the graphs LISTED in
-    ``gidx``, which is how batched kernels scope themselves to
-    participating graphs without a second filter."""
-    packed = [(F.col("gidx") * stride + F.col(c).cast("long")).alias(c)
-              for c in cols]
-    return df.join(F.broadcast(gidx), "graph").select(*packed, *keep)
+def _triplets(e: DataFrame, v: DataFrame) -> DataFrame:
+    """``(graph, src, edge, dst)``: each ``(graph, src, dst, edge)`` row
+    of ``e`` between the struct rows of its endpoints in ``v``
+    (``(graph, vid, ...)``) — two (graph, vid)-keyed equi-joins,
+    broadcast or shuffle per AQE."""
+    vcols = [c for c in v.columns if c != "graph"]
+
+    def _endpoint(key: str) -> DataFrame:
+        return v.select(
+            "graph", F.col("vid").alias(key),
+            F.struct(*[F.col(c) for c in vcols]).alias(f"__{key}_s"))
+
+    return (e.join(_endpoint("src"), ["graph", "src"])
+            .join(_endpoint("dst"), ["graph", "dst"])
+            .select("graph", F.col("__src_s").alias("src"), "edge",
+                    F.col("__dst_s").alias("dst")))
+
+
+def _messages(trip: DataFrame, agg: str, send_to_src: str | None,
+              send_to_dst: str | None, alias: str) -> DataFrame:
+    """One round of message passing over a triplet view: each edge
+    sends ``send_to_src`` to its source and ``send_to_dst`` to its
+    destination (SQL expressions; either may be None), and ``agg``
+    folds each vertex's messages, seen as the column ``msg``, into
+    ``alias`` — one map-side-combined ``(graph, vid)`` aggregate."""
+    legs = [trip.select("graph", F.col(f"{end}.vid").alias("vid"),
+                        F.expr(send).alias("msg"))
+            for end, send in (("src", send_to_src), ("dst", send_to_dst))
+            if send is not None]
+    msgs = legs[0] if len(legs) == 1 else legs[0].unionByName(legs[1])
+    return msgs.groupBy("graph", "vid").agg(F.expr(agg).alias(alias))
+
+
+def _participants(snap: GraphSnapshot, start: int
+                  ) -> tuple[DataFrame, DataFrame]:
+    """The start-vertex catalog kernels' participation rule: the graphs
+    whose vertex table holds ``start``, as their ``(graph, src, dst)``
+    edges, so a graph lacking the start never enters a superstep, and
+    ``(graph, vid)`` starts, one row per graph (concurrent appends can
+    duplicate a vertex row, which would double that graph's rows in a
+    kernel's joins). Lazy: only ``sssp_all`` collects the graph list,
+    because packing needs it."""
+    held = (snap.vertices().filter(F.col("vid") == start)
+            .select("graph", F.col("vid").cast("long")))
+    edges = (snap.edges().select("graph", "src", "dst")
+             .join(held, "graph", "left_semi"))
+    return edges, held.distinct()
+
+
+def _nonnegative(we: DataFrame, what: str) -> DataFrame:
+    """``we`` once a scan finds no negative ``weight``: the relaxation
+    kernel assumes non-negativity, and on a cyclic graph a negative
+    weight would silently converge to the iteration bound instead of a
+    meaningful distance."""
+    if not we.filter(F.col("weight") < 0).isEmpty():
+        raise ValueError(
+            f"{what} has negative edge weights; shortest paths are "
+            f"defined here for non-negative weights only")
+    return we
+
+
+class _PackedIds:
+    """The one packed-id codec of the whole-catalog kernels: graph
+    ``gidx`` (its place in the graph list) and vertex ``vid`` pack into
+    the long ``gidx * stride + vid``. No edge joins two graphs, so a
+    kernel whose answer for a graph depends only on that graph's own
+    vertices and edges (components, SCC, label propagation, SSSP,
+    k-core, the triangle family) runs once over the packed union and
+    gives every graph its single-graph answer; ties broken by vid keep
+    their in-graph order. PageRank cannot use it: teleport and dangling
+    mass spread over every vertex of the union would leak across graphs
+    in proportion to their sizes. So ``pagerank_all`` keys its loop by
+    ``graph``, as the BFS forms do, which then need no stride.
+
+    The codec owns the stride (with its int64 overflow guard), the
+    ``(gidx, graph)`` index, packing and decoding. Both directions are
+    broadcast joins against the index, so the plan size does not depend
+    on the catalog size (a literal ``create_map`` grew two entries per
+    graph), and the inner join of :meth:`pack` scopes a frame to the
+    indexed graphs."""
+
+    def __init__(self, spark: SparkSession, graphs: list[str], bound: int):
+        self.stride = int(bound) + 1
+        if len(graphs) * self.stride >= 2 ** 62:
+            raise ValueError(
+                f"packed vertex ids would overflow int64: {len(graphs)} "
+                f"graphs x stride {self.stride}; run the per-graph kernels "
+                f"or partition the catalog")
+        self.graphs = list(graphs)
+        self.index = spark.createDataFrame(
+            list(enumerate(graphs)), "gidx long, graph string")
+
+    @classmethod
+    def of(cls, snap: GraphSnapshot, graphs: list[str]) -> _PackedIds:
+        """The codec of ``graphs`` in ``snap``, in one aggregate. The
+        bound is the ACTUAL max vertex id over the store, never meta
+        ``n`` alone: matrix-ingested graphs keep vids ⊆ 1..n, but
+        append/merge accept arbitrary user vids (e.g. a stream keying
+        src by raw user_id), and a stride below max(vid)+1 would pack two
+        graphs' vids into overlapping ranges and decode labels to the
+        WRONG graph — silently. Meta ``n`` still takes part, so a
+        declared-size graph with no vertex rows yet cannot shrink it."""
+        bound = (snap.vertices().agg(F.max("vid").cast("long").alias("m"))
+                 .unionByName(snap.meta().agg(F.max("n").cast("long")
+                                              .alias("m")))
+                 .agg(F.max("m")).collect()[0][0] or 0)
+        return cls(snap.spark, graphs, bound)
+
+    def pack(self, df: DataFrame,
+             ids: tuple[str, ...] = ("src", "dst")) -> DataFrame:
+        """The indexed graphs' rows of ``df`` without ``graph``: the
+        ``ids`` columns packed, the others (weights) passed through."""
+        keep = [c for c in df.columns if c not in (*ids, "graph")]
+        return df.join(F.broadcast(self.index), "graph").select(
+            *[(F.col("gidx") * self.stride + F.col(c).cast("long")).alias(c)
+              for c in ids], *keep)
+
+    def seeds(self, vid: int) -> list[int]:
+        """``vid`` packed in every indexed graph."""
+        return [g * self.stride + vid for g in range(len(self.graphs))]
+
+    def unpack(self, out: DataFrame,
+               ids: tuple[str, ...] = ("vid",)) -> DataFrame:
+        """Decode a kernel result to ``(graph, *columns)``: the ``ids``
+        columns (vertex ids and vid-valued labels) lose the offset, the
+        others (distances, degrees, counts) pass through. ``div`` is
+        exact on longs, where float division was exact only below
+        2^53."""
+        keep = [c for c in out.columns if c not in ids]
+        dec = out.select(
+            F.expr(f"{ids[0]} div {self.stride}").alias("gidx"),
+            *[(F.col(c) % self.stride).cast("int").alias(c) for c in ids],
+            *keep)
+        return dec.join(F.broadcast(self.index), "gidx") \
+            .select("graph", *ids, *keep)
 
 
 def _check_layout(prev: dict | None, eff: int | None) -> None:
@@ -531,7 +649,7 @@ class GraphSnapshot:
         with the same CRC-32 Spark uses — no job); the graph filter
         stays a literal isin up to a bounded list size, beyond which it
         becomes a broadcast semi-join so the PLAN never grows O(catalog)
-        (same discipline as _pack_ids)."""
+        (same discipline as _PackedIds)."""
         if self.buckets:
             gbs = sorted({metastore.graph_bucket(g, self.buckets)
                           for g in names})
@@ -2495,24 +2613,46 @@ class GraphEngine:
         levels = dfs_mod.canonical_bfs_levels(dfs_mod.adjacency(rows), start)
         return self._int_frame(vertex=list(levels), level=list(levels.values()))
 
+    def _catalog(self, ddl: str, run, name: str | None = None) -> DataFrame:
+        """THE whole-catalog prologue. Pin one snapshot, list its graphs
+        (only ``name`` when given) and hand both to ``run``, which builds
+        the kernel. No graph, or ``run`` returning None (none takes
+        part), answers the exact ``ddl`` schema with no Spark job, so
+        ``ddl`` spells out the kernel's NOT NULL columns too. Otherwise
+        ``ddl`` names and casts the kernel's columns by position."""
+        snap = self.snapshot()
+        graphs = [g for g in snap.graphs() if name in (None, g)]
+        out = run(snap, graphs) if graphs else None
+        if out is None:
+            return _empty_frame(self.spark, ddl)
+        return out.select(*[F.col(c).cast(f.dataType).alias(f.name) for c, f
+                            in zip(out.columns, StructType.fromDDL(ddl))])
+
+    def _packed(self, ddl: str, kernel,
+                ids: tuple[str, ...] = ("vid",)) -> DataFrame:
+        """A per-graph-disjoint ``kernel(edges, vertices)`` over the
+        packed union of every stored graph (:class:`_PackedIds`): the
+        ``ids`` columns of its result are decoded and the rest pass
+        through."""
+        def run(snap: GraphSnapshot, graphs: list[str]) -> DataFrame:
+            codec = _PackedIds.of(snap, graphs)
+            return codec.unpack(kernel(codec.pack(snap.edges()),
+                                       codec.pack(snap.vertices(), ("vid",))),
+                                ids)
+        return self._catalog(ddl, run)
+
     def bfs_all(self, start: int) -> DataFrame:
         """Batched op 4: ``(graph, vertex, level)`` from ``start`` for
         EVERY stored graph that contains the start vertex, in ONE
-        superstep loop over the store's single partitioned edge table
-        (the set-oriented form of the reference's one-graph-per-request
-        serving — SURVEY §1.4's "a directory of graphs is one table").
-        Per-graph results are identical to :meth:`bfs` (pinned by
-        tests over the reference fixture corpus)."""
-        snap = self.snapshot()  # one consistent view across both tables
-        starts = (snap.vertices().filter(F.col("vid") == start)
-                  .select("graph", F.col("vid").cast("long")))
-        # Only participating graphs' edges get shuffled/persisted: a
-        # store where most graphs lack the start vertex must not pay
-        # O(all edges) per superstep for graphs that can never traverse.
-        edges = (snap.edges().select("graph", "src", "dst")
-                 .join(starts.select("graph").distinct(), "graph", "left_semi"))
-        out = pregel.bfs_levels_grouped(edges, starts)
-        return out.select("graph", F.col("vid").cast("int").alias("vertex"), "level")
+        superstep loop keyed by ``graph`` (the set-oriented form of the
+        reference's one-graph-per-request serving — SURVEY §1.4's "a
+        directory of graphs is one table"). Per-graph results are
+        identical to :meth:`bfs` (pinned by tests over the reference
+        fixture corpus)."""
+        return self._catalog(
+            "graph string, vertex int, level int NOT NULL",
+            lambda snap, graphs: pregel.bfs_levels(*_participants(snap, start),
+                                                   ["graph"]))
 
     def bfs_expr(self, from_expr: str, to_expr: str,
                  name: str | None = None,
@@ -2530,29 +2670,27 @@ class GraphEngine:
 
         Set-oriented like the other store kernels: EVERY stored graph
         (or just ``name``) traverses in one superstep loop —
-        ``pregel.bfs_levels_grouped`` seeds all matching sources at
-        level 0, so "distance from the set" is exactly the grouped
-        kernel's level. The per-graph minimum is one map-side-combined
-        agg + a self-join back — no window over the full level set."""
-        snap = self.snapshot()
-        # distinct: duplicated vertex rows (concurrent appends) must
-        # not duplicate seeds or target rows
-        verts = snap.vertices(name, props=True).distinct()
-        starts = verts.filter(from_expr) \
-            .select("graph", F.col("vid").cast("long"))
-        edges = (snap.edges(name).select("graph", "src", "dst")
-                 .join(starts.select("graph").distinct(), "graph",
-                       "left_semi"))
-        levels = pregel.bfs_levels_grouped(edges, starts, max_hops)
-        targets = levels.join(
-            verts.filter(to_expr).select("graph",
-                                         F.col("vid").cast("long")),
-            ["graph", "vid"])
-        nearest = targets.groupBy("graph").agg(
-            F.min("level").alias("level"))
-        return (targets.join(nearest, ["graph", "level"])
-                .select("graph", F.col("vid").cast("int").alias("vid"),
-                        F.col("level").alias("hops")))
+        ``pregel.bfs_levels`` keyed by ``graph`` seeds all matching
+        sources at level 0, so "distance from the set" is exactly the
+        level. The per-graph minimum is one map-side-combined agg + a
+        self-join back — no window over the full level set."""
+        def run(snap: GraphSnapshot, graphs: list[str]) -> DataFrame:
+            # distinct: duplicated vertex rows (concurrent appends) must
+            # not duplicate seeds or target rows
+            verts = snap.vertices(name, props=True).distinct()
+            starts = verts.filter(from_expr).select("graph", "vid")
+            edges = (snap.edges(name).select("graph", "src", "dst")
+                     .join(starts, "graph", "left_semi"))
+            levels = pregel.bfs_levels(edges, starts, ["graph"], max_hops)
+            targets = levels.join(
+                verts.filter(to_expr).select("graph",
+                                             F.col("vid").cast("long")),
+                ["graph", "vid"])
+            nearest = targets.groupBy("graph").agg(
+                F.min("level").alias("level"))
+            return (targets.join(nearest, ["graph", "level"])
+                    .select("graph", "vid", "level"))
+        return self._catalog("graph string, vid int, hops int NOT NULL", run, name)
 
     def shortest_paths(self, landmarks: list[int],
                        name: str | None = None,
@@ -2562,44 +2700,36 @@ class GraphEngine:
         ``(graph, vid, landmark, hops)`` — the hop distance from every
         vertex TO each landmark it can reach (directed; unreachable
         (vertex, landmark) pairs contribute no row, GraphFrames'
-        absent-map-entry). One grouped kernel run answers ALL
-        (graph, landmark) pairs at once: BFS from each landmark over
-        the REVERSED edges (distance-to ≡ reversed distance-from),
-        with the landmark packed into the grouping key so k landmarks
-        are k independent traversals inside one superstep loop.
+        absent-map-entry). One keyed BFS answers ALL (graph, landmark)
+        pairs at once: BFS from each landmark over the REVERSED edges
+        (distance-to ≡ reversed distance-from), keyed by
+        ``["graph", "lm"]`` so k landmarks are k independent traversals
+        inside one superstep loop.
 
         Scale shape: edges replicate k× (k = landmarks, small by the
         API's own contract — GraphX's shortestPaths ships a k-entry
         map per vertex, the same factor) via a broadcast join against
         the (graph, landmark) pairs actually present; graphs lacking a
         landmark vid never enter that landmark's traversal. The
-        landmark is a second GROUPING KEY of the superstep loop
-        (``_bfs_loop`` key_cols) — never packed into the graph-name
-        string, so arbitrary graph names stay safe."""
+        landmark is a second grouping key — never packed into the
+        graph-name string, so arbitrary graph names stay safe."""
         if not landmarks:
             raise ValueError("shortest_paths needs at least one landmark")
-        spark = self.spark
-        snap = self.snapshot()
-        lms = spark.createDataFrame(
-            sorted({(int(v),) for v in landmarks}), "lm long")
-        verts = snap.vertices(name).select("graph",
-                                           F.col("vid").cast("long"))
-        starts = (verts.join(F.broadcast(lms),
-                             verts["vid"] == lms["lm"])
-                  .select("graph", "lm", "vid").distinct())
-        rev = snap.edges(name).select(
-            "graph", F.col("dst").cast("long").alias("src"),
-            F.col("src").cast("long").alias("dst"))
-        lmg = starts.select("graph", "lm").distinct()
-        e2 = (rev.join(F.broadcast(lmg), "graph")
-              .select("graph", "lm", "src", "dst")
-              .repartition("graph", "src").persist())
-        levels = pregel._bfs_loop(e2, starts, ["graph", "lm"], max_hops)
-        e2.unpersist()
-        return levels.select(
-            "graph", F.col("vid").cast("int").alias("vid"),
-            F.col("lm").cast("int").alias("landmark"),
-            F.col("level").alias("hops"))
+
+        def run(snap: GraphSnapshot, graphs: list[str]) -> DataFrame:
+            vid = F.col("vid").cast("long")
+            starts = (snap.vertices(name)
+                      .filter(F.col("vid").isin(sorted({int(v) for v in landmarks})))
+                      .select("graph", vid.alias("lm"), vid))
+            rev = snap.edges(name).select(
+                "graph", F.col("dst").alias("src"), F.col("src").alias("dst"))
+            edges = rev.join(
+                F.broadcast(starts.select("graph", "lm").distinct()), "graph")
+            levels = pregel.bfs_levels(edges, starts, ["graph", "lm"],
+                                       max_hops)
+            return levels.select("graph", "vid", "lm", "level")
+        return self._catalog(
+            "graph string, vid int, landmark int, hops int NOT NULL", run, name)
 
     def triplets(self, name: str | None = None) -> DataFrame:
         """The GraphFrames ``triplets`` view: one row per stored edge
@@ -2618,20 +2748,9 @@ class GraphEngine:
         # undeduped endpoint join would multiply triplets and corrupt
         # every aggregate built on them
         v = snap.vertices(name, props=True).distinct()
-        vcols = [c for c in v.columns if c != "graph"]
         ecols = [c for c in e.columns if c != "graph"]
-
-        def _endpoint(key: str) -> DataFrame:
-            return v.select(
-                "graph", F.col("vid").alias(key),
-                F.struct(*[F.col(c) for c in vcols]).alias(f"__{key}_s"))
-
-        return (e.join(_endpoint("src"), ["graph", "src"])
-                .join(_endpoint("dst"), ["graph", "dst"])
-                .select("graph",
-                        F.col("__src_s").alias("src"),
-                        F.struct(*[F.col(c) for c in ecols]).alias("edge"),
-                        F.col("__dst_s").alias("dst")))
+        return _triplets(e.select("graph", "src", "dst", F.struct(
+            *[F.col(c) for c in ecols]).alias("edge")), v)
 
     def aggregate_messages(self, agg: str,
                            send_to_src: str | None = None,
@@ -2659,19 +2778,8 @@ class GraphEngine:
         if send_to_src is None and send_to_dst is None:
             raise ValueError("aggregate_messages: provide send_to_src "
                              "and/or send_to_dst")
-        trip = self.triplets(name)
-        legs = []
-        if send_to_src is not None:
-            legs.append(trip.select(
-                "graph", F.col("src.vid").alias("vid"),
-                F.expr(send_to_src).alias("msg")))
-        if send_to_dst is not None:
-            legs.append(trip.select(
-                "graph", F.col("dst.vid").alias("vid"),
-                F.expr(send_to_dst).alias("msg")))
-        msgs = legs[0] if len(legs) == 1 else legs[0].unionByName(legs[1])
-        return (msgs.groupBy("graph", "vid")
-                .agg(F.expr(agg).alias("agg_value")))
+        return _messages(self.triplets(name), agg, send_to_src, send_to_dst,
+                         "agg_value")
 
     def dfs_leaves(self, name: str, start: int) -> DataFrame:
         """Deterministic canonical-DFS respec of the reference's racy
@@ -2700,13 +2808,11 @@ class GraphEngine:
         already group-per-graph (one ``applyInPandas`` group each), so
         the whole store traverses in one job. Per-graph results equal
         :meth:`dfs_leaves` (pinned by tests)."""
-        snap = self.snapshot()  # one consistent view across both tables
-        starts = (snap.vertices().filter(F.col("vid") == start)
-                  .select("graph", F.col("vid").cast("long").alias("start")))
-        edges = (snap.edges().select("graph", "src", "dst")
-                 .join(starts.select("graph").distinct(), "graph", "left_semi"))
-        out = dfs_mod.dfs_leaves(edges, starts)
-        return out.select("graph", F.col("leaf").cast("int").alias("leaf"))
+        def run(snap: GraphSnapshot, graphs: list[str]) -> DataFrame:
+            edges, starts = _participants(snap, start)
+            return dfs_mod.dfs_leaves(edges,
+                                      starts.withColumnRenamed("vid", "start"))
+        return self._catalog("graph string, leaf int", run)
 
     def stats(self) -> DataFrame:
         """Catalog statistics for every stored graph in one pass:
@@ -2763,89 +2869,30 @@ class GraphEngine:
             snap.vertices(name).select("vid"),
             max_iterations=max_iterations)
 
-    def _packed_union(self, snap: GraphSnapshot, graphs: list[str]):
-        """One consistent packed view of the whole store for batched
-        per-graph-disjoint kernels: ``(gidx_df, stride, edges,
-        vertices)`` with every graph's vids mapped into a disjoint
-        long range. The stride is derived from the ACTUAL max vertex
-        id across the store (one aggregate over the small vertices
-        table), never from meta ``n`` alone: matrix-ingested graphs
-        keep vids ⊆ 1..n, but append/merge accept arbitrary user vids
-        (e.g. a stream keying src by raw user_id), and a stride below
-        max(vid)+1 would pack two graphs' vids into overlapping ranges
-        and decode kernel labels to the WRONG graph — silently. meta
-        ``n`` still participates as a lower bound so a declared-size
-        graph with no vertex rows yet cannot shrink the stride.
-        Encode/decode are broadcast joins against the (gidx, graph)
-        index — constant plan size."""
-        bound = (snap.vertices().agg(F.max("vid").cast("long").alias("m"))
-                 .unionByName(snap.meta().agg(F.max("n").cast("long")
-                                              .alias("m")))
-                 .agg(F.max("m")).collect()[0][0] or 0)
-        stride = int(bound) + 1
-        if len(graphs) * stride >= 2 ** 62:
-            raise ValueError(
-                f"packed vertex ids would overflow int64: {len(graphs)} "
-                f"graphs x stride {stride}; run the per-graph kernels or "
-                f"partition the catalog")
-        gidx = self.spark.createDataFrame(
-            list(enumerate(graphs)), "gidx long, graph string")
-        e = _pack_ids(snap.edges(), gidx, stride, ("src", "dst"))
-        v = _pack_ids(snap.vertices(), gidx, stride, ("vid",))
-        return gidx, stride, e, v
-
-    def _unpack_labels(self, out: DataFrame, gidx: DataFrame, stride: int,
-                       *labels: str, keep: tuple[str, ...] = ()) -> DataFrame:
-        """Decode a packed kernel result ``(vid, *labels, *keep)`` back
-        to ``(graph, vid, *labels, *keep)``: ``vid`` and the vertex-id
-        ``labels`` lose their packing offset, and ``keep`` columns
-        (distances, degrees, coefficients) pass through unchanged.
-        ``div`` is exact integer division on longs — float division was
-        exact only below 2^53 and could mis-decode labels on a very
-        large store."""
-        dec = out.select(
-            F.expr(f"vid div {stride}").alias("gidx"),
-            *[(F.col(c) % stride).cast("int").alias(c) for c in ("vid", *labels)],
-            *keep)
-        return dec.join(F.broadcast(gidx), "gidx") \
-            .select("graph", "vid", *labels, *keep)
 
     def scc_all(self,
                 max_iterations: int = pregel.DEFAULT_MAX_ITERATIONS) -> DataFrame:
         """Batched SCC: ``(graph, vid, scc)`` for EVERY stored graph in
-        ONE kernel run (the set-oriented form, like :meth:`bfs_all`).
-        No inter-graph edges exist, so components can never span
-        graphs — packing each graph's vids into a disjoint long range
-        (:meth:`_packed_union`) lets the single-graph kernel decompose
-        the whole store at once, and the labels decode back to
-        (graph, min member vid) exactly. Per-graph results equal
-        :meth:`scc` (pinned by tests)."""
-        snap = self.snapshot()
-        graphs = snap.graphs()
-        if not graphs:
-            return _empty_frame(self.spark, "graph string, vid int, scc int")
-        gidx, stride, e, v = self._packed_union(snap, graphs)
-        out = pregel.strongly_connected_components(e, v,
-                                                   max_iterations=max_iterations)
-        return self._unpack_labels(out, gidx, stride, "scc")
+        ONE kernel run over the packed union (:class:`_PackedIds`); the
+        min-member labels decode back to per-graph vids. Per-graph
+        results equal :meth:`scc` (pinned by tests)."""
+        return self._packed(
+            "graph string, vid int, scc int",
+            lambda e, v: pregel.strongly_connected_components(
+                e, v, max_iterations=max_iterations), ("vid", "scc"))
 
     def cc_all(self,
                max_iterations: int = pregel.DEFAULT_MAX_ITERATIONS) -> DataFrame:
         """Batched connected components: ``(graph, vid, component)``
         for EVERY stored graph (viewed undirected, like
         :meth:`connected_components`) in ONE large-star/small-star run
-        over the packed union. Min-label components can never cross the
-        disjoint vid ranges, so per-graph results equal the per-graph
-        kernel exactly (pinned by tests); whole-store cost is one
-        O(log n) contraction, not one run per graph."""
-        snap = self.snapshot()
-        graphs = snap.graphs()
-        if not graphs:
-            return _empty_frame(
-                self.spark, "graph string, vid int, component int")
-        gidx, stride, e, v = self._packed_union(snap, graphs)
-        out = pregel.connected_components(e, v, max_iterations=max_iterations)
-        return self._unpack_labels(out, gidx, stride, "component")
+        over the packed union: one O(log n) contraction, not one run per
+        graph. Per-graph results equal the per-graph kernel (pinned by
+        tests)."""
+        return self._packed(
+            "graph string, vid int, component int",
+            lambda e, v: pregel.connected_components(
+                e, v, max_iterations=max_iterations), ("vid", "component"))
 
     def pagerank_all(self, iterations: int = 10) -> DataFrame:
         """Batched PageRank: ``(graph, vid, rank)`` for EVERY stored
@@ -2868,14 +2915,13 @@ class GraphEngine:
         return self._pagerank_all(iterations, scale)
 
     def _pagerank_all(self, iterations: int, scale: int | None) -> DataFrame:
-        rank, dtype = ("rank", "double") if scale is None else ("rank_q", "long")
-        snap = self.snapshot()
-        if not snap.graphs():
-            return _empty_frame(self.spark, f"graph string, vid int, {rank} {dtype}")
-        out = pregel.pagerank(snap.edges().select("graph", "src", "dst"),
-                              snap.vertices().select("graph", "vid"), ["graph"],
-                              iterations=iterations, scale=scale)
-        return out.select("graph", F.col("vid").cast("int").alias("vid"), rank)
+        rank = "rank double" if scale is None else "rank_q long"
+        return self._catalog(
+            f"graph string, vid int, {rank}",
+            lambda snap, graphs: pregel.pagerank(
+                snap.edges().select("graph", "src", "dst"),
+                snap.vertices().select("graph", "vid"), ["graph"],
+                iterations=iterations, scale=scale))
 
     def sssp(self, name: str, start: int) -> DataFrame:
         """``(vertex, dist)`` weighted single-source shortest paths
@@ -2885,12 +2931,8 @@ class GraphEngine:
         the relaxation kernel assumes non-negativity, and on a cyclic
         graph a negative weight would silently converge to the
         iteration bound instead of a meaningful distance."""
-        we = self.weighted_edges(name) \
-            .select("src", "dst", F.col("w").alias("weight"))
-        if not we.filter(F.col("weight") < 0).isEmpty():
-            raise ValueError(
-                f"graph {name!r} has negative edge weights; shortest "
-                f"paths are defined here for non-negative weights only")
+        we = _nonnegative(self.weighted_edges(name).select(
+            "src", "dst", F.col("w").alias("weight")), f"graph {name!r}")
         out = pregel.sssp_weighted(we, [start])
         return out.select(F.col("vid").cast("int").alias("vertex"), "dist")
 
@@ -2898,34 +2940,22 @@ class GraphEngine:
                  max_iterations: int = pregel.DEFAULT_MAX_ITERATIONS) -> DataFrame:
         """Batched weighted SSSP: ``(graph, vertex, dist)`` from
         ``start`` for EVERY stored graph containing the start vertex,
-        in ONE relaxation loop over the packed union (disjoint vid
-        ranges — no inter-graph edges, so distances cannot leak across
-        graphs; the per-graph seed is just ``gidx * stride + start``).
-        Per-graph results equal :meth:`sssp` (pinned by tests); weights
-        are validated non-negative in one scan, mirroring the
-        single-graph facade."""
-        snap = self.snapshot()
-        # metadata-sized: which graphs contain the start vertex (the
-        # same participation rule as bfs_all / dfs_leaves_all)
-        graphs = sorted(
-            r["graph"] for r in snap.vertices()
-            .filter(F.col("vid") == start).select("graph").distinct().collect())
-        if not graphs:
-            return _empty_frame(
-                self.spark, "graph string, vertex int, dist double")
-        gidx, stride, _, _ = self._packed_union(snap, graphs)
-        we = _pack_ids(snap.weighted_edges(), gidx, stride,
-                       ("src", "dst"), keep=("w",)) \
-            .select("src", "dst", F.col("w").cast("double").alias("weight"))
-        if not we.filter(F.col("weight") < 0).isEmpty():
-            raise ValueError(
-                "a stored graph has negative edge weights; shortest "
-                "paths are defined here for non-negative weights only")
-        sources = [i * stride + start for i in range(len(graphs))]
-        out = pregel.sssp_weighted(we, sources,
-                                   max_iterations=max_iterations)
-        return self._unpack_labels(out, gidx, stride, keep=("dist",)) \
-            .withColumnRenamed("vid", "vertex")
+        in ONE relaxation loop over the packed union of those graphs,
+        seeded at ``start`` in each. Per-graph results equal
+        :meth:`sssp` (pinned by tests); weights are validated
+        non-negative in one scan, mirroring the single-graph facade."""
+        def run(snap: GraphSnapshot, graphs: list[str]) -> DataFrame | None:
+            _, starts = _participants(snap, start)
+            graphs = sorted(r["graph"] for r in starts.select("graph").collect())
+            if not graphs:
+                return None
+            codec = _PackedIds.of(snap, graphs)
+            we = _nonnegative(codec.pack(snap.weighted_edges()).select(
+                "src", "dst", F.col("w").cast("double").alias("weight")),
+                "a stored graph")
+            return codec.unpack(pregel.sssp_weighted(
+                we, codec.seeds(start), max_iterations=max_iterations))
+        return self._catalog("graph string, vertex int, dist double", run)
 
     def pagerank(self, name: str, iterations: int = 10) -> DataFrame:
         """``(vid, rank)`` over one stored graph (float API; the
@@ -2968,41 +2998,22 @@ class GraphEngine:
 
     def triangle_count_all(self) -> DataFrame:
         """Batched triangle counting: ``(graph, n_triangles)`` for
-        EVERY stored graph in ONE compact-forward kernel run — the
-        set-oriented form, completing the batched analytics family
-        (bfs/cc/scc/sssp/pagerank _all). No inter-graph edges exist,
-        so packing each graph's vids into a disjoint long range
-        (:meth:`_packed_union`) lets the single-graph orientation +
-        per-edge adjacency-intersection kernel count the whole store
-        at once: a triangle's three corners always share a graph, and
-        the per-edge counts roll up by ``u div stride``. Graphs with
-        no triangles (including the empty graph) report 0, like
-        :meth:`stats` — a missing row is indistinguishable from a lost
-        graph. Degree-ordering ties break by PACKED id, which within a
-        graph is its vid order — the same tie rule as the per-graph
-        kernel, so per-graph equivalence holds exactly."""
-        snap = self.snapshot()
-        graphs = snap.graphs()
-        if not graphs:
-            return _empty_frame(
-                self.spark, "graph string, n_triangles long")
-        gidx, stride, edges, _ = self._packed_union(snap, graphs)
-        _, oriented, adj = graph_algos._forward_adjacency(
-            _canonical_undirected(edges))
-        per_edge = (
-            oriented
-            .join(adj.select(F.col("vid").alias("u"),
-                             F.col("nbrs").alias("nu")), "u")
-            .join(adj.select(F.col("vid").alias("v"),
-                             F.col("nbrs").alias("nv")), "v")
-            .select(F.expr(f"u div {stride}").alias("gidx"),
-                    F.size(F.array_intersect("nu", "nv")).alias("c")))
-        counts = (per_edge.groupBy("gidx")
-                  .agg(F.sum("c").cast("long").alias("n_triangles")))
-        return (gidx.join(counts, "gidx", "left")
-                .select("graph",
-                        F.coalesce("n_triangles", F.lit(0)).cast("long")
-                        .alias("n_triangles")))
+        EVERY stored graph in ONE compact-forward kernel run over the
+        packed union: a triangle's three corners always share a graph,
+        and degree-ordering ties break by packed id, which within a
+        graph is its vid order, so per-graph counts equal
+        :meth:`triangle_count` exactly. Graphs with no triangles
+        (including the empty graph) report 0, like :meth:`stats` — a
+        missing row is indistinguishable from a lost graph."""
+        def run(snap: GraphSnapshot, graphs: list[str]) -> DataFrame:
+            codec = _PackedIds.of(snap, graphs)
+            per_edge = graph_algos.edge_triangles(
+                _canonical_undirected(codec.pack(snap.edges())))
+            counts = (codec.unpack(per_edge, ("u",))
+                      .groupBy("graph").agg(F.sum("c").alias("n")))
+            return (codec.index.join(counts, "graph", "left")
+                    .select("graph", F.coalesce("n", F.lit(0))))
+        return self._catalog("graph string, n_triangles long NOT NULL", run)
 
     def clustering_coefficient(self, name: str) -> DataFrame:
         """``(vid, deg, n_tri, coeff)`` local clustering coefficients
@@ -3017,70 +3028,43 @@ class GraphEngine:
     def kcore_all(self, k: int,
                   max_rounds: int = graph_algos.KCORE_MAX_ROUNDS) -> DataFrame:
         """Batched k-core: ``(graph, vid, core_deg)`` for EVERY stored
-        graph's k-core in ONE peeling loop over the packed union
-        (round-11 verdict item 7 — the per-graph :meth:`k_core` ran
-        per graph only). Degrees are computed within each graph by
-        construction (no inter-graph edges in the disjoint vid
-        ranges), a vertex's removal round depends only on its own
-        graph's degrees, and the whole-store round count is the MAX of
-        the per-graph round counts, so per-graph results equal
-        :meth:`k_core` exactly (pinned by tests). Graphs whose k-core
-        is empty contribute no rows — same contract as the per-graph
-        form. core_deg is a DEGREE, not a vertex id, so the decode
-        passes it through unmodded (a ``keep`` column of
-        :meth:`_unpack_labels`)."""
-        snap = self.snapshot()
-        graphs = snap.graphs()
-        if not graphs:
-            return _empty_frame(
-                self.spark, "graph string, vid int, core_deg long")
-        gidx, stride, edges, _ = self._packed_union(snap, graphs)
-        out = graph_algos.k_core(_canonical_undirected(edges), k,
-                                 max_rounds=max_rounds)
-        return self._unpack_labels(out, gidx, stride, keep=("core_deg",))
+        graph's k-core in ONE peeling loop over the packed union. A
+        vertex's removal round depends only on its own graph's degrees
+        and the whole-store round count is the MAX of the per-graph
+        ones, so per-graph results equal :meth:`k_core` exactly (pinned
+        by tests). Graphs whose k-core is empty contribute no rows —
+        same contract as the per-graph form."""
+        return self._packed(
+            "graph string, vid int, core_deg long NOT NULL",
+            lambda e, v: graph_algos.k_core(_canonical_undirected(e), k,
+                                            max_rounds=max_rounds))
 
     def clustering_all(self) -> DataFrame:
         """Batched local clustering coefficients: ``(graph, vid, deg,
         n_tri, coeff)`` for EVERY stored graph viewed undirected, in
-        ONE compact-forward kernel run over the packed union — the
-        last per-graph-only analytic gaining its whole-store form
-        (round-11 verdict item 4's observation). A triangle's three
-        corners share a graph and a vertex's degree counts only
-        in-graph neighbors (disjoint vid ranges), and degree-order
-        ties break by packed id ≡ in-graph vid order, so per-graph
-        results equal :meth:`clustering_coefficient` exactly (pinned
-        by tests). Vertices with no incident edges have no rows —
-        same contract as the per-graph form."""
-        snap = self.snapshot()
-        graphs = snap.graphs()
-        if not graphs:
-            return _empty_frame(
-                self.spark, "graph string, vid int, deg long, n_tri long, "
-                    "coeff double")
-        gidx, stride, edges, _ = self._packed_union(snap, graphs)
-        out = graph_algos.clustering_coefficient(_canonical_undirected(edges))
-        return self._unpack_labels(out, gidx, stride,
-                                   keep=("deg", "n_tri", "coeff"))
+        ONE compact-forward kernel run over the packed union. Triangles
+        and degrees stay within a graph and degree-order ties break by
+        in-graph vid order, so per-graph results equal
+        :meth:`clustering_coefficient` exactly (pinned by tests).
+        Vertices with no incident edges have no rows — same contract as
+        the per-graph form."""
+        return self._packed(
+            "graph string, vid int, deg long NOT NULL, n_tri long NOT NULL, "
+            "coeff double",
+            lambda e, v: graph_algos.clustering_coefficient(
+                _canonical_undirected(e)))
 
     def label_propagation_all(self, iterations: int = 4) -> DataFrame:
         """Batched deterministic label propagation: ``(graph, vid,
-        label)`` for EVERY stored graph in ONE synchronous LPA run
-        over the packed union (round-11 verdict item 7). Neighbor
-        label frequencies never cross the disjoint vid ranges, and the
-        ties-to-smallest-label rule is translation-invariant within a
-        graph (every packed label shares the graph's ``gidx * stride``
-        offset), so per-graph results equal
-        :meth:`label_propagation` exactly (pinned by tests); labels
-        decode back to (graph, vid-scale label) like the CC/SCC
-        kernels'."""
-        snap = self.snapshot()
-        graphs = snap.graphs()
-        if not graphs:
-            return _empty_frame(
-                self.spark, "graph string, vid int, label int")
-        gidx, stride, e, v = self._packed_union(snap, graphs)
-        out = pregel.label_propagation(e, v, iterations=iterations)
-        return self._unpack_labels(out, gidx, stride, "label")
+        label)`` for EVERY stored graph in ONE synchronous LPA run over
+        the packed union. Neighbor label frequencies never cross graphs
+        and the ties-to-smallest-label rule is translation-invariant
+        within a graph, so per-graph results equal
+        :meth:`label_propagation` exactly (pinned by tests)."""
+        return self._packed(
+            "graph string, vid int, label int",
+            lambda e, v: pregel.label_propagation(e, v, iterations=iterations),
+            ("vid", "label"))
 
     # -- Assignment1 surface ----------------------------------------------
 
@@ -3198,30 +3182,8 @@ class GraphEngine:
         vcols = [c for c in v.columns if c != "graph"]
         try:
             for _ in range(max_iter):
-                def _endpoint(key: str):
-                    return v.select(
-                        "graph", F.col("vid").alias(key),
-                        F.struct(*[F.col(c) for c in vcols])
-                        .alias(f"__{key}_s"))
-
-                trip = (e.join(_endpoint("src"), ["graph", "src"])
-                        .join(_endpoint("dst"), ["graph", "dst"])
-                        .select("graph", "edge",
-                                F.col("__src_s").alias("src"),
-                                F.col("__dst_s").alias("dst")))
-                legs = []
-                if send_to_src is not None:
-                    legs.append(trip.select(
-                        "graph", F.col("src.vid").alias("vid"),
-                        F.expr(send_to_src).alias("msg")))
-                if send_to_dst is not None:
-                    legs.append(trip.select(
-                        "graph", F.col("dst.vid").alias("vid"),
-                        F.expr(send_to_dst).alias("msg")))
-                msgs = (legs[0] if len(legs) == 1
-                        else legs[0].unionByName(legs[1]))
-                msgs = (msgs.groupBy("graph", "vid")
-                        .agg(F.expr(agg_expr).alias("msg")))
+                msgs = _messages(_triplets(e, v), agg_expr, send_to_src,
+                                 send_to_dst, "msg")
                 nxt = (v.join(msgs, ["graph", "vid"], "left")
                        .withColumn(vertex_col, F.expr(update_expr))
                        .drop("msg")

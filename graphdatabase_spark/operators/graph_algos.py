@@ -11,7 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from graphdatabase_spark.cache import shared_persist, track_persist
+from graphdatabase_spark.cache import shared_persist
 from graphdatabase_spark.operators.pregel import _ckpt, _ckpt_lazy
 
 # Peeling-round ceiling for k_core (and the unrolled oracle): the
@@ -52,16 +52,18 @@ def _forward_adjacency(edges: DataFrame, cache_key: tuple | None = None):
     With ``cache_key`` the three intermediates are SESSION-SHARED
     (:func:`shared_persist`): triangle_count, clustering_coefficient
     and edge_jaccard_topk over the same substrate build them once per
-    sweep instead of once per query. Without it they are tracked
-    anonymous persists (release via ``cache.release_caches()``) — the
-    call sites can't unpersist themselves because their consumer
-    materializes after the builder returns."""
+    sweep instead of once per query. Without it each is a lazy local
+    checkpoint: computed once, inside the first job that reads it, and
+    kept only as long as the kernel's result refers to it — Spark's
+    ContextCleaner drops the blocks once that result is garbage. So
+    repeated engine calls leave nothing cached behind: a persist would
+    stay until ``cache.release_caches()``."""
     spark = edges.sparkSession
 
     def _keep(name: str, build):
         if cache_key is not None:
             return shared_persist(spark, (name, *cache_key), build)
-        return track_persist(build())
+        return _ckpt_lazy(build())
 
     e = _keep("tri_edges", lambda: edges.select("src", "dst"))
     deg = _keep("tri_deg", lambda: (
@@ -89,17 +91,34 @@ def _forward_adjacency(edges: DataFrame, cache_key: tuple | None = None):
     return deg, oriented, adj
 
 
+def _adjacency_pairs(oriented: DataFrame, adj: DataFrame) -> DataFrame:
+    """Each forward edge (u, v) beside both endpoints' forward
+    adjacency arrays ``nu`` and ``nv``."""
+    return (
+        oriented
+        .join(adj.select(F.col("vid").alias("u"), F.col("nbrs").alias("nu")), "u")
+        .join(adj.select(F.col("vid").alias("v"), F.col("nbrs").alias("nv")), "v")
+    )
+
+
 def _triangle_corners(oriented: DataFrame, adj: DataFrame) -> DataFrame:
     """One row (u, v, w) per triangle: per-edge forward-adjacency
     intersection, exploded. One explode per triangle row, NOT a 3-way
     unionAll of corner projections — a union would re-execute the
     intersect join once per branch (measured 3× the kernel cost)."""
-    return (
-        oriented
-        .join(adj.select(F.col("vid").alias("u"), F.col("nbrs").alias("nu")), "u")
-        .join(adj.select(F.col("vid").alias("v"), F.col("nbrs").alias("nv")), "v")
-        .select("u", "v", F.explode(F.array_intersect("nu", "nv")).alias("w"))
-    )
+    return _adjacency_pairs(oriented, adj).select(
+        "u", "v", F.explode(F.array_intersect("nu", "nv")).alias("w"))
+
+
+def edge_triangles(edges: DataFrame,
+                   cache_key: tuple | None = None) -> DataFrame:
+    """``(u, c)`` per edge of an undirected graph given as canonical
+    ``src < dst`` edges: ``c`` = ``|N⁺(u) ∩ N⁺(v)|``, the triangles
+    closed on the edge (u, v) of the degree-ordered orientation, so the
+    ``c`` sum to the triangle count (:func:`triangle_count`)."""
+    _, oriented, adj = _forward_adjacency(edges, cache_key)
+    return _adjacency_pairs(oriented, adj).select(
+        "u", F.size(F.array_intersect("nu", "nv")).alias("c"))
 
 
 def triangle_count(edges: DataFrame,
@@ -111,25 +130,19 @@ def triangle_count(edges: DataFrame,
     re-oriented from the lower-degree endpoint to the higher-degree
     endpoint (ties by id), which bounds every vertex's forward-degree
     by O(sqrt(m)). Triangles are then counted per *edge* as
-    ``|N⁺(u) ∩ N⁺(v)|`` against collected forward-adjacency arrays —
-    each triangle a<b<c (rank order) is found exactly once, on its
-    (a, b) edge. Unlike the naive wedge self-join, the O(m·sqrt(m))
-    wedge set is never materialized or shuffled: the only shuffles are
-    the degree agg and the adjacency collect, both map-side combined,
-    and the adjacency table (one row per vertex, ≤O(sqrt(m)) longs)
-    joins back edge-side — broadcast when it fits, shuffle otherwise
-    (AQE decides from runtime stats). The count is
-    orientation-invariant, so the oracle can use the naive a<b<c
-    formulation.
+    ``|N⁺(u) ∩ N⁺(v)|`` against collected forward-adjacency arrays
+    (:func:`edge_triangles`) — each triangle a<b<c (rank order) is
+    found exactly once, on its (a, b) edge. Unlike the naive wedge
+    self-join, the O(m·sqrt(m)) wedge set is never materialized or
+    shuffled: the only shuffles are the degree agg and the adjacency
+    collect, both map-side combined, and the adjacency table (one row
+    per vertex, ≤O(sqrt(m)) longs) joins back edge-side — broadcast
+    when it fits, shuffle otherwise (AQE decides from runtime stats).
+    The count is orientation-invariant, so the oracle can use the naive
+    a<b<c formulation.
     """
-    _, oriented, adj = _forward_adjacency(edges, cache_key)
-    return (
-        oriented
-        .join(adj.select(F.col("vid").alias("u"), F.col("nbrs").alias("nu")), "u")
-        .join(adj.select(F.col("vid").alias("v"), F.col("nbrs").alias("nv")), "v")
-        .select(F.size(F.array_intersect("nu", "nv")).alias("c"))
-        .agg(F.coalesce(F.sum("c"), F.lit(0)).cast("long").alias("n_triangles"))
-    )
+    return edge_triangles(edges, cache_key).agg(
+        F.coalesce(F.sum("c"), F.lit(0)).cast("long").alias("n_triangles"))
 
 
 def clustering_coefficient(edges: DataFrame,

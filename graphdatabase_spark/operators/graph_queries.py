@@ -79,8 +79,8 @@ SELECT vid, MIN(level) AS level FROM bfs GROUP BY vid
 
 
 def q_reachability(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return pregel.reachability(dg.full_edges_prepared(spark, sf_dir),
-                               [dg.OFF_NATION + 3], prepared=True)
+    return pregel.bfs_levels(dg.full_edges_prepared(spark, sf_dir),
+                             [dg.OFF_NATION + 3], prepared=True).select("vid")
 
 
 ORACLE_REACHABILITY = f"""
@@ -96,10 +96,11 @@ SELECT vid FROM reach
 
 def q_shortest_path_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     # hops from region 0 to every supplier vertex
-    return pregel.shortest_path_hops(
-        dg.full_edges_prepared(spark, sf_dir), [0],
-        (F.col("vid") >= dg.OFF_SUPPLIER) & (F.col("vid") < dg.OFF_CUSTOMER),
-        prepared=True)
+    levels = pregel.bfs_levels(dg.full_edges_prepared(spark, sf_dir), [0],
+                               prepared=True)
+    return levels.filter(
+        (F.col("vid") >= dg.OFF_SUPPLIER) & (F.col("vid") < dg.OFF_CUSTOMER)
+    ).select("vid", F.col("level").alias("hops"))
 
 
 ORACLE_SHORTEST_PATH_HOPS = f"""

@@ -27,7 +27,9 @@ Scale design (the parts that matter at 100 TB / 1000 executors):
   and falls back to shuffle join for the wide middle supersteps.
 - **One loop per traversal, keyed.** Grouping columns select one graph
   (``[]``) or a whole catalog (``["graph"]``) in the same loop:
-  :func:`_bfs_loop` for BFS, :func:`pagerank` for every PageRank. The
+  :func:`bfs_levels` ``(edges, starts, keys)`` for every BFS (one
+  graph, every stored graph, or every (graph, landmark) pair) and
+  :func:`pagerank` ``(edges, vertices, keys)`` for every PageRank. The
   latter also takes ``scale`` (``None`` = float, an int = bit-exact
   scaled int64) and ``sources`` (personalized PageRank: the teleport
   weight ``t`` is 1 on the sources, 0 elsewhere; 1 everywhere without).
@@ -138,45 +140,31 @@ def _ckpt_sum(df: DataFrame, col: str) -> tuple[DataFrame, int]:
     return out, int(row["s"] or 0)
 
 
-def _prepare_edges(edges: DataFrame, num_partitions: int | None = None) -> DataFrame:
-    """Hash-partition edges by src once so every superstep's join
-    reuses the same partitioning (one-time shuffle, then stable)."""
-    e = edges.select(F.col("src").cast("long"), F.col("dst").cast("long"))
-    e = e.repartition(*( [num_partitions, "src"] if num_partitions else ["src"] ))
-    return e.persist()
-
-
-def bfs_levels(edges: DataFrame, start_vids: list[int],
+def bfs_levels(edges: DataFrame, starts, keys: Sequence[str] = (),
                max_iterations: int = DEFAULT_MAX_ITERATIONS,
                prepared: bool = False) -> DataFrame:
-    """Level-synchronous BFS: ``(vid, level)`` for every vertex
-    reachable from ``start_vids`` (level = minimum hop count; the start
-    vertices are level 0, matching ``secondary_server.c:577-585``).
+    """THE level-synchronous BFS, for one graph or a catalog:
+    ``(*keys, vid, level)`` for every vertex reachable from the starts
+    (level = minimum hop count; the starts are level 0, matching
+    ``secondary_server.c:577-585``). Within-level order is unspecified —
+    the reference's own oracle compares level-*sets*
+    (``utils/bfs_checker.py:75-76``).
 
-    Within-level order is intentionally unspecified — the reference's
-    own oracle compares level-*sets* (``utils/bfs_checker.py:75-76``).
+    - ``keys`` are grouping columns, as in :func:`pagerank`: ``[]`` for
+      one graph, ``["graph"]`` for a catalog, ``["graph", "lm"]`` for one
+      traversal per (graph, landmark). Edges are ``(*keys, src, dst)``;
+      ``starts`` is a vid list without keys, else a ``(*keys, vid)``
+      frame. Each key traverses as if alone: per superstep the union of
+      every key's frontier shuffles once against the same edges, a key
+      that converges early stops contributing rows, and the loop ends
+      when the whole frontier drains.
+    - The edges are cast to longs, hash-partitioned by ``(*keys, src)``
+      once and persisted for the loop, so only the frontier shuffles per
+      superstep. ``prepared=True`` declares them already in that shape
+      (a session-shared materialization reused across traversals); the
+      kernel then neither re-shuffles nor unpersists them.
 
-    ``prepared=True`` declares the input already (src, dst)-long,
-    src-partitioned and persisted by the caller (e.g. a session-shared
-    materialization reused across traversals); the kernel then neither
-    re-shuffles nor unpersists it.
-    """
-    spark = edges.sparkSession
-    e = edges if prepared else _prepare_edges(edges)
-    frontier = spark.createDataFrame([(int(v),) for v in start_vids], "vid long").distinct()
-    out = _bfs_loop(e, frontier, [], max_iterations)
-    if not prepared:
-        e.unpersist()
-    return out
-
-
-def _bfs_loop(e: DataFrame, frontier: DataFrame, key_cols: list[str],
-              max_iterations: int) -> DataFrame:
-    """THE level-synchronous superstep loop, shared by the single-graph
-    and batched kernels (``key_cols`` = extra grouping columns, e.g.
-    ["graph"]; empty for the single-graph form).
-
-    One checkpointed frontier per level; `visited` is their lazy
+    One checkpointed frontier per level; ``visited`` is their lazy
     union. Each union leaf is already materialized, so lineage depth
     stays 1 and — unlike checkpointing the cumulative set per level —
     nothing re-materializes O(V) rows at every superstep (that costs
@@ -184,24 +172,30 @@ def _bfs_loop(e: DataFrame, frontier: DataFrame, key_cols: list[str],
     anti-join: a vertex reachable from two same-level parents must be
     visited once (the reference's racy double-visit here is a bug not
     carried forward, SURVEY §2.2)."""
-    frontier = frontier.transform(_ckpt)
+    keys = list(keys)
+    e = edges if prepared else (
+        edges.select(*keys, F.col("src").cast("long"), F.col("dst").cast("long"))
+        .repartition(*keys, "src").persist())
+    frontier = (starts.select(*keys, F.col("vid").cast("long")) if keys
+                else edges.sparkSession.createDataFrame(
+                    [(int(v),) for v in starts], "vid long"))
+    frontier = frontier.distinct().transform(_ckpt)
     frontiers: list[DataFrame] = [frontier.withColumn("level", F.lit(0))]
     visited = frontier
-    join_keys = list(key_cols) + ["vid"]
 
     level = 0
     while level < max_iterations:
         level += 1
         f, ee = frontier.alias("f"), e.alias("e")
         cond = F.col("f.vid") == F.col("e.src")
-        for k in key_cols:
+        for k in keys:
             cond = cond & (F.col(f"f.{k}") == F.col(f"e.{k}"))
         nxt = (
             f.join(ee, cond)
-            .select(*[F.col(f"e.{k}").alias(k) for k in key_cols],
+            .select(*[F.col(f"e.{k}").alias(k) for k in keys],
                     F.col("e.dst").alias("vid"))
             .distinct()
-            .join(visited, join_keys, "left_anti")
+            .join(visited, [*keys, "vid"], "left_anti")
         )
         nxt, n_nxt = _ckpt_n(nxt)   # materialize + count in one job
         if n_nxt == 0:
@@ -209,52 +203,12 @@ def _bfs_loop(e: DataFrame, frontier: DataFrame, key_cols: list[str],
         frontiers.append(nxt.withColumn("level", F.lit(level)))
         visited = visited.unionByName(nxt)
         frontier = nxt
+    if not prepared:
+        e.unpersist()
     out = frontiers[0]
     for fr in frontiers[1:]:
         out = out.unionByName(fr)
     return out
-
-
-def bfs_levels_grouped(edges: DataFrame, starts: DataFrame,
-                       max_iterations: int = DEFAULT_MAX_ITERATIONS) -> DataFrame:
-    """Batched multi-graph BFS: ``(graph, vid, level)`` for every
-    ``(graph, vid)`` start pair, ALL graphs traversed in ONE superstep
-    loop over the store's single partitioned edge table.
-
-    This is the set-oriented form of the reference's workload — it
-    serves one graph per request (``secondary_server.c:588-618``); here
-    a directory of graphs is one DataFrame keyed by ``graph`` (SURVEY
-    §1.4), so a fleet of traversals costs one job sequence instead of
-    one per graph: per superstep the UNION of all graphs' frontiers
-    shuffles once against the (graph, src)-partitioned edges. Graphs
-    that converge early simply stop contributing frontier rows; the
-    loop ends when the global frontier drains. Same per-graph
-    semantics as :func:`bfs_levels` (pinned by tests against the
-    per-graph kernel over the reference fixtures)."""
-    e = edges.select("graph", F.col("src").cast("long"), F.col("dst").cast("long"))
-    e = e.repartition("graph", "src").persist()
-    frontier = starts.select("graph", F.col("vid").cast("long")).distinct()
-    out = _bfs_loop(e, frontier, ["graph"], max_iterations)
-    e.unpersist()
-    return out
-
-
-def reachability(edges: DataFrame, start_vids: list[int],
-                 max_iterations: int = DEFAULT_MAX_ITERATIONS,
-                 prepared: bool = False) -> DataFrame:
-    """Reachable set ``(vid)`` from the start vertices (BFS minus
-    levels — ``secondary_server.c:588-619`` with the output dropped)."""
-    return bfs_levels(edges, start_vids, max_iterations, prepared).select("vid")
-
-
-def shortest_path_hops(edges: DataFrame, start_vids: list[int], target_pred,
-                       max_iterations: int = DEFAULT_MAX_ITERATIONS,
-                       prepared: bool = False) -> DataFrame:
-    """Unweighted shortest-path length from the source set to every
-    vertex satisfying ``target_pred`` (a Column predicate over ``vid``):
-    exactly the BFS level of the target (SURVEY §2.3)."""
-    levels = bfs_levels(edges, start_vids, max_iterations, prepared)
-    return levels.filter(target_pred).select("vid", F.col("level").alias("hops"))
 
 
 def sssp_weighted(edges: DataFrame, start_vids: list[int],
@@ -330,7 +284,7 @@ def pagerank(edges: DataFrame, vertices: DataFrame, keys: Sequence[str] = (),
     vertices ``(*keys, vid)`` give ``(*keys, vid, rank)`` in floats or
     ``(*keys, vid, rank_q)`` in scaled int64.
 
-    - ``keys`` are grouping columns, as in :func:`_bfs_loop`: ``[]`` for
+    - ``keys`` are grouping columns, as in :func:`bfs_levels`: ``[]`` for
       one graph, ``["graph"]`` for a catalog. Each key runs as if alone:
       its teleport and dangling mass stay within it. (A packed disjoint
       union would leak both across graphs in proportion to their sizes.)
@@ -697,7 +651,7 @@ def strongly_connected_components(edges: DataFrame, vertices: DataFrame,
 
         # 3. backward BFS from all pivots at once, within color classes
         # visited = lazy union of checkpointed frontiers (each leaf is
-        # materialized, lineage depth stays 1 — the _bfs_loop pattern).
+        # materialized, lineage depth stays 1 — the bfs_levels pattern).
         frontier = (colors.filter(F.col("vid") == F.col("color"))
                     .select("vid", F.col("vid").alias("scc"))
                     .transform(_ckpt_lazy))   # materializes inside the

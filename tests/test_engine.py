@@ -338,13 +338,42 @@ def test_empty_store_reads_are_empty(spark, tmp_path):
 
 
 def test_catalog_methods_on_empty_store_keep_their_schema(spark, tmp_path):
-    """Every whole-catalog method answers an empty store with no rows
-    and the schema it returns on a populated store."""
+    """Every whole-catalog method answers an empty store with no rows,
+    the schema it returns on a populated store and no Spark job."""
     eng = GraphEngine(spark, str(tmp_path / "fresh"))
+    sc = spark.sparkContext
     for name, call in CATALOG_CALLS.items():
-        out = call(eng)
-        assert out.schema.simpleString() == CATALOG_SCHEMAS[name], name
-        assert out.collect() == [], name
+        group = f"empty-{name}-{time.time_ns()}"
+        sc.setJobGroup(group, group)
+        try:
+            out = call(eng)
+            assert out.schema.simpleString() == CATALOG_SCHEMAS[name], name
+            assert out.collect() == [], name
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        assert sc.statusTracker().getJobIdsForGroup(group) == [], name
+
+
+def test_triangle_family_leaves_no_tracked_cache(engine):
+    """Without a cache key the triangle-family kernels release their
+    own temporaries: repeated engine calls leave the cache registry as
+    it was and return the same answers."""
+    from graphdatabase_spark import cache
+
+    engine.add_graph("K", "4\n0 1 1 1\n0 0 1 1\n0 0 0 1\n0 0 0 0\n")  # K4
+    calls = (lambda: engine.triangle_count("K"),
+             lambda: engine.clustering_coefficient("K"),
+             engine.triangle_count_all, engine.clustering_all)
+    tracked = len(cache._TRACKED)
+    first = [sorted(map(tuple, call().collect())) for call in calls]
+    assert len(cache._TRACKED) == tracked
+    corners = [(v, 3, 3, 1.0) for v in (1, 2, 3, 4)]
+    assert first == [[(4,)], corners, [("K", 4)],
+                     [("K", *c) for c in corners]]
+    assert [sorted(map(tuple, call().collect())) for call in calls] == first
+    assert len(cache._TRACKED) == tracked
 
 
 def test_bfs_all_matches_per_graph_bfs(engine):
@@ -404,13 +433,12 @@ def test_packed_encode_plan_size_is_catalog_independent(spark):
     constant-size as the catalog grows — the previous literal
     create_map encode grew it by two entries per stored graph, which
     explodes at a 10^5-graph catalog."""
-    from graphdatabase_spark.engine import _pack_ids
+    from graphdatabase_spark.engine import _PackedIds
     e = spark.createDataFrame([("g0", 1, 2)], "graph string, src int, dst int")
     sizes = {}
     for n in (10, 2000):
-        gidx = spark.createDataFrame([(i, f"g{i}") for i in range(n)],
-                                     "gidx long, graph string")
-        packed = _pack_ids(e, gidx, 1000, ("src", "dst"))
+        codec = _PackedIds(spark, [f"g{i}" for i in range(n)], 999)
+        packed = codec.pack(e)
         sizes[n] = len(packed._jdf.queryExecution().optimizedPlan().toString())
         assert packed.collect() == [(1000 * 0 + 1, 2)]  # g0 → gidx 0
     assert sizes[2000] <= sizes[10] + 50, sizes  # constant, not O(catalog)

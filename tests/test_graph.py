@@ -90,9 +90,9 @@ def test_bfs_asymmetric_g2(fixture_edges):
     # G2 rows: 1→{1,4}, 2→{1,4}, 3→{4}, 4→{4}. Row-wise scan semantics:
     # from 2 the reachable set is {2,1,4}; the reverse direction (4→2)
     # does NOT exist — asymmetric matrices are honored.
-    reach = {r["vid"] for r in pregel.reachability(g2, [2]).collect()}
+    reach = {r["vid"] for r in pregel.bfs_levels(g2, [2]).collect()}
     assert reach == {2, 1, 4}
-    reach4 = {r["vid"] for r in pregel.reachability(g2, [4]).collect()}
+    reach4 = {r["vid"] for r in pregel.bfs_levels(g2, [4]).collect()}
     assert reach4 == {4}
 
 
