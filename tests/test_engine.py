@@ -2,6 +2,7 @@
 real Parquet store, with the reference's own fixture graphs as input
 (read as data from /root/reference — never as code)."""
 
+import itertools
 import os
 import time
 
@@ -354,6 +355,63 @@ def test_catalog_methods_on_empty_store_keep_their_schema(spark, tmp_path):
             sc.setLocalProperty("spark.job.description", None)
         sc._jsc.sc().listenerBus().waitUntilEmpty()
         assert sc.statusTracker().getJobIdsForGroup(group) == [], name
+
+
+# The exact output schema (names, types, nullability) of the
+# single-graph requests answered on the driver.
+SINGLE_SCHEMAS = {
+    "bfs": [("vertex", "integer", True), ("level", "integer", True)],
+    "dfs_leaves": [("leaf", "integer", True)],
+    "reachable": [("vertex", "integer", True)],
+}
+
+
+def _fields(df):
+    return [(f.name, f.dataType.typeName(), f.nullable)
+            for f in df.schema.fields]
+
+
+def test_driver_results_keep_their_schema(spark, tmp_path):
+    """``bfs``, ``dfs_leaves`` and ``reachable`` answer with the same
+    schema, nullability included, on a hit, from a start vertex outside
+    the graph and on the N = 0 graph; every empty-store catalog frame
+    is a local relation. None of them runs a Spark job."""
+    eng = GraphEngine(spark, str(tmp_path / "fresh"))
+    sc = spark.sparkContext
+    group = f"driver-results-{time.time_ns()}"
+    for name, call in CATALOG_CALLS.items():
+        sc.setJobGroup(group, group)
+        try:
+            out = call(eng)
+            assert out.schema.simpleString() == CATALOG_SCHEMAS[name], name
+            plan = out._jdf.queryExecution().analyzed()
+            assert plan.getClass().getSimpleName() == "LocalRelation", name
+            assert out.collect() == [], name
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+    eng.add_graph("P", "3\n0 1 0\n0 0 1\n0 0 0\n")   # path 1 -> 2 -> 3
+    eng.add_graph("E", "0\n")
+    want_rows = {("bfs", "P", 1): [(1, 0), (2, 1), (3, 2)],
+                 ("dfs_leaves", "P", 1): [(3,)],
+                 ("reachable", "P", 1): [(1,), (2,), (3,)]}
+    for (g, start), method in itertools.product(
+            (("P", 1), ("P", 9), ("E", 1)), SINGLE_SCHEMAS):
+        sc.setJobGroup(group, group)
+        try:
+            out = getattr(eng, method)(g, start)
+            assert _fields(out) == SINGLE_SCHEMAS[method], (method, g, start)
+            rows = sorted(map(tuple, out.collect()))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        # a start outside the graph, or in the empty graph, is its own
+        # level-0 vertex and leaf
+        lone = [(start, 0)] if method == "bfs" else [(start,)]
+        assert rows == want_rows.get((method, g, start), lone), \
+            (method, g, start)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert sc.statusTracker().getJobIdsForGroup(group) == []
 
 
 def test_triangle_family_leaves_no_tracked_cache(engine):
