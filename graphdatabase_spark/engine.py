@@ -65,8 +65,11 @@ from __future__ import annotations
 
 import functools
 import os
+import shutil
+import struct
 import time
 import uuid
+import zlib
 from concurrent.futures import ThreadPoolExecutor
 
 import pyarrow as pa
@@ -74,8 +77,9 @@ import pyarrow.parquet as pq
 from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.serializers import ArrowStreamSerializer
 from pyspark.sql.pandas.types import to_arrow_schema
-from pyspark.sql.types import StructType
+from pyspark.sql.types import IntegerType, StructField, StructType
 
 from graphdatabase_spark import cache, metastore
 from graphdatabase_spark.functions.text import tokens_col
@@ -102,13 +106,93 @@ LOCAL_EDGE_ROWS = 10_000
 LOCAL_READ_BYTES = 16 * LOCAL_EDGE_ROWS
 
 
+# The characters Spark's ExternalCatalogUtils.escapePathName escapes in
+# a partition dir name, as %XX: the ASCII control characters but NUL,
+# DEL and "#%'*/:=?[\]^{ (on Windows also space, <, > and |).
+_PATH_ESCAPED = frozenset(
+    [*map(chr, range(1, 0x20)), *'"#%\'*/:=?\\\x7f{[]^'])
+
+
+def _escape_path_name(name: str) -> str:
+    """``name`` as Spark's ``ExternalCatalogUtils.escapePathName`` writes
+    it in a partition dir name: a graph called "G#1" lives in
+    ``graph=G%231``."""
+    return "".join(f"%{ord(c):02X}" if c in _PATH_ESCAPED else c
+                   for c in name)
+
+
+class _LocalStore:
+    """A store on Hadoop's local FileSystem seen as a local dir, where
+    the driver's landings use Python file IO: Hadoop's ``create`` and
+    ``mkdirs`` start a ``chmod`` process for every file and dir they
+    make unless the native Hadoop library is loaded, and pip's PySpark
+    never ships it. What lands is what Hadoop would land: dirs and
+    files get the modes Hadoop gives them under the conf's
+    ``fs.permissions.umask-mode``, set by syscall, and each file gets
+    the ``.<name>.crc`` sidecar that Hadoop's ``LocalFileSystem``
+    writes and checks when it reads the file back: ``crc\\0``, the
+    big-endian ``bytes_per_sum`` and a big-endian CRC-32 per chunk of
+    that many bytes."""
+
+    def __init__(self, root: str, umask: int, bytes_per_sum: int):
+        self.root = root
+        self.dir_mode = 0o777 & ~umask
+        self.file_mode = 0o666 & ~umask
+        self.bytes_per_sum = bytes_per_sum
+
+    def _mkdirs(self, path: str) -> None:
+        """``path`` and its missing parents, each made with
+        ``dir_mode``; a dir another writer makes meanwhile is kept, as
+        Hadoop's ``mkdirs`` keeps it."""
+        if os.path.isdir(path):
+            return
+        self._mkdirs(os.path.dirname(path))
+        try:
+            os.mkdir(path)
+        except FileExistsError:
+            if not os.path.isdir(path):
+                raise
+            return
+        os.chmod(path, self.dir_mode)
+
+    def _write(self, path: str, data: bytes, exclusive: bool) -> None:
+        flags = os.O_WRONLY | os.O_CREAT | (
+            os.O_EXCL if exclusive else os.O_TRUNC)
+        with os.fdopen(os.open(path, flags, self.file_mode), "wb") as f:
+            os.fchmod(f.fileno(), self.file_mode)
+            f.write(data)
+
+    def land(self, sub: str, files: dict[str, bytes]) -> None:
+        """Replace the dir ``sub`` of the store whole with ``files``
+        (paths relative to it): the dir is deleted, made again, and
+        each file is created exclusively beside its checksum sidecar,
+        as ``FileSystem.create(path, false)`` creates it."""
+        root = os.path.join(self.root, sub)
+        if os.path.lexists(root):
+            shutil.rmtree(root)
+        self._mkdirs(root)
+        n = self.bytes_per_sum
+        for rel, data in files.items():
+            head, name = os.path.split(os.path.join(root, rel))
+            self._mkdirs(head)
+            self._write(os.path.join(head, name), data, exclusive=True)
+            sums = (zlib.crc32(data[i:i + n]) for i in range(0, len(data), n))
+            self._write(os.path.join(head, f".{name}.crc"),
+                        b"crc\0" + struct.pack(">i", n)
+                        + b"".join(struct.pack(">I", c) for c in sums),
+                        exclusive=False)
+
+
 class _StoreFs:
-    """The store's Hadoop FileSystem and the JVM names the driver-side
-    file IO uses, each resolved once per engine on first use: a
+    """The store's Hadoop FileSystem and the JVM members a request
+    calls, each resolved once per engine on first use: a
     ``spark._jvm.org.apache...`` walk costs one Py4J round trip per
-    package segment. Every path under the store shares the one
+    package segment and a member lookup one more, and an unqualified
+    name such as ``spark._jvm.PythonSQLUtils`` costs a lookup each time
+    it is named. Every read under the store goes through the one
     FileSystem, so local, ``file:`` and ``hdfs://`` stores take one
-    path."""
+    path. The driver's own landings take Python file IO where the
+    FileSystem is the local one (:attr:`local`)."""
 
     def __init__(self, spark: SparkSession, store: str):
         self.spark = spark
@@ -124,31 +208,74 @@ class _StoreFs:
             self.spark._jsc.hadoopConfiguration())
 
     @functools.cached_property
-    def _escape(self):
-        return (self.spark._jvm.org.apache.spark.sql.catalyst.catalog
-                .ExternalCatalogUtils.escapePathName)
+    def visible(self):
+        """A Hadoop ``PathFilter`` that drops the names Spark's reader
+        skips, those starting with ``_`` or ``.`` (``_SUCCESS``,
+        checksum sidecars), so a listing needs no name lookup per
+        file."""
+        return self.spark._jvm.org.apache.hadoop.fs.GlobFilter("[!_.]*")
+
+    @functools.cached_property
+    def local(self) -> _LocalStore | None:
+        """The store as a :class:`_LocalStore` when its FileSystem has
+        scheme ``file`` (Hadoop's ``LocalFileSystem``, or Hive's proxy
+        of it), else None. The root is the FileSystem's own qualified
+        path of the store, so a relative store path resolves against
+        the JVM's working dir, as Hadoop resolves it."""
+        fs = self.fs
+        if fs.getScheme() != "file":
+            return None
+        conf = fs.getConf()
+        umask = (self.spark._jvm.org.apache.hadoop.fs.permission
+                 .FsPermission.getUMask(conf).toShort())
+        return _LocalStore(
+            fs.makeQualified(self.Path(self.store)).toUri().getPath(),
+            umask, conf.getInt("file.bytes-per-checksum", 512))
+
+    @functools.cached_property
+    def _python_sql(self):
+        return self.spark._jvm.org.apache.spark.sql.api.python
+
+    @functools.cached_property
+    def _read_arrow(self):
+        return self._python_sql.PythonSQLUtils.readArrowStreamFromFile
+
+    @functools.cached_property
+    def _to_frame(self):
+        return self._python_sql.PythonSQLUtils.toDataFrame
+
+    def frame(self, table: pa.Table, schema: StructType) -> DataFrame:
+        """``table`` as an Arrow-backed local relation of ``schema``,
+        whose Arrow types it must already have: reading it runs no Spark
+        job (a parallelized list runs one, through Python workers). It
+        is ``spark.createDataFrame(table, schema)`` in two Py4J calls:
+        the batches go through ``SparkContext._serialize_to_jvm``, a
+        temp file or, with ``spark.io.encryption.enabled``, a socket,
+        and no session getter or schema parse is asked of the JVM."""
+        jbatches = self.spark.sparkContext._serialize_to_jvm(
+            table.to_batches(), ArrowStreamSerializer(), self._read_arrow,
+            lambda: self._python_sql.ArrowIteratorServer())
+        return DataFrame(self._to_frame(jbatches, schema.json(),
+                                        self.spark._jsparkSession),
+                         self.spark)
 
     def leaf_dirs(self, graphs, buckets: int | None) -> dict[str, str]:
         """Each graph's partition dir under a commit dir: ``gb=<bucket>``
-        in a bucketed store, else ``graph=<name>`` escaped by Spark's
-        own ``ExternalCatalogUtils.escapePathName``, the function the
-        writer's ``partitionBy`` names the dir with. A graph called
-        "G#1" lives in ``graph=G%231``; a raw-name path would not exist
-        and read as empty."""
+        in a bucketed store, else ``graph=<name>`` escaped as the Spark
+        writer's ``partitionBy`` escapes it (:func:`_escape_path_name`);
+        a raw-name path would not exist and read as empty."""
         if buckets:
             return {g: f"gb={metastore.graph_bucket(g, buckets)}"
                     for g in graphs}
-        return {g: f"graph={self._escape(g)}" for g in graphs}
+        return {g: f"graph={_escape_path_name(g)}" for g in graphs}
 
 
-def _empty_frame(spark: SparkSession, ddl: str) -> DataFrame:
-    """An empty frame of DDL schema ``ddl`` as an Arrow-backed local
-    relation: reading it runs no Spark job (an empty parallelized list
-    runs one over every default partition). The Arrow schema comes from
-    the DDL, so map, decimal and nested property types keep working."""
+def _empty_frame(fs: _StoreFs, ddl: str) -> DataFrame:
+    """An empty frame of DDL schema ``ddl`` (:meth:`_StoreFs.frame`).
+    The Arrow schema comes from the DDL, so map, decimal and nested
+    property types keep working."""
     schema = StructType.fromDDL(ddl)
-    return spark.createDataFrame(to_arrow_schema(schema).empty_table(),
-                                 schema)
+    return fs.frame(to_arrow_schema(schema).empty_table(), schema)
 
 
 def _path_scheme(path: str) -> str:
@@ -581,7 +708,7 @@ class GraphSnapshot:
         fs, Path = self._fs.fs, self._fs.Path
         paths = [p for p in paths if fs.exists(Path(p))]
         if not paths:
-            return _empty_frame(self.spark, schema)
+            return _empty_frame(self._fs, schema)
         return reader.parquet(*paths)
 
     def _leaves(self, cid: str, names: list[str]) -> list[str] | None:
@@ -698,7 +825,7 @@ class GraphSnapshot:
         parts = [self._commit_df(table, cid, row_schema, gs)
                  for cid, gs in sorted(by_cid.items())]
         if not parts:
-            return _empty_frame(self.spark, full_schema)
+            return _empty_frame(self._fs, full_schema)
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)
@@ -763,7 +890,7 @@ class GraphSnapshot:
                 self._commit_df("edges", cid, ddl, gs).select(*cols)
                 for cid, gs in sorted(base_by_cid.items())]
             base = (base_parts[0] if base_parts
-                    else _empty_frame(self.spark, full_schema))
+                    else _empty_frame(self._fs, full_schema))
             for p in base_parts[1:]:
                 base = base.unionByName(p)
             return base
@@ -775,7 +902,7 @@ class GraphSnapshot:
         base_parts = [_part(cid, pos, gs)
                       for (cid, pos), gs in sorted(base_parts_map.items())]
         base = (base_parts[0] if base_parts
-                else _empty_frame(self.spark, full_schema + ", __pos int"))
+                else _empty_frame(self._fs, full_schema + ", __pos int"))
         for p in base_parts[1:]:
             base = base.unionByName(p)
         dparts = [_part(cid, pos, gs)
@@ -885,7 +1012,7 @@ class GraphSnapshot:
             self._commit_df("vertices", cid, ddl, gs).select(*cols)
             for cid, gs in sorted(base_by_cid.items())]
         base = (base_parts[0] if base_parts
-                else _empty_frame(self.spark, full_schema))
+                else _empty_frame(self._fs, full_schema))
         for p in base_parts[1:]:
             base = base.unionByName(p)
         if not delta_parts:
@@ -926,10 +1053,13 @@ class GraphSnapshot:
         """``(cid, rows)`` for each commit of graph ``g``'s chain, in
         chain order, where ``rows`` are ``g``'s ``cols`` tuples of
         ``table`` in that commit: the read-side twin of
-        ``GraphEngine._driver_write``, with no Spark job. The leaf dirs
-        (:meth:`_StoreFs.leaf_dirs`) are listed and their files fetched
-        through the store's Hadoop FileSystem, so local, ``file:`` and
-        ``hdfs://`` stores take one path, and pyarrow decodes them.
+        ``GraphEngine._driver_write``, with no Spark job. The leaf dir
+        is named in Python (:meth:`_StoreFs.leaf_dirs`, which escapes
+        the graph name as Spark does, with no JVM call); the leaf dirs
+        are listed and their files fetched through the store's Hadoop
+        FileSystem, so local, ``file:`` and ``hdfs://`` stores take one
+        path and a local store's checksums are verified, and pyarrow
+        decodes them.
 
         None when ``g`` is outside the envelope. No byte is fetched when
         the lengths listStatus reports add up to more than
@@ -943,7 +1073,8 @@ class GraphSnapshot:
         The Spark read's rules hold: a leaf dir the commit never wrote
         reads as empty, decided by ``FileSystem.exists`` and never by
         os.path; files named ``_*`` or ``.*`` (``_SUCCESS``, checksum
-        sidecars) are skipped; columns resolve case-insensitively, as
+        sidecars) are skipped, by the listing's own filter
+        (:attr:`_StoreFs.visible`); columns resolve case-insensitively, as
         Spark's Parquet reader resolves them, and a column a file lacks
         (``w`` before weights existed) reads as None. No column mapping
         is applied: ``src``, ``dst``, ``w`` and ``vid`` are reserved
@@ -960,14 +1091,11 @@ class GraphSnapshot:
                                          f"c={cid}", leaf))
             if not fs.exists(leaf_dir):
                 continue
-            for status in fs.listStatus(leaf_dir):
-                path = status.getPath()
-                if path.getName().startswith(("_", ".")):
-                    continue
+            for status in fs.listStatus(leaf_dir, self._fs.visible):
                 size += status.getLen()
                 if size > LOCAL_READ_BYTES:
                     return None
-                files.append((pos, path))
+                files.append((pos, status.getPath()))
         rows: list[list[tuple]] = [[] for _ in chain]
         nrows = 0
         for pos, path in files:
@@ -1174,26 +1302,27 @@ class GraphEngine:
                       buckets: int | None) -> None:
         """Land one table's rows under ``c=<cid>`` from the driver, with
         no Spark job: pyarrow serializes each partition dir's rows into
-        one zstd Parquet file in memory (zstd is the session's codec),
-        and the bytes go out through the store's Hadoop FileSystem, the
-        one ``_read_or_empty`` reads through, so local, ``file:`` and
-        ``hdfs://`` stores take one path. The dirs are the ones
-        :meth:`_store_write` names: ``graph=<name>`` escaped by Spark's
-        own escaper, or ``gb=<bucket>`` with ``graph`` kept as a data
-        column. ``c=<cid>`` is created even when ``rows`` is empty, so
-        a whole-dir read of the commit never takes the PATH_NOT_FOUND
-        fallback. No ``_SUCCESS`` marker is written: the manifest is
-        the commit record.
+        one zstd Parquet file in memory (zstd is the session's codec).
+        The dirs are the ones :meth:`_store_write` names:
+        ``graph=<name>`` escaped as Spark escapes it, or ``gb=<bucket>``
+        with ``graph`` kept as a data column. ``c=<cid>`` is created
+        even when ``rows`` is empty, so a whole-dir read of the commit
+        never takes the PATH_NOT_FOUND fallback. No ``_SUCCESS`` marker
+        is written: the manifest is the commit record.
 
         Like the Spark writer's overwrite mode, the write first deletes
         whatever ``c=<cid>`` holds: a replay under the commit id of a
         writer that died at the manifest CAS must replace that
         orphan's files whole, and not keep its partition dirs beside
-        its own."""
-        fs, Path = self._fs.fs, self._fs.Path
-        root = os.path.join(self.store, "data", table, f"c={cid}")
-        fs.delete(Path(root), True)
-        fs.mkdirs(Path(root))
+        its own. Each file is then created exclusively.
+
+        On Hadoop's local FileSystem the files land by Python file IO
+        (:meth:`_LocalStore.land`), with the modes and ``.crc``
+        sidecars Hadoop would give them, because Hadoop's own
+        ``create`` there starts a ``chmod`` process per file and dir.
+        Every other FileSystem (``hdfs://``, ``s3a://``, …) lands
+        through Hadoop's ``create``; reads go through Hadoop on every
+        FileSystem and check the sidecars."""
         names = rows.column("graph").to_pylist()
         leaf = self._fs.leaf_dirs(set(names), buckets)
         if not buckets:
@@ -1201,13 +1330,24 @@ class GraphEngine:
         parts: dict[str, list[int]] = {}
         for i, g in enumerate(names):
             parts.setdefault(leaf[g], []).append(i)
+        files = {}
         for name, idx in sorted(parts.items()):
             buf = pa.BufferOutputStream()
             pq.write_table(rows.take(idx), buf, compression="zstd")
-            out = fs.create(Path(os.path.join(
-                root, name, f"part-00000-{cid}.zstd.parquet")), False)
+            files[os.path.join(name, f"part-00000-{cid}.zstd.parquet")] = \
+                buf.getvalue().to_pybytes()
+        sub = os.path.join("data", table, f"c={cid}")
+        if self._fs.local is not None:
+            self._fs.local.land(sub, files)
+            return
+        fs, Path = self._fs.fs, self._fs.Path
+        root = os.path.join(self.store, sub)
+        fs.delete(Path(root), True)
+        fs.mkdirs(Path(root))
+        for rel, data in files.items():
+            out = fs.create(Path(os.path.join(root, rel)), False)
             try:
-                out.write(buf.getvalue().to_pybytes())
+                out.write(data)
             finally:
                 out.close()
 
@@ -2583,12 +2723,12 @@ class GraphEngine:
     # -- op 4: BFS level order -------------------------------------------
 
     def _int_frame(self, **cols: list[int]) -> DataFrame:
-        """Driver-side int columns as an Arrow-backed local relation:
-        collecting it runs no Spark job (a parallelized list would run
-        one, through Python workers)."""
-        table = pa.table({c: pa.array(v, pa.int32()) for c, v in cols.items()})
-        return self.spark.createDataFrame(
-            table, ", ".join(f"{c} int" for c in cols))
+        """Driver-side int columns, nullable as a DDL ``int`` is, as an
+        Arrow-backed local relation (:meth:`_StoreFs.frame`): collecting
+        it runs no Spark job."""
+        return self._fs.frame(
+            pa.table({c: pa.array(v, pa.int32()) for c, v in cols.items()}),
+            StructType([StructField(c, IntegerType()) for c in cols]))
 
     def bfs(self, name: str, start: int) -> DataFrame:
         """``(vertex, level)`` for every vertex reachable from
@@ -2624,7 +2764,7 @@ class GraphEngine:
         graphs = [g for g in snap.graphs() if name in (None, g)]
         out = run(snap, graphs) if graphs else None
         if out is None:
-            return _empty_frame(self.spark, ddl)
+            return _empty_frame(self._fs, ddl)
         return out.select(*[F.col(c).cast(f.dataType).alias(f.name) for c, f
                             in zip(out.columns, StructType.fromDDL(ddl))])
 

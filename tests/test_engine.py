@@ -1,6 +1,8 @@
 """Engine facade: reference ops 1-5 + A1 surface, end to end against a
-real Parquet store, with the reference's own fixture graphs as input
-(read as data from /root/reference — never as code)."""
+real Parquet store, with the reference's own fixture graphs as input:
+read as data from the reference tree, never as code, or rendered from
+their transcription in ``store_queries.FIXTURE_GRAPHS`` where that
+tree is absent."""
 
 import itertools
 import os
@@ -9,7 +11,9 @@ import time
 import pytest
 from pyspark.sql import functions as F
 
+from graphdatabase_spark import engine as engine_mod
 from graphdatabase_spark.engine import GraphEngine
+from graphdatabase_spark.operators import store_queries as sq
 from graphdatabase_spark.sources.tables import load_table
 
 from tests.oracle import dfs_leaves
@@ -62,9 +66,12 @@ CATALOG_CALLS = {
 
 
 def _fixture_text(name):
+    """The reference's fixture file ``name``, or, where the reference
+    tree is absent, the same matrix rendered from its cell-identical
+    transcription in ``store_queries.FIXTURE_GRAPHS``."""
     path = os.path.join(REF_FIXTURES, f"{name}.txt")
-    if not os.path.exists(path):
-        pytest.skip("reference fixture dir not present")
+    if not os.path.isdir(REF_FIXTURES):
+        return sq.matrix_text(name)
     with open(path) as f:
         return f.read()
 
@@ -371,18 +378,29 @@ def _fields(df):
             for f in df.schema.fields]
 
 
-def test_driver_results_keep_their_schema(spark, tmp_path):
+def test_driver_results_keep_their_schema(spark, tmp_path, monkeypatch):
     """``bfs``, ``dfs_leaves`` and ``reachable`` answer with the same
     schema, nullability included, on a hit, from a start vertex outside
     the graph and on the N = 0 graph; every empty-store catalog frame
-    is a local relation. None of them runs a Spark job."""
+    is a local relation. Each of them is one frame of the shared
+    builder (``_StoreFs.frame``), and none runs a Spark job."""
+    built = [0]
+    frame = engine_mod._StoreFs.frame
+
+    def counted(self, table, schema):
+        built[0] += 1
+        return frame(self, table, schema)
+
+    monkeypatch.setattr(engine_mod._StoreFs, "frame", counted)
     eng = GraphEngine(spark, str(tmp_path / "fresh"))
     sc = spark.sparkContext
     group = f"driver-results-{time.time_ns()}"
     for name, call in CATALOG_CALLS.items():
         sc.setJobGroup(group, group)
         try:
+            built[0] = 0
             out = call(eng)
+            assert built[0] == 1, name
             assert out.schema.simpleString() == CATALOG_SCHEMAS[name], name
             plan = out._jdf.queryExecution().analyzed()
             assert plan.getClass().getSimpleName() == "LocalRelation", name
@@ -399,7 +417,9 @@ def test_driver_results_keep_their_schema(spark, tmp_path):
             (("P", 1), ("P", 9), ("E", 1)), SINGLE_SCHEMAS):
         sc.setJobGroup(group, group)
         try:
+            built[0] = 0
             out = getattr(eng, method)(g, start)
+            assert built[0] == 1, (method, g, start)
             assert _fields(out) == SINGLE_SCHEMAS[method], (method, g, start)
             rows = sorted(map(tuple, out.collect()))
         finally:
