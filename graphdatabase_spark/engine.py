@@ -108,9 +108,10 @@ LOCAL_READ_BYTES = 16 * LOCAL_EDGE_ROWS
 
 # The characters Spark's ExternalCatalogUtils.escapePathName escapes in
 # a partition dir name, as %XX: the ASCII control characters but NUL,
-# DEL and "#%'*/:=?[\]^{ (on Windows also space, <, > and |).
+# DEL and "#%'*/:=?[\]^{, and on Windows also space, <, > and |.
 _PATH_ESCAPED = frozenset(
-    [*map(chr, range(1, 0x20)), *'"#%\'*/:=?\\\x7f{[]^'])
+    [*map(chr, range(1, 0x20)), *'"#%\'*/:=?\\\x7f{[]^',
+     *(" <>|" if os.name == "nt" else "")])
 
 
 def _escape_path_name(name: str) -> str:
@@ -173,9 +174,10 @@ class _LocalStore:
         self._mkdirs(root)
         n = self.bytes_per_sum
         for rel, data in files.items():
-            head, name = os.path.split(os.path.join(root, rel))
+            path = os.path.join(root, rel)
+            head, name = os.path.split(path)
             self._mkdirs(head)
-            self._write(os.path.join(head, name), data, exclusive=True)
+            self._write(path, data, exclusive=True)
             sums = (zlib.crc32(data[i:i + n]) for i in range(0, len(data), n))
             self._write(os.path.join(head, f".{name}.crc"),
                         b"crc\0" + struct.pack(">i", n)
