@@ -272,12 +272,18 @@ class _StoreFs:
         return {g: f"graph={_escape_path_name(g)}" for g in graphs}
 
 
-def _empty_frame(fs: _StoreFs, ddl: str) -> DataFrame:
-    """An empty frame of DDL schema ``ddl`` (:meth:`_StoreFs.frame`).
-    The Arrow schema comes from the DDL, so map, decimal and nested
-    property types keep working."""
+def _local_frame(fs: _StoreFs, ddl: str, rows=()) -> DataFrame:
+    """Driver ``rows`` (tuples in column order; none for an empty
+    frame) as a local relation of DDL schema ``ddl``
+    (:meth:`_StoreFs.frame`): reading it runs no Python-worker task, as
+    a parallelized list does. The Arrow schema comes from the DDL, so
+    map, decimal and nested property types keep working."""
     schema = StructType.fromDDL(ddl)
-    return fs.frame(to_arrow_schema(schema).empty_table(), schema)
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) or [()] * len(arrow)
+    return fs.frame(pa.Table.from_arrays(
+        [pa.array(c, f.type) for c, f in zip(cols, arrow)], schema=arrow),
+        schema)
 
 
 def _path_scheme(path: str) -> str:
@@ -389,7 +395,9 @@ class _PackedIds:
                 f"or partition the catalog")
         self.graphs = list(graphs)
         self.index = spark.createDataFrame(
-            list(enumerate(graphs)), "gidx long, graph string")
+            pa.table({"gidx": pa.array(range(len(graphs)), pa.int64()),
+                      "graph": pa.array(self.graphs, pa.string())}),
+            "gidx long, graph string")
 
     @classmethod
     def of(cls, snap: GraphSnapshot, graphs: list[str]) -> _PackedIds:
@@ -710,7 +718,7 @@ class GraphSnapshot:
         fs, Path = self._fs.fs, self._fs.Path
         paths = [p for p in paths if fs.exists(Path(p))]
         if not paths:
-            return _empty_frame(self._fs, schema)
+            return _local_frame(self._fs, schema)
         return reader.parquet(*paths)
 
     def _leaves(self, cid: str, names: list[str]) -> list[str] | None:
@@ -786,8 +794,8 @@ class GraphSnapshot:
                 df = df.filter(F.col("gb").isin(gbs))
         if len(names) <= 256:
             return df.filter(F.col("graph").isin(names))
-        names_df = self.spark.createDataFrame(
-            [(g,) for g in names], "graph string")
+        names_df = _local_frame(self._fs, "graph string",
+                                [(g,) for g in names])
         return df.join(F.broadcast(names_df), "graph", "left_semi")
 
     def _table(self, table: str, row_schema: str,
@@ -827,7 +835,7 @@ class GraphSnapshot:
         parts = [self._commit_df(table, cid, row_schema, gs)
                  for cid, gs in sorted(by_cid.items())]
         if not parts:
-            return _empty_frame(self._fs, full_schema)
+            return _local_frame(self._fs, full_schema)
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)
@@ -892,7 +900,7 @@ class GraphSnapshot:
                 self._commit_df("edges", cid, ddl, gs).select(*cols)
                 for cid, gs in sorted(base_by_cid.items())]
             base = (base_parts[0] if base_parts
-                    else _empty_frame(self._fs, full_schema))
+                    else _local_frame(self._fs, full_schema))
             for p in base_parts[1:]:
                 base = base.unionByName(p)
             return base
@@ -904,7 +912,7 @@ class GraphSnapshot:
         base_parts = [_part(cid, pos, gs)
                       for (cid, pos), gs in sorted(base_parts_map.items())]
         base = (base_parts[0] if base_parts
-                else _empty_frame(self._fs, full_schema + ", __pos int"))
+                else _local_frame(self._fs, full_schema + ", __pos int"))
         for p in base_parts[1:]:
             base = base.unionByName(p)
         dparts = [_part(cid, pos, gs)
@@ -1014,7 +1022,7 @@ class GraphSnapshot:
             self._commit_df("vertices", cid, ddl, gs).select(*cols)
             for cid, gs in sorted(base_by_cid.items())]
         base = (base_parts[0] if base_parts
-                else _empty_frame(self._fs, full_schema))
+                else _local_frame(self._fs, full_schema))
         for p in base_parts[1:]:
             base = base.unionByName(p)
         if not delta_parts:
@@ -2530,8 +2538,9 @@ class GraphEngine:
                 rows = sorted(ex.map(fetch, names))
         else:
             rows = [fetch(i) for i in names]
-        return self.spark.createDataFrame(
-            rows, "seq long, commit string, n_graphs int, ts double")
+        return _local_frame(
+            self._fs, "seq long, commit string, n_graphs int, ts double",
+            rows)
 
     def seq_at(self, ts: float) -> int:
         """The newest RETAINED manifest seq whose commit timestamp is
@@ -2590,9 +2599,9 @@ class GraphEngine:
                  sum(c in ed for c in chain))
                 for g, ptr in m.get("graphs", {}).items()
                 for chain in [_cids(ptr)]]
-        return self.spark.createDataFrame(
-            rows, "graph string, chain_len int, n_vdeltas int, "
-                  "n_edeltas int")
+        return _local_frame(
+            self._fs, "graph string, chain_len int, n_vdeltas int, "
+                      "n_edeltas int", rows)
 
     def diff(self, seq_old: int, seq_new: int | None = None) -> DataFrame:
         """Row-level changes between two retained snapshots — the
@@ -2766,7 +2775,7 @@ class GraphEngine:
         graphs = [g for g in snap.graphs() if name in (None, g)]
         out = run(snap, graphs) if graphs else None
         if out is None:
-            return _empty_frame(self._fs, ddl)
+            return _local_frame(self._fs, ddl)
         return out.select(*[F.col(c).cast(f.dataType).alias(f.name) for c, f
                             in zip(out.columns, StructType.fromDDL(ddl))])
 

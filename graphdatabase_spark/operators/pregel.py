@@ -41,6 +41,7 @@ import contextvars
 from collections.abc import Sequence
 from contextlib import contextmanager
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -178,7 +179,8 @@ def bfs_levels(edges: DataFrame, starts, keys: Sequence[str] = (),
         .repartition(*keys, "src").persist())
     frontier = (starts.select(*keys, F.col("vid").cast("long")) if keys
                 else edges.sparkSession.createDataFrame(
-                    [(int(v),) for v in starts], "vid long"))
+                    pa.table({"vid": pa.array([int(v) for v in starts],
+                                              pa.int64())}), "vid long"))
     frontier = frontier.distinct().transform(_ckpt)
     frontiers: list[DataFrame] = [frontier.withColumn("level", F.lit(0))]
     visited = frontier
@@ -235,8 +237,11 @@ def sssp_weighted(edges: DataFrame, start_vids: list[int],
         e = edges.select(F.col("src").cast("long"), F.col("dst").cast("long"),
                          F.col("weight").cast("double"))
         e = e.repartition("src").persist()
+    vids = sorted({int(v) for v in start_vids})
     dist = spark.createDataFrame(
-        [(v, 0.0) for v in sorted({int(v) for v in start_vids})], "vid long, dist double")
+        pa.table({"vid": pa.array(vids, pa.int64()),
+                  "dist": pa.array([0.0] * len(vids), pa.float64())}),
+        "vid long, dist double")
     dist = dist.transform(_ckpt)
     active = dist
 

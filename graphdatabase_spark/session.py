@@ -12,7 +12,10 @@ on local[N]:
 - shuffle partition count from the environment so the same code runs
   local[32] (32 partitions) and on a 1000-executor cluster (set it to
   2-3x total cores, or rely on AQE coalescing from a high initial
-  value).
+  value);
+- on a ``local[N]`` master, Python workers forked from
+  ``graphdatabase_spark._daemon``: pyspark's daemon without the re-read
+  of ``pyspark.zip``'s directory that every task otherwise pays.
 """
 
 from __future__ import annotations
@@ -20,6 +23,10 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+# The package's root: a local session's Python workers find
+# ``graphdatabase_spark._daemon`` here, whatever the driver's working dir.
+_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 DEFAULT_CONF: dict[str, str] = {
     # local[N] runs driver+executors in ONE JVM whose default heap is
@@ -64,6 +71,28 @@ DEFAULT_CONF: dict[str, str] = {
 }
 
 
+def session_conf(master: str,
+                 extra_conf: dict[str, str] | None = None) -> dict[str, str]:
+    """The session settings for ``master``: :data:`DEFAULT_CONF`, then
+    ``extra_conf``, then the local worker daemon."""
+    conf = dict(DEFAULT_CONF)
+    if extra_conf:
+        conf.update(extra_conf)
+    if master.split("[")[0] == "local":
+        # Every Python-worker task starts with importlib.invalidate_caches(),
+        # which under pyspark's own daemon re-reads pyspark.zip's whole
+        # directory (0.1-0.2 s of CPU per task); this daemon skips the
+        # re-read while the archive is unchanged (see _daemon.py). Spark
+        # puts the executor PYTHONPATH after its own zips. Cluster masters
+        # keep pyspark's daemon: there the package may reach executors
+        # only through addPyFile, after the daemon has started.
+        conf["spark.python.daemon.module"] = "graphdatabase_spark._daemon"
+        path = conf.get("spark.executorEnv.PYTHONPATH")
+        conf["spark.executorEnv.PYTHONPATH"] = os.pathsep.join(
+            p for p in (path, _ROOT) if p)
+    return conf
+
+
 def get_spark(app_name: str = "graphdatabase-spark", master: str | None = None,
               extra_conf: dict[str, str] | None = None) -> SparkSession:
     """Build (or reuse) a SparkSession with the engine's defaults."""
@@ -71,9 +100,6 @@ def get_spark(app_name: str = "graphdatabase-spark", master: str | None = None,
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
         master = f"local[{cpus}]"
     builder = SparkSession.builder.appName(app_name).master(master)
-    conf = dict(DEFAULT_CONF)
-    if extra_conf:
-        conf.update(extra_conf)
-    for k, v in conf.items():
+    for k, v in session_conf(master, extra_conf).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()

@@ -434,6 +434,74 @@ def test_driver_results_keep_their_schema(spark, tmp_path, monkeypatch):
     assert sc.statusTracker().getJobIdsForGroup(group) == []
 
 
+def _leaves(df):
+    """``(class name, schema)`` of each leaf of ``df``'s analyzed plan."""
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+    return [(leaves.apply(i).getClass().getSimpleName(),
+             leaves.apply(i).schema().simpleString())
+            for i in range(leaves.size())]
+
+
+def test_driver_built_frames_are_local_relations(spark, tmp_path,
+                                                 monkeypatch):
+    """Every frame the program builds from driver rows is a local
+    relation of its exact schema, nullability included: reading one
+    runs no Python-worker task, as a parallelized list does. They are
+    the packed-id index, the graph filter's names (over 256),
+    ``history()``, ``chains()``, the keyless BFS frontier and the SSSP
+    start distances."""
+    from pyspark.sql.types import StructType
+
+    from graphdatabase_spark.engine import _PackedIds
+    from graphdatabase_spark.operators import pregel
+
+    def local(df, ddl):
+        assert df._jdf.queryExecution().analyzed().getClass() \
+            .getSimpleName() == "LocalRelation", ddl
+        assert df.schema == StructType.fromDDL(ddl), ddl
+
+    index = _PackedIds(spark, ["a", "b"], 9).index
+    local(index, "gidx long, graph string")
+    assert index.collect() == [(0, "a"), (1, "b")]
+
+    eng = GraphEngine(spark, str(tmp_path / "store"))
+    eng.add_graph("P", "2\n0 1\n0 0\n")
+    eng.add_graph("Q", "2\n0 0\n1 0\n")
+    local(eng.history(), "seq long, commit string, n_graphs int, ts double")
+    assert [r["n_graphs"] for r in eng.history().collect()] == [1, 2]
+    local(eng.chains(), "graph string, chain_len int, n_vdeltas int, "
+                        "n_edeltas int")
+    assert sorted(eng.chains().collect()) == [("P", 1, 0, 0), ("Q", 1, 0, 0)]
+
+    snap = eng.snapshot()
+    names = ["P", "Q"] + [f"absent{i}" for i in range(300)]
+    kept = snap._graph_filter(snap.edges(), names)
+    leaves = _leaves(kept)
+    assert ("LocalRelation", "struct<graph:string>") in leaves, leaves
+    assert "LogicalRDD" not in {c for c, _ in leaves}, leaves
+    assert sorted((r["graph"], r["src"], r["dst"])
+                  for r in kept.collect()) == [("P", 1, 2), ("Q", 2, 1)]
+
+    checkpointed = []
+    ckpt = pregel._ckpt
+
+    def first_checkpoint(df):
+        checkpointed.append(df)
+        return ckpt(df)
+
+    monkeypatch.setattr(pregel, "_ckpt", first_checkpoint)
+    edges = spark.createDataFrame(
+        [(1, 2, 1.0)], "src long, dst long, weight double")
+    assert sorted(pregel.bfs_levels(edges, [1]).collect()) == [(1, 0), (2, 1)]
+    # the frontier checkpoints as starts.distinct()
+    assert _leaves(checkpointed[0]) == [("LocalRelation", "struct<vid:bigint>")]
+    assert checkpointed[0].schema == StructType.fromDDL("vid long")
+    checkpointed.clear()
+    assert sorted(pregel.sssp_weighted(edges, [1]).collect()) == [
+        (1, 0.0), (2, 1.0)]
+    local(checkpointed[0], "vid long, dist double")
+
+
 def test_triangle_family_leaves_no_tracked_cache(engine):
     """Without a cache key the triangle-family kernels release their
     own temporaries: repeated engine calls leave the cache registry as
