@@ -81,7 +81,7 @@ def session_conf(master: str,
     if master.split("[")[0] == "local":
         # Every Python-worker task starts with importlib.invalidate_caches(),
         # which under pyspark's own daemon re-reads pyspark.zip's whole
-        # directory (0.1-0.2 s of CPU per task); this daemon skips the
+        # directory (about 0.1 s of CPU per task); this daemon skips the
         # re-read while the archive is unchanged (see _daemon.py). Spark
         # puts the executor PYTHONPATH after its own zips. Cluster masters
         # keep pyspark's daemon: there the package may reach executors
